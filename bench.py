@@ -694,12 +694,7 @@ def main() -> None:
                 # the persisted iterative builders measured cache
                 # reuse, not per-run work). The clear sits OUTSIDE the
                 # timed region; the JVM stays warm.
-                # SPARK_GRAFT_LEGACY_WARM=1 restores the pre-r16
-                # cache-carryover warm methodology — kept ONLY so the
-                # old numbers stay reproducible for cross-round
-                # comparison (OPTIMIZATION_r16.md reports both).
-                if os.environ.get("SPARK_GRAFT_LEGACY_WARM") != "1":
-                    spark.catalog.clearCache()
+                spark.catalog.clearCache()
             cold[name] = per_run[0]
             timings[name] = min(per_run[1:])
             # warm-pair spread: a same-session repeat differing >30%

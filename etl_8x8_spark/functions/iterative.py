@@ -11,43 +11,32 @@ round, and on a long run with executor churn a lost cached block in
 round N recomputes through every prior round. At the small fixed round
 counts shipped here (3–5) that is a non-issue, but a production loop
 with many rounds should truncate lineage periodically:
-``SPARK_GRAFT_CHECKPOINT_EVERY`` (default 8) makes every Nth round a
-lazy ``localCheckpoint`` — plan truncated to the checkpointed RDD, no
-extra job (it materializes with the round's own first action). Set it
-to 0 to disable checkpointing entirely (pure persist).
+``CHECKPOINT_EVERY`` (8) makes every Nth round a lazy
+``localCheckpoint`` — plan truncated to the checkpointed RDD, no extra
+job (it materializes with the round's own first action). 0 would
+disable checkpointing entirely (pure persist).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 #: Checkpoint cadence for iterative loops: every Nth round is a lazy
-#: localCheckpoint instead of a plain persist. The default 8 exceeds
-#: every shipped round count (3–5), so the hatch only engages on
-#: longer production loops or when lowered via the env var.
-DEFAULT_CHECKPOINT_EVERY = 8
-
-
-def checkpoint_every() -> int:
-    try:
-        return int(os.environ.get("SPARK_GRAFT_CHECKPOINT_EVERY", ""))
-    except ValueError:
-        return DEFAULT_CHECKPOINT_EVERY
+#: localCheckpoint instead of a plain persist. 8 exceeds every shipped
+#: round count (3–5), so the hatch only engages on longer loops.
+CHECKPOINT_EVERY = 8
 
 
 def bound_round_lineage(df: DataFrame, rnd: int) -> DataFrame:
     """Bound a loop relation's lineage at 1-based round ``rnd``.
 
-    Rounds that hit the ``SPARK_GRAFT_CHECKPOINT_EVERY`` cadence are
+    Rounds that hit the ``CHECKPOINT_EVERY`` cadence are
     lazily localCheckpointed (lineage truncated; materializes with the
     round's own first action — reliability of that intermediate is not
     load-bearing, the loop re-runs from the source on loss); every
     other round is a lazy ``persist()`` (the r15 shape). Results are
     identical either way — only the plan boundary moves.
     """
-    every = checkpoint_every()
-    if every > 0 and rnd > 0 and rnd % every == 0:
+    if CHECKPOINT_EVERY > 0 and rnd > 0 and rnd % CHECKPOINT_EVERY == 0:
         return df.localCheckpoint(eager=False)
     return df.persist()

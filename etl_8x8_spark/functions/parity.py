@@ -69,16 +69,3 @@ def q6(col: Column | str, alias: str | None = None, k: int = 6) -> Column:
         F.isnan(cd) | (F.abs(cd) == float("inf")), cd
     ).otherwise(F.floor(cd * (10**k) + 0.5).cast("long") / F.lit(float(10**k)))
     return e.alias(alias) if alias else e
-
-
-def oracle_q6(expr: str, alias: str | None = None, k: int = 6) -> str:
-    """DuckDB twin of :func:`q6` (floor is double-returning there, so
-    an explicit BIGINT cast keeps the arithmetic path identical; the
-    same non-finite passthrough guards the BIGINT cast, which raises
-    on NaN in DuckDB)."""
-    x = f"CAST(({expr}) AS DOUBLE)"
-    s = (
-        f"CASE WHEN isnan({x}) OR NOT isfinite({x}) THEN {x}"
-        f" ELSE CAST(floor({x} * 1e{k} + 0.5) AS BIGINT) / 1e{k} END"
-    )
-    return f"({s}) AS {alias}" if alias else f"({s})"

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_8x8_spark.registry import register
+from etl_8x8_spark.sources import txn_log
 from etl_8x8_spark.sources.readers import load_table, scratch_dir
 
 # residue classes that change between snapshots
@@ -245,7 +246,7 @@ def cdc_stream_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge-key BUCKET partitions under a transaction log (the
     sink_txn_log_commit protocol: immutable data files, state = the
     fold of an ordered log of adds/removes, each commit one atomic
-    ``os.rename``). Per batch: compact the delta by key (highest seq
+    ``txn_log`` publish). Per batch: compact the delta by key (highest seq
     wins), derive the TOUCHED buckets from the compacted keys (a
     bounded ≤77-row metadata collect), read ONLY the live files of
     touched buckets, anti-join the touched keys out, union the
@@ -266,9 +267,6 @@ def cdc_stream_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint + idempotent per-batch version names make redelivery
     safe.
     """
-    import json
-    import shutil
-
     from pyspark.sql import Window
 
     old = load_table(spark, sf_dir, "orders").select(
@@ -281,32 +279,14 @@ def cdc_stream_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = os.path.join(scratch_dir(), f"cdc_stream_{sf_tag}")
     in_dir = os.path.join(base, "in")
     data = os.path.join(base, "data")
-    log_dir = os.path.join(base, "_log")
     ckpt = os.path.join(base, "ckpt")
-    if os.path.exists(base):
-        shutil.rmtree(base)
-    os.makedirs(log_dir)
+    log_dir = txn_log.reset(base)
 
     def commit(adds: list, removes: list) -> None:
-        version = len(
-            [n for n in os.listdir(log_dir) if n.endswith(".json")]
-        )
-        tmp = os.path.join(log_dir, f"{version:05d}.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump({"adds": adds, "removes": removes}, f)
-        # the atomic pointer flip: visible iff the rename happened
-        os.rename(tmp, os.path.join(log_dir, f"{version:05d}.json"))
+        txn_log.append(log_dir, {"adds": adds, "removes": removes})
 
     def live_files() -> list[str]:
-        live: list[str] = []
-        for name in sorted(os.listdir(log_dir)):
-            if not name.endswith(".json"):
-                continue
-            rec = json.load(open(os.path.join(log_dir, name)))
-            for r in rec["removes"]:
-                live.remove(r)
-            live.extend(rec["adds"])
-        return live
+        return list(txn_log.live_adds(txn_log.records(log_dir)))
 
     def bucket_dirs(vdir: str) -> list[str]:
         vpath = os.path.join(data, vdir)

@@ -210,12 +210,6 @@ _JACCARD_THRESHOLD = 0.7
 # template skew in this data — max block 3 at sf0.01). This is
 # information a real corpus actually has, unlike a family id.
 _BLOCK_KEY_SQL = f"substr({_NORM_SQL}, 1, 32)"
-
-
-def _block_key() -> Column:
-    return F.substring(normalized(), 1, 32)
-
-
 _BLOCK_KEY_SQLX = f"substring({_NORM_SQLX}, 1, 32)"
 
 

@@ -593,14 +593,6 @@ def _sql_dist2(a: str, b: str) -> str:
     )
 
 
-def _dist2(a, b):
-    diff = F.zip_with(
-        a, b, lambda x, y: (x.cast("double") - y.cast("double"))
-        * (x.cast("double") - y.cast("double"))
-    )
-    return F.aggregate(diff, F.lit(0.0), lambda acc, v: acc + v)
-
-
 # K-means plumbing (r15 optimization round): centroids are BOUNDED
 # metadata (K×dim doubles), so each Lloyd round collects them to the
 # driver and embeds them as array literals in the next round's plan —

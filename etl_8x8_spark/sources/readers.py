@@ -20,6 +20,17 @@ from pyspark.sql import types as T
 
 from etl_8x8_spark.sources.schemas import TABLE_SCHEMAS
 
+_REPO_ROOT = os.path.dirname(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
+
+#: the confs every engine query depends on (see pin_session_confs)
+_PINNED_CONFS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.parser.escapedStringLiterals": "false",
+}
+
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
@@ -49,10 +60,15 @@ def pin_session_confs(spark: SparkSession) -> None:
       driver-supplied session with the legacy conf set would silently
       flip them to literal-backslash matches and diverge from the
       Column forms and the oracle.
+
+    Each conf is set only when its effective value differs. Setting
+    the deprecated ``escapedStringLiterals`` logs a WARN, and once it
+    is set explicitly (even to its default) every session clone Spark
+    makes (caching, streaming) logs it again.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
+    for key, value in _PINNED_CONFS.items():
+        if spark.conf.get(key) != value:
+            spark.conf.set(key, value)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -135,18 +151,10 @@ def read_json_lines(
     )
 
 
-def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    """Delimited ingest with an explicit schema (inference off)."""
-    return (
-        spark.read.schema(schema)
-        .option("header", "true")
-        .option("mode", "PERMISSIVE")
-        .csv(path)
-    )
-
-
 def scratch_dir() -> str:
     """Writable scratch area for sink round-trips and derived files."""
-    d = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
+    d = os.environ.get(
+        "SPARK_GRAFT_SCRATCH", os.path.join(_REPO_ROOT, ".scratch")
+    )
     os.makedirs(d, exist_ok=True)
     return d

@@ -19,6 +19,7 @@ from pyspark.sql import types as T
 
 from etl_8x8_spark.functions.parity import dsum, oracle_dsum
 from etl_8x8_spark.registry import register
+from etl_8x8_spark.sources import txn_log
 from etl_8x8_spark.sources.readers import (
     load_table,
     read_json_lines,
@@ -1462,10 +1463,10 @@ def sink_txn_log_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     rmtree+rename hazard LESSONS #44 records for cdc_stream_apply:
     data files are IMMUTABLE once written; table state is defined
     solely by an ordered log of commit records (adds + removes); and
-    each commit becomes visible via ONE atomic ``os.rename`` of its
-    log entry — a reader sees the table before or after a commit,
-    never in between, and a crash mid-commit leaves only an invisible
-    tmp file.
+    each commit becomes visible via ONE atomic create-if-absent link of
+    its log entry (``txn_log.commit``) — a reader sees the table before
+    or after a commit, never in between, and a crash mid-commit leaves
+    only an invisible tmp file.
 
     Three commits are replayed: (1) add file A (orders first half),
     (2) add file B (second half), (3) COMPACT-AND-DELETE — write file
@@ -1482,9 +1483,6 @@ def sink_txn_log_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     producer) and optimistic-concurrency version checks — same
     protocol skeleton.
     """
-    import json
-    import shutil
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
@@ -1495,20 +1493,12 @@ def sink_txn_log_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = os.path.join(
         scratch_dir(), f"txnlog_{_src_tag(sf_dir, 'orders')}"
     )
-    log_dir = os.path.join(base, "_log")
-    done = os.path.join(base, "_ALL_COMMITTED")
-    if not os.path.exists(done):
-        if os.path.exists(base):
-            shutil.rmtree(base)
-        os.makedirs(log_dir)
+    log_dir = txn_log.log_of(base)
+    if txn_log.needs_build(base):
 
         def commit(version: int, adds: list, removes: list) -> None:
             rec = {"adds": adds, "removes": removes}
-            tmp = os.path.join(log_dir, f"{version:05d}.json.tmp")
-            with open(tmp, "w") as f:
-                json.dump(rec, f)
-            # the atomic pointer flip: visible iff the rename happened
-            os.rename(tmp, os.path.join(log_dir, f"{version:05d}.json"))
+            txn_log.commit_or_raise(log_dir, version, rec)
 
         median = orders.approxQuantile("o_orderkey", [0.5], 0.0)[0]
         a_dir, b_dir, c_dir = (
@@ -1522,18 +1512,9 @@ def sink_txn_log_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderkey") % 10 != 0
         ).write.parquet(c_dir)
         commit(2, ["dataC"], ["dataA", "dataB"])
-        open(done, "w").close()
+        txn_log.mark_built(base)
 
-    live: list[str] = []
-    import json as _json
-
-    for name in sorted(os.listdir(log_dir)):
-        if not name.endswith(".json"):
-            continue
-        rec = _json.load(open(os.path.join(log_dir, name)))
-        for r in rec["removes"]:
-            live.remove(r)
-        live.extend(rec["adds"])
+    live = txn_log.live_adds(txn_log.records(log_dir))
     table = spark.read.parquet(*(os.path.join(base, d) for d in live))
     return (
         table.groupBy("o_orderpriority")
@@ -1585,9 +1566,6 @@ def scan_txn_log_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint compaction of the log itself beyond ~10^4 commits —
     same fold, memoized prefix.
     """
-    import json
-    import shutil
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
@@ -1598,19 +1576,12 @@ def scan_txn_log_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = os.path.join(
         scratch_dir(), f"txnlog_tt_{_src_tag(sf_dir, 'orders')}"
     )
-    log_dir = os.path.join(base, "_log")
-    done = os.path.join(base, "_ALL_COMMITTED")
-    if not os.path.exists(done):
-        if os.path.exists(base):
-            shutil.rmtree(base)
-        os.makedirs(log_dir)
+    log_dir = txn_log.log_of(base)
+    if txn_log.needs_build(base):
 
         def commit(version: int, adds: list, removes: list) -> None:
             rec = {"adds": adds, "removes": removes}
-            tmp = os.path.join(log_dir, f"{version:05d}.json.tmp")
-            with open(tmp, "w") as f:
-                json.dump(rec, f)
-            os.rename(tmp, os.path.join(log_dir, f"{version:05d}.json"))
+            txn_log.commit_or_raise(log_dir, version, rec)
 
         a_dir, b_dir, c_dir = (
             os.path.join(base, d) for d in ("dataA", "dataB", "dataC")
@@ -1623,21 +1594,11 @@ def scan_txn_log_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderkey") % 10 != 0
         ).write.parquet(c_dir)
         commit(2, ["dataC"], ["dataA", "dataB"])
-        open(done, "w").close()
+        txn_log.mark_built(base)
 
-    import json as _json
-
-    records = [
-        _json.load(open(os.path.join(log_dir, name)))
-        for name in sorted(os.listdir(log_dir))
-        if name.endswith(".json")
-    ]
     snapshots = []
-    live: list[str] = []
-    for version, rec in enumerate(records):
-        for r in rec["removes"]:
-            live.remove(r)
-        live.extend(rec["adds"])
+    for version in txn_log.versions(log_dir):
+        live = txn_log.live_adds(txn_log.records(log_dir, upto=version))
         snap = spark.read.parquet(
             *(os.path.join(base, d) for d in live)
         ).agg(
@@ -1696,7 +1657,7 @@ def sink_txn_log_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     key % 20 = 0 ⊆ key % 4 = 0, so exactly ONE of the four files is
     touched; (b) rewrites only that file (matched rows updated, rest
     carried); (c) writes the inserts as a fresh file; (d) commits
-    adds+removes in ONE atomic log-entry rename, so a reader sees the
+    adds+removes in ONE atomic log-entry publish, so a reader sees the
     table entirely before or entirely after the MERGE. Files 1-3 are
     never rewritten and never even read by the merge.
 
@@ -1715,13 +1676,10 @@ def sink_txn_log_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     (here 1 of 4; in production min/max-sorted layout gives
     O(changed partitions)), the untouched 99% of the table is carried
     by reference in the metadata layer, and commit visibility is one
-    rename regardless of data volume. The pruning decision itself is
+    link regardless of data volume. The pruning decision itself is
     metadata-sized (a distinct over the change-set's 4 possible cells,
     collected to the driver like every manifest read).
     """
-    import json
-    import shutil
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -1734,20 +1692,12 @@ def sink_txn_log_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = os.path.join(
         scratch_dir(), f"txnmerge_{_src_tag(sf_dir, 'orders')}"
     )
-    log_dir = os.path.join(base, "_log")
-    done = os.path.join(base, "_ALL_COMMITTED")
-    if not os.path.exists(done):
-        if os.path.exists(base):
-            shutil.rmtree(base)
-        os.makedirs(log_dir)
+    log_dir = txn_log.log_of(base)
+    if txn_log.needs_build(base):
 
         def commit(version: int, adds: list, removes: list) -> None:
             rec = {"adds": adds, "removes": removes}
-            tmp = os.path.join(log_dir, f"{version:05d}.json.tmp")
-            with open(tmp, "w") as f:
-                json.dump(rec, f)
-            # atomic pointer flip: the commit exists iff the rename did
-            os.rename(tmp, os.path.join(log_dir, f"{version:05d}.json"))
+            txn_log.commit_or_raise(log_dir, version, rec)
 
         # commits 0-3: the base table as four immutable mod-4 files,
         # each commit carrying the file's key-population stat
@@ -1780,15 +1730,7 @@ def sink_txn_log_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
             .collect()
         }
-        live_files: list[dict] = []
-        for name in sorted(os.listdir(log_dir)):
-            if name.endswith(".json"):
-                rec = json.load(open(os.path.join(log_dir, name)))
-                paths_to_remove = set(rec["removes"])
-                live_files = [
-                    f for f in live_files if f["path"] not in paths_to_remove
-                ]
-                live_files.extend(rec["adds"])
+        live_files = txn_log.live_adds(txn_log.records(log_dir)).values()
         touched = [f for f in live_files if f["mod4"] in touched_mods]
         adds, removes = [], []
         u = updates.select(
@@ -1821,15 +1763,9 @@ def sink_txn_log_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         inserts.write.parquet(os.path.join(base, "dataIns"))
         adds.append({"path": "dataIns", "mod4": None})
         commit(4, adds, removes)
-        open(done, "w").close()
+        txn_log.mark_built(base)
 
-    live: list[str] = []
-    for name in sorted(os.listdir(log_dir)):
-        if name.endswith(".json"):
-            rec = json.load(open(os.path.join(log_dir, name)))
-            paths_to_remove = set(rec["removes"])
-            live = [p for p in live if p not in paths_to_remove]
-            live.extend(f["path"] for f in rec["adds"])
+    live = txn_log.live_adds(txn_log.records(log_dir))
     table = spark.read.option("mergeSchema", "true").parquet(
         *(os.path.join(base, p) for p in live)
     )
@@ -1873,7 +1809,7 @@ def scan_txn_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint + replays only the commit SUFFIX after it — planning
     cost O(commits since checkpoint), not O(log length). Exactly
     Delta's `_last_checkpoint` / Iceberg's snapshot manifest-list
-    mechanism, on the same plain-file + atomic-rename substrate.
+    mechanism, on the same plain-file + atomic-publish substrate.
 
     The replayed history: six mod-6 slices of orders committed one per
     version (v0-v5), a checkpoint written after v4, then two partial
@@ -1885,14 +1821,11 @@ def scan_txn_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint that froze the wrong live set, or a suffix replay that
     missed a remove, hashes differently.
 
-    Scale: checkpoints are metadata-sized (file names), written with
-    the same tmp+rename atomicity as commits; a production format
+    Scale: checkpoints are metadata-sized (file names), published with
+    the same tmp+link atomicity as commits; a production format
     stores them as parquet with per-file stats (sink_manifest_stats)
     — same fold, same suffix contract.
     """
-    import json
-    import shutil
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
@@ -1903,23 +1836,12 @@ def scan_txn_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = os.path.join(
         scratch_dir(), f"txnckpt_{_src_tag(sf_dir, 'orders')}"
     )
-    log_dir = os.path.join(base, "_log")
-    done = os.path.join(base, "_ALL_COMMITTED")
-    if not os.path.exists(done):
-        if os.path.exists(base):
-            shutil.rmtree(base)
-        os.makedirs(log_dir)
-
-        def _atomic_write(name: str, payload: dict) -> None:
-            tmp = os.path.join(log_dir, name + ".tmp")
-            with open(tmp, "w") as f:
-                json.dump(payload, f)
-            os.rename(tmp, os.path.join(log_dir, name))
+    log_dir = txn_log.log_of(base)
+    if txn_log.needs_build(base):
 
         def commit(version: int, adds: list, removes: list) -> None:
-            _atomic_write(
-                f"{version:05d}.json", {"adds": adds, "removes": removes}
-            )
+            rec = {"adds": adds, "removes": removes}
+            txn_log.commit_or_raise(log_dir, version, rec)
 
         live: list[str] = []
         for k in range(6):
@@ -1932,9 +1854,9 @@ def scan_txn_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             if k == 4:
                 # checkpoint: the FOLDED live set as of v4, so readers
                 # never re-parse v0-v4 (atomic like any commit)
-                _atomic_write(
-                    "00004.checkpoint.json",
-                    {"version": 4, "live": list(live)},
+                txn_log.commit_or_raise(
+                    log_dir, 4, {"version": 4, "live": list(live)},
+                    kind="checkpoint",
                 )
         keep = F.col("o_orderkey") % 7 != 0
         spark.read.parquet(
@@ -1945,22 +1867,15 @@ def scan_txn_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             *(os.path.join(base, f"slice{k}") for k in range(3, 6))
         ).filter(keep).write.parquet(os.path.join(base, "compactB"))
         commit(7, ["compactB"], ["slice3", "slice4", "slice5"])
-        open(done, "w").close()
+        txn_log.mark_built(base)
 
-    # reader: latest checkpoint + commit SUFFIX only
-    names = sorted(os.listdir(log_dir))
-    ckpts = [n for n in names if n.endswith(".checkpoint.json")]
-    latest_ckpt = json.load(open(os.path.join(log_dir, ckpts[-1])))
-    live = list(latest_ckpt["live"])
-    for name in names:
-        if not name.endswith(".json") or name.endswith(".checkpoint.json"):
-            continue
-        if int(name.split(".")[0]) <= latest_ckpt["version"]:
-            continue  # folded into the checkpoint — never parsed
-        rec = json.load(open(os.path.join(log_dir, name)))
-        for r in rec["removes"]:
-            live.remove(r)
-        live.extend(rec["adds"])
+    # reader: latest checkpoint + commit SUFFIX only (commits up to the
+    # checkpoint are folded into it — never parsed)
+    ckpt_v = txn_log.versions(log_dir, kind="checkpoint")[-1]
+    ckpt = txn_log.read(log_dir, ckpt_v, kind="checkpoint")
+    live = txn_log.live_adds(
+        txn_log.records(log_dir, after=ckpt["version"]), ckpt["live"]
+    )
     table = spark.read.parquet(*(os.path.join(base, p) for p in live))
     return (
         table.groupBy("o_orderpriority")
@@ -2014,7 +1929,6 @@ def sink_txn_log_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan_txn_log_checkpoint) are never vacuumed because they ARE the
     log.
     """
-    import json
     import shutil
 
     orders = load_table(spark, sf_dir, "orders").select(
@@ -2027,23 +1941,12 @@ def sink_txn_log_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = os.path.join(
         scratch_dir(), f"txnvac_{_src_tag(sf_dir, 'orders')}"
     )
-    log_dir = os.path.join(base, "_log")
-    done = os.path.join(base, "_ALL_COMMITTED")
-    if not os.path.exists(done):
-        if os.path.exists(base):
-            shutil.rmtree(base)
-        os.makedirs(log_dir)
-
-        def _atomic_write(name: str, payload: dict) -> None:
-            tmp = os.path.join(log_dir, name + ".tmp")
-            with open(tmp, "w") as f:
-                json.dump(payload, f)
-            os.rename(tmp, os.path.join(log_dir, name))
+    log_dir = txn_log.log_of(base)
+    if txn_log.needs_build(base):
 
         def commit(version: int, adds: list, removes: list) -> None:
-            _atomic_write(
-                f"{version:05d}.json", {"adds": adds, "removes": removes}
-            )
+            rec = {"adds": adds, "removes": removes}
+            txn_log.commit_or_raise(log_dir, version, rec)
 
         orders.filter(F.col("o_orderkey") % 2 == 0).write.parquet(
             os.path.join(base, "sliceA")
@@ -2062,33 +1965,19 @@ def sink_txn_log_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         # VACUUM (retention = latest snapshot only): referenced = the
         # latest live set; everything else ever added is garbage
-        ever_added: list[str] = []
-        live: list[str] = []
-        for name in sorted(os.listdir(log_dir)):
-            if not name.endswith(".json"):
-                continue
-            rec = json.load(open(os.path.join(log_dir, name)))
-            for r in rec["removes"]:
-                live.remove(r)
-            live.extend(rec["adds"])
-            ever_added.extend(rec["adds"])
-        garbage = sorted(set(ever_added) - set(live))
+        recs = list(txn_log.records(log_dir))
+        ever_added = {a for _, rec in recs for a in rec["adds"]}
+        garbage = sorted(ever_added - set(txn_log.live_adds(recs)))
         for g in garbage:
             shutil.rmtree(os.path.join(base, g))
         # audit record, NOT a commit: logical state is unchanged
-        _atomic_write(
-            "00002.vacuum.json", {"retained_version": 2, "deleted": garbage}
+        txn_log.commit_or_raise(
+            log_dir, 2, {"retained_version": 2, "deleted": garbage},
+            kind="vacuum",
         )
-        open(done, "w").close()
+        txn_log.mark_built(base)
 
-    live = []
-    for name in sorted(os.listdir(log_dir)):
-        if not name.endswith(".json") or name.endswith(".vacuum.json"):
-            continue
-        rec = json.load(open(os.path.join(log_dir, name)))
-        for r in rec["removes"]:
-            live.remove(r)
-        live.extend(rec["adds"])
+    live = txn_log.live_adds(txn_log.records(log_dir))
     table = spark.read.parquet(*(os.path.join(base, p) for p in live))
     return (
         table.groupBy("o_orderpriority")
@@ -2243,11 +2132,11 @@ def sink_txn_log_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
     table-format protocol (commit → time travel → checkpoint → MERGE →
     VACUUM → now multi-writer): three writers race commits against the
     same log, and the version slot is a compare-and-swap. The CAS
-    primitive is ``os.link`` (create-if-absent hard link of the staged
-    record into ``NNNNN.json``) — unlike ``os.rename``, which POSIX
-    defines to silently REPLACE an existing target, link fails with
-    EEXIST when the slot is taken, which is exactly Delta's
-    rename-without-overwrite commit check.
+    primitive is ``txn_log.commit``: ``os.link``, a create-if-absent
+    hard link of the staged record into ``NNNNN.json`` — unlike
+    ``os.rename``, which POSIX defines to silently REPLACE an existing
+    target, link fails with EEXIST when the slot is taken, which is
+    exactly Delta's rename-without-overwrite commit check.
 
     The race, orchestrated deterministically (all three writers read
     the v1 snapshot, then commit in A → B → C order):
@@ -2292,59 +2181,25 @@ def sink_txn_log_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = os.path.join(
         scratch_dir(), f"txnconflict_{_src_tag(sf_dir, 'orders')}"
     )
-    log_dir = os.path.join(base, "_log")
-    done = os.path.join(base, "_ALL_COMMITTED")
-    if not os.path.exists(done):
-        if os.path.exists(base):
-            shutil.rmtree(base)
-        os.makedirs(log_dir)
+    log_dir = txn_log.log_of(base)
+    if txn_log.needs_build(base):
         audit: dict[str, dict] = {}
 
-        def cas_commit(writer: str, version: int, rec: dict) -> bool:
-            """True iff this writer won the version slot."""
-            tmp = os.path.join(
-                log_dir, f"{version:05d}.json.tmp.{writer}"
-            )
-            with open(tmp, "w") as f:
-                json.dump(rec, f)
-            try:
-                # atomic create-if-absent: the CAS. rename() would
-                # silently replace the winner's record — the lost-
-                # update bug this operator exists to rule out.
-                os.link(tmp, os.path.join(log_dir, f"{version:05d}.json"))
-                won = True
-            except FileExistsError:
-                won = False
-            os.unlink(tmp)
-            return won
-
         def fold_log() -> tuple[list[str], int]:
-            live: list[str] = []
-            version = -1
-            for name in sorted(os.listdir(log_dir)):
-                if not name.endswith(".json"):
-                    continue
-                rec = json.load(open(os.path.join(log_dir, name)))
-                for r in rec["removes"]:
-                    live.remove(r)
-                live.extend(rec["adds"])
-                version = int(name.split(".")[0])
-            return live, version
+            recs = list(txn_log.records(log_dir))
+            return list(txn_log.live_adds(recs)), recs[-1][0]
 
         def winner_removes(version: int) -> set[str]:
-            rec = json.load(
-                open(os.path.join(log_dir, f"{version:05d}.json"))
-            )
-            return set(rec["removes"])
+            return set(txn_log.read(log_dir, version)["removes"])
 
         # base table: two immutable files, v0/v1
         even = orders.filter(F.col("o_orderkey") % 2 == 0)
         odd = orders.filter(F.col("o_orderkey") % 2 != 0)
         even.write.parquet(os.path.join(base, "dataE"))
-        if not cas_commit("base", 0, {"adds": ["dataE"], "removes": []}):
+        if not txn_log.commit(log_dir, 0, {"adds": ["dataE"], "removes": []}):
             raise RuntimeError("base commit v0 lost CAS on a fresh log")
         odd.write.parquet(os.path.join(base, "dataO"))
-        if not cas_commit("base", 1, {"adds": ["dataO"], "removes": []}):
+        if not txn_log.commit(log_dir, 1, {"adds": ["dataO"], "removes": []}):
             raise RuntimeError("base commit v1 lost CAS on a fresh log")
 
         # all three writers snapshot the table at version 1
@@ -2379,7 +2234,7 @@ def sink_txn_log_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
         c_read_set = {"dataE"}
 
         # A commits first and wins v2 cleanly
-        if not cas_commit("A", snap_v + 1, a_rec):
+        if not txn_log.commit(log_dir, snap_v + 1, a_rec):
             raise RuntimeError("writer A lost CAS at v2 with no contender")
         audit["A"] = {"cas_failures": 0, "resolution": "win", "version": 2}
 
@@ -2388,7 +2243,7 @@ def sink_txn_log_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
         # set, and retries the SAME staged file at the next slot
         b_failures = 0
         b_version = snap_v + 1
-        while not cas_commit("B", b_version, b_rec):
+        while not txn_log.commit(log_dir, b_version, b_rec):
             b_failures += 1
             overlap = winner_removes(b_version) & set(b_rec["removes"])
             assert not overlap  # append conflicts with nothing
@@ -2405,7 +2260,7 @@ def sink_txn_log_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
         c_failures = 0
         c_version = snap_v + 1
         c_aborted = False
-        while not cas_commit("C", c_version, c_rec):
+        while not txn_log.commit(log_dir, c_version, c_rec):
             c_failures += 1
             overlap = winner_removes(c_version) & (
                 set(c_rec["removes"]) | c_read_set
@@ -2436,18 +2291,9 @@ def sink_txn_log_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         with open(os.path.join(base, "_AUDIT.json"), "w") as f:
             json.dump(audit, f)
-        open(done, "w").close()
+        txn_log.mark_built(base)
 
-    live: list[str] = []
-    import json as _json
-
-    for name in sorted(os.listdir(log_dir)):
-        if not name.endswith(".json"):
-            continue
-        rec = _json.load(open(os.path.join(log_dir, name)))
-        for r in rec["removes"]:
-            live.remove(r)
-        live.extend(rec["adds"])
+    live = txn_log.live_adds(txn_log.records(log_dir))
     table = spark.read.parquet(*(os.path.join(base, p) for p in live))
     return (
         table.groupBy("o_orderstatus")
@@ -2488,6 +2334,52 @@ ORDER BY 1, 2
 """
 
 
+def _read_generations(
+    spark: SparkSession, base: str, log_dir: str
+) -> DataFrame:
+    """Read a schema-carrying log's live files at its LATEST schema.
+
+    A commit with a ``schema`` starts a new schema generation (the last
+    one wins); each add belongs to the generation current when it was
+    committed. Files of one generation share ONE multi-path scan, so
+    plan width is bounded by #ALTERs, not #live-files. A schema entry
+    is ``[name, type]`` or ``[physical, logical, type]``: a column the
+    file has is renamed to its logical name, a younger one reads as a
+    typed NULL — both scan-side projections, no shuffle."""
+    recs = list(txn_log.records(log_dir))
+    schema: list[list[str]] = []
+    gen_of: dict[str, int] = {}  # file -> schema generation at add time
+    gen = -1
+    for _, rec in recs:
+        if "schema" in rec:
+            schema, gen = rec["schema"], gen + 1
+        for a in rec["adds"]:
+            gen_of[a] = gen
+    by_gen: dict[int, list[str]] = {}
+    for p in txn_log.live_adds(recs):
+        by_gen.setdefault(gen_of[p], []).append(p)
+    parts = []
+    for g in sorted(by_gen):
+        df = spark.read.parquet(
+            *(os.path.join(base, p) for p in by_gen[g])
+        )
+        have = set(df.columns)
+        # e[0] = physical name, e[-2] = logical name, e[-1] = type
+        parts.append(
+            df.select(
+                *[
+                    F.col(e[0]).alias(e[-2]) if e[0] in have
+                    else F.lit(None).cast(e[-1]).alias(e[-2])
+                    for e in schema
+                ]
+            )
+        )
+    table = parts[0]
+    for part in parts[1:]:
+        table = table.unionByName(part)
+    return table
+
+
 @register("sink_txn_log_schema_evolution", oracle=_TXN_SCHEMA_EVO_ORACLE)
 def sink_txn_log_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCHEMA EVOLUTION committed in the transaction log — ALTER TABLE
@@ -2516,9 +2408,6 @@ def sink_txn_log_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
     as TWO files precisely so the plan pin (union arity == #gens, not
     #files) can tell the two strategies apart (test_plans.py).
     """
-    import json
-    import shutil
-
     orders = load_table(spark, sf_dir, "orders")
     if orders.limit(1).isEmpty():  # empty-input contract
         return spark.createDataFrame(
@@ -2531,19 +2420,12 @@ def sink_txn_log_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
     base = os.path.join(
         scratch_dir(), f"txnschema_g2_{_src_tag(sf_dir, 'orders')}"
     )
-    log_dir = os.path.join(base, "_log")
-    done = os.path.join(base, "_ALL_COMMITTED")
-    # latest schema as (name, spark-sql type) pairs, in commit order
-    if not os.path.exists(done):
-        if os.path.exists(base):
-            shutil.rmtree(base)
-        os.makedirs(log_dir)
+    log_dir = txn_log.log_of(base)
+    # schemas as (name, spark-sql type) pairs, in commit order
+    if txn_log.needs_build(base):
 
         def commit(version: int, rec: dict) -> None:
-            tmp = os.path.join(log_dir, f"{version:05d}.json.tmp")
-            with open(tmp, "w") as f:
-                json.dump(rec, f)
-            os.rename(tmp, os.path.join(log_dir, f"{version:05d}.json"))
+            txn_log.commit_or_raise(log_dir, version, rec)
 
         s1 = [["o_orderkey", "bigint"], ["o_totalprice", "double"]]
         s2 = s1 + [["o_orderpriority", "string"]]
@@ -2576,53 +2458,9 @@ def sink_txn_log_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
             F.col("o_orderstatus").alias("channel"),
         ).write.parquet(os.path.join(base, "gen3"))
         commit(4, {"adds": ["gen3"], "removes": []})
-        open(done, "w").close()
+        txn_log.mark_built(base)
 
-    live: list[str] = []
-    schema: list[list[str]] = []
-    gen_of: dict[str, int] = {}  # file -> schema generation at add time
-    gen = -1
-    import json as _json
-
-    for name in sorted(os.listdir(log_dir)):
-        if not name.endswith(".json"):
-            continue
-        rec = _json.load(open(os.path.join(log_dir, name)))
-        for r in rec["removes"]:
-            live.remove(r)
-            gen_of.pop(r, None)
-        if "schema" in rec:  # last metaData record wins
-            schema = rec["schema"]
-            gen += 1
-        for a in rec["adds"]:
-            live.append(a)
-            gen_of[a] = gen
-
-    # project each GENERATION (not each file) to the LOG's latest
-    # schema: files written under the same schema share one multi-path
-    # scan, so plan width is bounded by #ALTERs, not #live-files;
-    # present columns pass through, younger ones read as typed NULLs
-    by_gen: dict[int, list[str]] = {}
-    for p in live:
-        by_gen.setdefault(gen_of[p], []).append(p)
-    parts = []
-    for g in sorted(by_gen):
-        df = spark.read.parquet(
-            *(os.path.join(base, p) for p in by_gen[g])
-        )
-        have = set(df.columns)
-        parts.append(
-            df.select(
-                *[
-                    F.col(col) if col in have
-                    else F.lit(None).cast(typ).alias(col)
-                    for col, typ in schema
-                ]
-            )
-        )
-    table = parts[0]
-    for part in parts[1:]:
-        table = table.unionByName(part)
+    table = _read_generations(spark, base, log_dir)
     return (
         table.groupBy(
             F.coalesce("o_orderpriority", F.lit("<pre-alter>")).alias(
@@ -2698,9 +2536,6 @@ def scan_txn_log_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     writer already holds both images in memory); deriving it from the
     file diff is read-side-only and needs no writer cooperation.
     """
-    import json
-    import shutil
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
@@ -2713,19 +2548,12 @@ def scan_txn_log_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = os.path.join(
         scratch_dir(), f"txncdf_{_src_tag(sf_dir, 'orders')}"
     )
-    log_dir = os.path.join(base, "_log")
-    done = os.path.join(base, "_ALL_COMMITTED")
-    if not os.path.exists(done):
-        if os.path.exists(base):
-            shutil.rmtree(base)
-        os.makedirs(log_dir)
+    log_dir = txn_log.log_of(base)
+    if txn_log.needs_build(base):
 
         def commit(version: int, adds: list, removes: list) -> None:
             rec = {"adds": adds, "removes": removes}
-            tmp = os.path.join(log_dir, f"{version:05d}.json.tmp")
-            with open(tmp, "w") as f:
-                json.dump(rec, f)
-            os.rename(tmp, os.path.join(log_dir, f"{version:05d}.json"))
+            txn_log.commit_or_raise(log_dir, version, rec)
 
         orders.write.parquet(os.path.join(base, "fileA"))
         commit(0, ["fileA"], [])
@@ -2749,27 +2577,13 @@ def scan_txn_log_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderkey") % 30 != 0
         ).write.parquet(os.path.join(base, "fileD"))
         commit(3, ["fileD"], ["fileB"])
-        open(done, "w").close()
-
-    import json as _json
-
-    commits: list[tuple[int, dict]] = []
-    for name in sorted(os.listdir(log_dir)):
-        if name.endswith(".json"):
-            commits.append(
-                (
-                    int(name.split(".")[0]),
-                    _json.load(open(os.path.join(log_dir, name))),
-                )
-            )
+        txn_log.mark_built(base)
 
     # the generic feed derivation: per commit in (v_start, v_end],
     # diff removed files (pre) against added files (post) on the key
-    v_start, v_end = 0, commits[-1][0]
+    v_start, v_end = 0, txn_log.versions(log_dir)[-1]
     feeds = []
-    for version, rec in commits:
-        if not (v_start < version <= v_end):
-            continue
+    for version, rec in txn_log.records(log_dir, v_end, after=v_start):
         post = (
             spark.read.parquet(
                 *(os.path.join(base, p) for p in rec["adds"])
@@ -2896,9 +2710,6 @@ def sink_txn_log_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     exist (VACUUM's retention is the tradeoff — sink_txn_log_vacuum
     documents the interaction).
     """
-    import json
-    import shutil
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
@@ -2909,19 +2720,12 @@ def sink_txn_log_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = os.path.join(
         scratch_dir(), f"txnrestore_{_src_tag(sf_dir, 'orders')}"
     )
-    log_dir = os.path.join(base, "_log")
-    done = os.path.join(base, "_ALL_COMMITTED")
-    if not os.path.exists(done):
-        if os.path.exists(base):
-            shutil.rmtree(base)
-        os.makedirs(log_dir)
+    log_dir = txn_log.log_of(base)
+    if txn_log.needs_build(base):
 
         def commit(version: int, adds: list, removes: list) -> None:
             rec = {"adds": adds, "removes": removes}
-            tmp = os.path.join(log_dir, f"{version:05d}.json.tmp")
-            with open(tmp, "w") as f:
-                json.dump(rec, f)
-            os.rename(tmp, os.path.join(log_dir, f"{version:05d}.json"))
+            txn_log.commit_or_raise(log_dir, version, rec)
 
         orders.write.parquet(os.path.join(base, "fileA"))
         commit(0, ["fileA"], [])
@@ -2939,34 +2743,14 @@ def sink_txn_log_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         # RESTORE TO VERSION 0: fold the log to both snapshots, then
         # commit the set difference — pure metadata, no data I/O
-        def snapshot(upto: int) -> list[str]:
-            live: list[str] = []
-            for name in sorted(os.listdir(log_dir)):
-                if not name.endswith(".json"):
-                    continue
-                v = int(name.split(".")[0])
-                if v > upto:
-                    break
-                rec = json.load(open(os.path.join(log_dir, name)))
-                for r in rec["removes"]:
-                    live.remove(r)
-                live.extend(rec["adds"])
-            return live
+        def snapshot(upto: int) -> set[str]:
+            return set(txn_log.live_adds(txn_log.records(log_dir, upto)))
 
-        target, current = set(snapshot(0)), set(snapshot(2))
+        target, current = snapshot(0), snapshot(2)
         commit(3, sorted(target - current), sorted(current - target))
-        open(done, "w").close()
+        txn_log.mark_built(base)
 
-    live: list[str] = []
-    import json as _json
-
-    for name in sorted(os.listdir(log_dir)):
-        if not name.endswith(".json"):
-            continue
-        rec = _json.load(open(os.path.join(log_dir, name)))
-        for r in rec["removes"]:
-            live.remove(r)
-        live.extend(rec["adds"])
+    live = txn_log.live_adds(txn_log.records(log_dir))
     table = spark.read.parquet(*(os.path.join(base, p) for p in live))
     return (
         table.groupBy("o_orderpriority")
@@ -3045,9 +2829,6 @@ def scan_txn_log_as_of_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     timestamp travel as approximate near commit boundaries while
     version travel is exact).
     """
-    import json
-    import shutil
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
@@ -3059,23 +2840,12 @@ def scan_txn_log_as_of_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = os.path.join(
         scratch_dir(), f"txnasof_{_src_tag(sf_dir, 'orders')}"
     )
-    log_dir = os.path.join(base, "_log")
-    done = os.path.join(base, "_ALL_COMMITTED")
-    if not os.path.exists(done):
-        if os.path.exists(base):
-            shutil.rmtree(base)
-        os.makedirs(log_dir)
+    log_dir = txn_log.log_of(base)
+    if txn_log.needs_build(base):
 
         def commit(version: int, adds: list, removes: list) -> None:
-            rec = {
-                "ts": _TT_TS[version],
-                "adds": adds,
-                "removes": removes,
-            }
-            tmp = os.path.join(log_dir, f"{version:05d}.json.tmp")
-            with open(tmp, "w") as f:
-                json.dump(rec, f)
-            os.rename(tmp, os.path.join(log_dir, f"{version:05d}.json"))
+            rec = {"ts": _TT_TS[version], "adds": adds, "removes": removes}
+            txn_log.commit_or_raise(log_dir, version, rec)
 
         orders.filter(F.col("o_orderkey") % 2 == 0).write.parquet(
             os.path.join(base, "tA")
@@ -3091,15 +2861,9 @@ def scan_txn_log_as_of_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(base, "tC")
         )
         commit(2, ["tC"], ["tA", "tB"])
-        open(done, "w").close()
+        txn_log.mark_built(base)
 
-    import json as _json
-
-    commits = []
-    for name in sorted(os.listdir(log_dir)):
-        if name.endswith(".json"):
-            rec = _json.load(open(os.path.join(log_dir, name)))
-            commits.append((int(name.split(".")[0]), rec))
+    commits = list(txn_log.records(log_dir))
 
     def resolve(query_ts: int) -> int:
         """Greatest commit ts <= query_ts (—1 = before history)."""
@@ -3110,14 +2874,7 @@ def scan_txn_log_as_of_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
         return v
 
     def snapshot_live(upto: int) -> list[str]:
-        live: list[str] = []
-        for version, rec in commits:
-            if version > upto:
-                break
-            for r in rec["removes"]:
-                live.remove(r)
-            live.extend(rec["adds"])
-        return live
+        return list(txn_log.live_adds(c for c in commits if c[0] <= upto))
 
     # one aggregate per DISTINCT resolved version; probe rows join it
     out = []
@@ -3163,23 +2920,13 @@ def _dv_fold(
     (Delta semantics — DVs are never stacked; the writer merges the
     old vector into the new one before committing); removing a file
     drops its vector with it."""
-    import json
-
-    live: list[str] = []
+    recs = list(txn_log.records(log_dir, upto))
     dv: dict[str, str] = {}
-    for name in sorted(os.listdir(log_dir)):
-        if not name.endswith(".json"):
-            continue
-        v = int(name.split(".")[0])
-        if upto is not None and v > upto:
-            break
-        rec = json.load(open(os.path.join(log_dir, name)))
+    for _, rec in recs:
         for r in rec["removes"]:
-            live.remove(r)
             dv.pop(r, None)
-        live.extend(rec["adds"])
         dv.update(rec.get("dv", {}))
-    return live, dv
+    return list(txn_log.live_adds(recs)), dv
 
 
 def _dv_read(
@@ -3231,11 +2978,7 @@ def _dv_cdf_deletes(
     positions: (new vector MINUS the file's previous vector), inner-
     joined back to the data file. Emits ``delete`` rows tagged with the
     commit version; cost is O(newly deleted), never O(file)."""
-    import json
-
-    rec = json.load(
-        open(os.path.join(log_dir, f"{version:05d}.json"))
-    )
+    rec = txn_log.read(log_dir, version)
     _, dv_before = _dv_fold(log_dir, upto=version - 1)
     feeds: list[DataFrame] = []
     for f, vec_path in rec.get("dv", {}).items():
@@ -3320,9 +3063,6 @@ def sink_txn_log_delete_vectors(
     VACUUM interaction: a replaced vector becomes unreferenced like
     any rewritten file and ages out under the same retention.
     """
-    import json
-    import shutil
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
@@ -3333,18 +3073,11 @@ def sink_txn_log_delete_vectors(
     base = os.path.join(
         scratch_dir(), f"txndv_{_src_tag(sf_dir, 'orders')}"
     )
-    log_dir = os.path.join(base, "_log")
-    done = os.path.join(base, "_ALL_COMMITTED")
-    if not os.path.exists(done):
-        if os.path.exists(base):
-            shutil.rmtree(base)
-        os.makedirs(log_dir)
+    log_dir = txn_log.log_of(base)
+    if txn_log.needs_build(base):
 
         def commit(version: int, rec: dict) -> None:
-            tmp = os.path.join(log_dir, f"{version:05d}.json.tmp")
-            with open(tmp, "w") as f:
-                json.dump(rec, f)
-            os.rename(tmp, os.path.join(log_dir, f"{version:05d}.json"))
+            txn_log.commit_or_raise(log_dir, version, rec)
 
         orders.filter(F.col("o_orderkey") % 2 == 0).write.parquet(
             os.path.join(base, "fileA")
@@ -3405,7 +3138,7 @@ def sink_txn_log_delete_vectors(
         commit(
             4, {"adds": ["fileA_c"], "removes": ["fileA"], "dv": {}}
         )
-        open(done, "w").close()
+        txn_log.mark_built(base)
 
     # Single-pass multi-version read-back (r15 optimization round,
     # guide §2.4/§6): the naive shape — one `_dv_read(...).agg(...)`
@@ -3561,9 +3294,6 @@ def sink_txn_log_column_mapping(
     group files by generation exactly like
     ``sink_txn_log_schema_evolution``; projection is scan-side.
     """
-    import json
-    import shutil
-
     orders = load_table(spark, sf_dir, "orders")
     if orders.limit(1).isEmpty():  # empty-input contract
         return spark.createDataFrame(
@@ -3572,18 +3302,11 @@ def sink_txn_log_column_mapping(
     base = os.path.join(
         scratch_dir(), f"txncolmap_{_src_tag(sf_dir, 'orders')}"
     )
-    log_dir = os.path.join(base, "_log")
-    done = os.path.join(base, "_ALL_COMMITTED")
-    if not os.path.exists(done):
-        if os.path.exists(base):
-            shutil.rmtree(base)
-        os.makedirs(log_dir)
+    log_dir = txn_log.log_of(base)
+    if txn_log.needs_build(base):
 
         def commit(version: int, rec: dict) -> None:
-            tmp = os.path.join(log_dir, f"{version:05d}.json.tmp")
-            with open(tmp, "w") as f:
-                json.dump(rec, f)
-            os.rename(tmp, os.path.join(log_dir, f"{version:05d}.json"))
+            txn_log.commit_or_raise(log_dir, version, rec)
 
         # schema entries: [physical, logical, type]
         s0 = [
@@ -3623,49 +3346,9 @@ def sink_txn_log_column_mapping(
             F.col("o_totalprice").alias("col_2"),
         ).write.parquet(os.path.join(base, "f3"))
         commit(4, {"adds": ["f3"], "removes": []})
-        open(done, "w").close()
+        txn_log.mark_built(base)
 
-    import json as _json
-
-    live: list[str] = []
-    schema: list[list[str]] = []
-    gen_of: dict[str, int] = {}
-    gen = -1
-    for name in sorted(os.listdir(log_dir)):
-        if not name.endswith(".json"):
-            continue
-        rec = _json.load(open(os.path.join(log_dir, name)))
-        for r in rec["removes"]:
-            live.remove(r)
-            gen_of.pop(r, None)
-        if "schema" in rec:
-            schema = rec["schema"]
-            gen += 1
-        for a in rec["adds"]:
-            live.append(a)
-            gen_of[a] = gen
-
-    by_gen: dict[int, list[str]] = {}
-    for p in live:
-        by_gen.setdefault(gen_of[p], []).append(p)
-    parts = []
-    for g in sorted(by_gen):
-        df = spark.read.parquet(
-            *(os.path.join(base, p) for p in by_gen[g])
-        )
-        have = set(df.columns)
-        parts.append(
-            df.select(
-                *[
-                    F.col(phys).alias(logical) if phys in have
-                    else F.lit(None).cast(typ).alias(logical)
-                    for phys, logical, typ in schema
-                ]
-            )
-        )
-    table = parts[0]
-    for part in parts[1:]:
-        table = table.unionByName(part)
+    table = _read_generations(spark, base, log_dir)
     return (
         table.groupBy(
             (F.col("o_orderkey") % 5).cast("long").alias("bucket")
@@ -3898,9 +3581,6 @@ def sink_txn_log_optimize_zorder(
     rewrite itself is the one full-data pass OPTIMIZE always costs —
     amortized by every subsequent pruned scan.
     """
-    import json
-    import shutil
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
@@ -3911,8 +3591,7 @@ def sink_txn_log_optimize_zorder(
     base = os.path.join(
         scratch_dir(), f"txnzorder_{_src_tag(sf_dir, 'orders')}"
     )
-    log_dir = os.path.join(base, "_log")
-    done = os.path.join(base, "_ALL_COMMITTED")
+    log_dir = txn_log.log_of(base)
 
     def stats_of(df: DataFrame, path: str) -> dict:
         r = df.agg(
@@ -3931,16 +3610,10 @@ def sink_txn_log_optimize_zorder(
             "kmax": r["kmax"],
         }
 
-    if not os.path.exists(done):
-        if os.path.exists(base):
-            shutil.rmtree(base)
-        os.makedirs(log_dir)
+    if txn_log.needs_build(base):
 
         def commit(version: int, rec: dict) -> None:
-            tmp = os.path.join(log_dir, f"{version:05d}.json.tmp")
-            with open(tmp, "w") as f:
-                json.dump(rec, f)
-            os.rename(tmp, os.path.join(log_dir, f"{version:05d}.json"))
+            txn_log.commit_or_raise(log_dir, version, rec)
 
         # v0: 8 interleaved slices — every file spans the full range
         # of BOTH z-columns (stats prune nothing; the audit's "before")
@@ -4000,10 +3673,10 @@ def sink_txn_log_optimize_zorder(
             1,
             {"adds": adds1, "removes": [a["path"] for a in adds0]},
         )
-        open(done, "w").close()
+        txn_log.mark_built(base)
 
     # reader: fold log, stats-prune against the quarter box, scan
-    live = txn_zorder_live_adds(log_dir)
+    live = txn_log.live_adds(txn_log.records(log_dir)).values()
     b = orders.agg(
         F.min("o_custkey"), F.max("o_custkey"),
         F.min("o_orderkey"), F.max("o_orderkey"),
@@ -4028,23 +3701,6 @@ def sink_txn_log_optimize_zorder(
         )
         .orderBy("o_orderstatus")
     )
-
-
-def txn_zorder_live_adds(log_dir: str) -> list[dict]:
-    """Fold the zorder log into the live add records (with stats) —
-    shared with the r15 pruning test."""
-    import json as _json
-
-    live: dict[str, dict] = {}
-    for name in sorted(os.listdir(log_dir)):
-        if not name.endswith(".json"):
-            continue
-        rec = _json.load(open(os.path.join(log_dir, name)))
-        for r in rec["removes"]:
-            live.pop(r)
-        for a in rec["adds"]:
-            live[a["path"]] = a
-    return list(live.values())
 
 
 # ---------------------------------------------------------------------------
@@ -4100,9 +3756,6 @@ def sink_txn_log_partitioned(
     partition held; VACUUM later reclaims the bytes under the standing
     retention rules (`sink_txn_log_vacuum`).
     """
-    import json
-    import shutil
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
@@ -4113,21 +3766,14 @@ def sink_txn_log_partitioned(
     base = os.path.join(
         scratch_dir(), f"txnpart_{_src_tag(sf_dir, 'orders')}"
     )
-    log_dir = os.path.join(base, "_log")
-    done = os.path.join(base, "_ALL_COMMITTED")
+    log_dir = txn_log.log_of(base)
     prios = [
         "1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW",
     ]
-    if not os.path.exists(done):
-        if os.path.exists(base):
-            shutil.rmtree(base)
-        os.makedirs(log_dir)
+    if txn_log.needs_build(base):
 
         def commit(version: int, rec: dict) -> None:
-            tmp = os.path.join(log_dir, f"{version:05d}.json.tmp")
-            with open(tmp, "w") as f:
-                json.dump(rec, f)
-            os.rename(tmp, os.path.join(log_dir, f"{version:05d}.json"))
+            txn_log.commit_or_raise(log_dir, version, rec)
 
         median = orders.approxQuantile("o_orderkey", [0.5], 0.0)[0]
         for v, pred in (
@@ -4157,9 +3803,9 @@ def sink_txn_log_partitioned(
                 "removes": ["v0_p2", "v1_p2"],
             },
         )
-        open(done, "w").close()
+        txn_log.mark_built(base)
 
-    live = txn_partitioned_live_adds(log_dir)
+    live = txn_log.live_adds(txn_log.records(log_dir)).values()
     want = {"2-HIGH", "3-MEDIUM"}
     kept = [
         a for a in live
@@ -4189,23 +3835,6 @@ def sink_txn_log_partitioned(
         )
         .orderBy("o_orderpriority")
     )
-
-
-def txn_partitioned_live_adds(log_dir: str) -> list[dict]:
-    """Fold the partitioned log into live add records (with partition
-    values) — shared with the r15 pruning test."""
-    import json as _json
-
-    live: dict[str, dict] = {}
-    for name in sorted(os.listdir(log_dir)):
-        if not name.endswith(".json"):
-            continue
-        rec = _json.load(open(os.path.join(log_dir, name)))
-        for r in rec["removes"]:
-            live.pop(r)
-        for a in rec["adds"]:
-            live[a["path"]] = a
-    return list(live.values())
 
 
 # ---------------------------------------------------------------------------
@@ -4262,7 +3891,6 @@ def sink_txn_log_constraints(
     are expression-level (codegen), arbitrary SQL predicates allowed.
     """
     import json
-    import shutil
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
@@ -4274,26 +3902,18 @@ def sink_txn_log_constraints(
     base = os.path.join(
         scratch_dir(), f"txnconstraint_{_src_tag(sf_dir, 'orders')}"
     )
-    log_dir = os.path.join(base, "_log")
-    done = os.path.join(base, "_ALL_COMMITTED")
-    if not os.path.exists(done):
-        if os.path.exists(base):
-            shutil.rmtree(base)
-        os.makedirs(log_dir)
+    log_dir = txn_log.log_of(base)
+    if txn_log.needs_build(base):
 
         def commit(version: int, rec: dict) -> None:
-            tmp = os.path.join(log_dir, f"{version:05d}.json.tmp")
-            with open(tmp, "w") as f:
-                json.dump(rec, f)
-            os.rename(tmp, os.path.join(log_dir, f"{version:05d}.json"))
+            txn_log.commit_or_raise(log_dir, version, rec)
 
         def active_constraints() -> list[str]:
-            cons: list[str] = []
-            for name in sorted(os.listdir(log_dir)):
-                if name.endswith(".json"):
-                    rec = json.load(open(os.path.join(log_dir, name)))
-                    cons.extend(rec.get("add_constraints", []))
-            return cons
+            return [
+                c
+                for _, rec in txn_log.records(log_dir)
+                for c in rec.get("add_constraints", [])
+            ]
 
         def validated_append(
             version: int, batch: DataFrame, path: str
@@ -4350,18 +3970,9 @@ def sink_txn_log_constraints(
         )
         if not validated_append(2, clean, "f2"):
             raise RuntimeError("clean batch rejected")
-        open(done, "w").close()
+        txn_log.mark_built(base)
 
-    import json as _json
-
-    live: list[str] = []
-    for name in sorted(os.listdir(log_dir)):
-        if not name.endswith(".json"):
-            continue
-        rec = _json.load(open(os.path.join(log_dir, name)))
-        for r in rec["removes"]:
-            live.remove(r)
-        live.extend(rec["adds"])
+    live = txn_log.live_adds(txn_log.records(log_dir))
     table = spark.read.parquet(*(os.path.join(base, p) for p in live))
     return table.agg(
         F.count("*").cast("long").alias("n"),
@@ -4430,9 +4041,6 @@ def sink_txn_log_shallow_clone(
     snapshot can span storage roots — exactly how production clones
     mix source-owned and clone-owned files.
     """
-    import json
-    import shutil
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
@@ -4446,38 +4054,19 @@ def sink_txn_log_shallow_clone(
     clone_base = os.path.join(
         scratch_dir(), f"txnclone_{_src_tag(sf_dir, 'orders')}"
     )
-    done = os.path.join(clone_base, "_ALL_COMMITTED")
-
-    def commit(log_dir: str, version: int, rec: dict) -> None:
-        tmp = os.path.join(log_dir, f"{version:05d}.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(rec, f)
-        os.rename(tmp, os.path.join(log_dir, f"{version:05d}.json"))
+    commit = txn_log.commit_or_raise
 
     def fold(log_dir: str) -> list[dict]:
-        live: dict[str, dict] = {}
-        for name in sorted(os.listdir(log_dir)):
-            if not name.endswith(".json"):
-                continue
-            rec = json.load(open(os.path.join(log_dir, name)))
-            for r in rec["removes"]:
-                live.pop(r)
-            for a in rec["adds"]:
-                live[a["path"]] = a
-        return list(live.values())
+        return list(txn_log.live_adds(txn_log.records(log_dir)).values())
 
     def read_live(live: list[dict]) -> DataFrame:
         return spark.read.parquet(
             *(os.path.join(a["root"], a["path"]) for a in live)
         )
 
-    if not os.path.exists(done):
-        for b in (src_base, clone_base):
-            if os.path.exists(b):
-                shutil.rmtree(b)
-            os.makedirs(os.path.join(b, "_log"))
-        src_log = os.path.join(src_base, "_log")
-        clone_log = os.path.join(clone_base, "_log")
+    src_log, clone_log = txn_log.log_of(src_base), txn_log.log_of(clone_base)
+    if txn_log.needs_build(clone_base):  # the clone holds the marker
+        txn_log.reset(src_base)
 
         # source v0+v1: two halves
         for v, pred in (
@@ -4526,11 +4115,11 @@ def sink_txn_log_shallow_clone(
             {"adds": [{"path": "post", "root": src_base}],
              "removes": []},
         )
-        open(done, "w").close()
+        txn_log.mark_built(clone_base)
 
     outs = []
-    for which, b in (("clone", clone_base), ("src", src_base)):
-        df = read_live(fold(os.path.join(b, "_log")))
+    for which, log in (("clone", clone_log), ("src", src_log)):
+        df = read_live(fold(log))
         outs.append(
             df.agg(
                 F.count("*").cast("long").alias("n"),
@@ -4597,9 +4186,6 @@ def sink_txn_log_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
     no global sort, no single-partition exchange — the pattern holds
     for a billion-row batch on a thousand executors.
     """
-    import json
-    import shutil
-
     from pyspark.sql import Window
 
     orders = load_table(spark, sf_dir, "orders").select(
@@ -4614,20 +4200,12 @@ def sink_txn_log_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = os.path.join(
         scratch_dir(), f"txnidentity_{_src_tag(sf_dir, 'orders')}"
     )
-    log_dir = os.path.join(base, "_log")
-    done = os.path.join(base, "_ALL_COMMITTED")
-    if not os.path.exists(done):
-        if os.path.exists(base):
-            shutil.rmtree(base)
-        os.makedirs(log_dir)
+    log_dir = txn_log.log_of(base)
+    if txn_log.needs_build(base):
 
         def hwm() -> int:
-            m = 0
-            for name in sorted(os.listdir(log_dir)):
-                if name.endswith(".json"):
-                    rec = json.load(open(os.path.join(log_dir, name)))
-                    m = max(m, rec.get("identity_hwm", 0))
-            return m
+            recs = txn_log.records(log_dir)
+            return max((r.get("identity_hwm", 0) for _, r in recs), default=0)
 
         def identity_append(version: int, batch: DataFrame) -> None:
             start = hwm()
@@ -4679,27 +4257,16 @@ def sink_txn_log_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "removes": [],
                 "identity_hwm": acc,
             }
-            tmp = os.path.join(log_dir, f"{version:05d}.json.tmp")
-            with open(tmp, "w") as f:
-                json.dump(rec, f)
-            os.rename(
-                tmp, os.path.join(log_dir, f"{version:05d}.json")
-            )
+            txn_log.commit_or_raise(log_dir, version, rec)
 
         for k in range(3):
             identity_append(
                 k, orders.filter(F.col("o_orderkey") % 3 == k)
             )
-        open(done, "w").close()
-
-    import json as _json
+        txn_log.mark_built(base)
 
     outs = []
-    for name in sorted(os.listdir(log_dir)):
-        if not name.endswith(".json"):
-            continue
-        v = int(name.split(".")[0])
-        rec = _json.load(open(os.path.join(log_dir, name)))
+    for v, rec in txn_log.records(log_dir):
         df = spark.read.parquet(
             *(os.path.join(base, p) for p in rec["adds"])
         )

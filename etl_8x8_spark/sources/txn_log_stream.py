@@ -39,7 +39,6 @@ fixture read versions 1/2 two and three times). Therefore:
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql.datasource import (
@@ -47,6 +46,8 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
+
+from etl_8x8_spark.sources import txn_log
 
 _SCHEMA = "o_orderkey bigint, o_totalprice double, version bigint"
 
@@ -57,18 +58,10 @@ class _CommitFile(InputPartition):
         self.path = path
 
 
-def _committed_versions(log_dir: str) -> list[int]:
-    return sorted(
-        int(n.split(".")[0])
-        for n in os.listdir(log_dir)
-        if n.endswith(".json") and n.split(".")[0].isdigit()
-    )
-
-
 class TxnLogTailReader(DataSourceStreamReader):
     def __init__(self, options) -> None:
         self.base = options["path"]
-        self.log_dir = os.path.join(self.base, "_log")
+        self.log_dir = txn_log.log_of(self.base)
         self._hwm: int | None = None  # high-water mark of SERVED offsets
 
     # -- offsets: {"version": N} == "commits < N consumed" ------------
@@ -76,7 +69,7 @@ class TxnLogTailReader(DataSourceStreamReader):
         return {"version": 0}
 
     def latestOffset(self) -> dict:
-        versions = _committed_versions(self.log_dir)
+        versions = txn_log.versions(self.log_dir)
         top = versions[-1] + 1 if versions else 0
         if self._hwm is None:
             # first poll of this run: the checkpointed position is
@@ -96,14 +89,9 @@ class TxnLogTailReader(DataSourceStreamReader):
             self._hwm = seen
         parts: list[_CommitFile] = []
         for v in range(start["version"], end["version"]):
-            rec = json.load(
-                open(os.path.join(self.log_dir, f"{v:05d}.json"))
-            )
-            for add in rec["adds"]:
-                path = add["path"] if isinstance(add, dict) else add
-                parts.append(
-                    _CommitFile(v, os.path.join(self.base, path))
-                )
+            for add in txn_log.read(self.log_dir, v)["adds"]:
+                path = os.path.join(self.base, txn_log.add_path(add))
+                parts.append(_CommitFile(v, path))
         # an empty batch still needs ≥0 partitions; Spark handles []
         return parts
 

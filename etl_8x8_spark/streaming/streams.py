@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from etl_8x8_spark.functions.parity import dsum, oracle_dsum
 from etl_8x8_spark.registry import register
+from etl_8x8_spark.sources import txn_log
 from etl_8x8_spark.sources.readers import load_table, scratch_dir
 
 _EVENTS_STREAM_SCHEMA = (
@@ -1617,9 +1618,6 @@ def stream_txn_log_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a production deployment swaps the memory sink for foreachBatch
     into a real table — the source is sink-agnostic.
     """
-    import json
-    import shutil
-
     from etl_8x8_spark.sources.txn_log_stream import (
         register_txn_log_tail_source,
     )
@@ -1636,23 +1634,16 @@ def stream_txn_log_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = os.path.join(
         scratch_dir(), f"txntail_{_src_tag(sf_dir, 'orders')}"
     )
-    log_dir = os.path.join(base, "_log")
-    done = os.path.join(base, "_ALL_COMMITTED")
-    if not os.path.exists(done):
-        if os.path.exists(base):
-            shutil.rmtree(base)
-        os.makedirs(log_dir)
+    if txn_log.needs_build(base):
         for k in range(4):
             d = f"tail{k}"
             orders.filter(F.col("o_orderkey") % 4 == k).write.parquet(
                 os.path.join(base, d)
             )
-            rec = {"adds": [d], "removes": []}
-            tmp = os.path.join(log_dir, f"{k:05d}.json.tmp")
-            with open(tmp, "w") as fh:
-                json.dump(rec, fh)
-            os.rename(tmp, os.path.join(log_dir, f"{k:05d}.json"))
-        open(done, "w").close()
+            txn_log.commit_or_raise(
+                txn_log.log_of(base), k, {"adds": [d], "removes": []}
+            )
+        txn_log.mark_built(base)
 
     register_txn_log_tail_source(spark)
     s = (
@@ -1722,9 +1713,6 @@ def stream_txn_log_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch width. State in the streaming query itself: none (pure
     routing), so the pattern holds for arbitrarily wide epochs.
     """
-    import json
-    import shutil
-
     from etl_8x8_spark.sources.scans import _src_tag
 
     orders = load_table(spark, sf_dir, "orders").select(
@@ -1738,18 +1726,14 @@ def stream_txn_log_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         scratch_dir(), f"txnsink_{_src_tag(sf_dir, 'orders')}"
     )
     in_dir = os.path.join(base, "_incoming")
-    log_dir = os.path.join(base, "_log")
-    done = os.path.join(base, "_ALL_COMMITTED")
+    log_dir = txn_log.log_of(base)
 
     def committed_epochs() -> set:
-        eps = set()
-        if os.path.isdir(log_dir):
-            for name in sorted(os.listdir(log_dir)):
-                if name.endswith(".json"):
-                    rec = json.load(open(os.path.join(log_dir, name)))
-                    if "epoch" in rec:
-                        eps.add(rec["epoch"])
-        return eps
+        return {
+            rec["epoch"]
+            for _, rec in txn_log.records(log_dir)
+            if "epoch" in rec
+        }
 
     def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
         # data first (attempt-unique dir, never overwritten), commit
@@ -1766,19 +1750,11 @@ def stream_txn_log_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch_df.write.parquet(os.path.join(base, path))
         if batch_id in committed_epochs():
             return  # replayed epoch: orphan data dir, commit skipped
-        version = len(
-            [n for n in os.listdir(log_dir) if n.endswith(".json")]
+        txn_log.append(
+            log_dir, {"adds": [path], "removes": [], "epoch": batch_id}
         )
-        rec = {"adds": [path], "removes": [], "epoch": batch_id}
-        tmp = os.path.join(log_dir, f"{version:05d}.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(rec, f)
-        os.rename(tmp, os.path.join(log_dir, f"{version:05d}.json"))
 
-    if not os.path.exists(done):
-        if os.path.exists(base):
-            shutil.rmtree(base)
-        os.makedirs(log_dir)
+    if txn_log.needs_build(base):
         # four incoming files -> four micro-batches
         for k in range(4):
             # one physical file per split: exactly four micro-batches
@@ -1810,16 +1786,9 @@ def stream_txn_log_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             *(os.path.join(base, d) for d in last_dirs)
         )
         sink_batch(replay, last)
-        open(done, "w").close()
+        txn_log.mark_built(base)
 
-    live: list[str] = []
-    for name in sorted(os.listdir(log_dir)):
-        if not name.endswith(".json"):
-            continue
-        rec = json.load(open(os.path.join(log_dir, name)))
-        for r in rec["removes"]:
-            live.remove(r)
-        live.extend(rec["adds"])
+    live = txn_log.live_adds(txn_log.records(log_dir))
     table = spark.read.parquet(
         *(os.path.join(base, p) for p in live)
     )

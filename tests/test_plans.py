@@ -771,9 +771,9 @@ class TestR15Plans:
         """The r15 fixture holds FOUR live files across THREE schema
         generations; the reader must plan one scan per generation —
         a per-file reader would show four."""
-        import json
         import os
 
+        from etl_8x8_spark.sources import txn_log
         from etl_8x8_spark.sources.readers import scratch_dir
         from etl_8x8_spark.sources.scans import _src_tag
 
@@ -787,13 +787,7 @@ class TestR15Plans:
             f"txnschema_g2_{_src_tag(sf_dir, 'orders')}",
             "_log",
         )
-        live: list[str] = []
-        for name in sorted(os.listdir(log_dir)):
-            if name.endswith(".json"):
-                rec = json.load(open(os.path.join(log_dir, name)))
-                for r in rec["removes"]:
-                    live.remove(r)
-                live.extend(rec["adds"])
+        live = txn_log.live_adds(txn_log.records(log_dir))
         assert len(live) == 4  # the discriminator: 4 files, 3 scans
 
     def test_column_mapping_projection_is_scan_side(

@@ -116,10 +116,10 @@ class TestTxnLogMerge:
         original files (never rewritten), the insert file is separate,
         and the final live set is exactly {data0_m, data1, data2,
         data3, dataIns}. Also: no commit tmp files may survive (the
-        atomic-rename protocol leaves none on success)."""
-        import json
+        atomic-publish protocol leaves none on success)."""
         import os
 
+        from etl_8x8_spark.sources import txn_log
         from etl_8x8_spark.sources.readers import scratch_dir
         from etl_8x8_spark.sources.scans import _src_tag
 
@@ -130,17 +130,9 @@ class TestTxnLogMerge:
         log_dir = os.path.join(base, "_log")
         names = sorted(os.listdir(log_dir))
         assert [n for n in names if n.endswith(".tmp")] == []
-        recs = [
-            json.load(open(os.path.join(log_dir, n)))
-            for n in names
-            if n.endswith(".json")
-        ]
+        recs = dict(txn_log.records(log_dir))
         assert len(recs) == 5  # 4 base commits + 1 merge commit
-        live: list[str] = []
-        for rec in recs:
-            removes = set(rec["removes"])
-            live = [p for p in live if p not in removes]
-            live.extend(f["path"] for f in rec["adds"])
+        live = txn_log.live_adds(recs.items())
         assert sorted(live) == [
             "data0_m",
             "data1",
@@ -244,9 +236,9 @@ class TestTxnLogCheckpoint:
         live set must equal the fold of commits v0..v4, and checkpoint
         + suffix replay must land on exactly the same live set as a
         full-log fold — so skipping v0..v4 loses nothing."""
-        import json
         import os
 
+        from etl_8x8_spark.sources import txn_log
         from etl_8x8_spark.sources.readers import scratch_dir
         from etl_8x8_spark.sources.scans import _src_tag
 
@@ -262,25 +254,11 @@ class TestTxnLogCheckpoint:
         assert "00004.checkpoint.json" in names
         assert not [n for n in names if n.endswith(".tmp")]
 
-        def fold(upto=None, start_live=None, after=None):
-            live = list(start_live or [])
-            for n in names:
-                if not n.endswith(".json") or n.endswith(".checkpoint.json"):
-                    continue
-                v = int(n.split(".")[0])
-                if after is not None and v <= after:
-                    continue
-                if upto is not None and v > upto:
-                    continue
-                rec = json.load(open(os.path.join(log_dir, n)))
-                for r in rec["removes"]:
-                    live.remove(r)
-                live.extend(rec["adds"])
-            return sorted(live)
+        def fold(upto=None, start_live=(), after=-1):
+            recs = txn_log.records(log_dir, upto, after)
+            return sorted(txn_log.live_adds(recs, start_live))
 
-        ckpt = json.load(
-            open(os.path.join(log_dir, "00004.checkpoint.json"))
-        )
+        ckpt = txn_log.read(log_dir, 4, kind="checkpoint")
         assert sorted(ckpt["live"]) == fold(upto=4)
         assert fold() == fold(start_live=ckpt["live"], after=4)
         assert fold() == ["compactA", "compactB"]

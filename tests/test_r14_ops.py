@@ -18,6 +18,7 @@ import duckdb
 import pandas as pd
 
 from etl_8x8_spark.registry import all_queries
+from etl_8x8_spark.sources import txn_log
 
 SF_DIR = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -140,52 +141,26 @@ class TestTxnLogConflict:
         """Versions 0-4 each committed exactly once, no tmp orphans
         survive, C's aborted staged file is gone, and the folded live
         set is exactly {dataE_ac, dataO, dataN}."""
-        import json
-
         all_queries()["sink_txn_log_conflict"].builder(
             spark, sf_dir
         ).collect()
         base = self._base(sf_dir)
-        log_dir = os.path.join(base, "_log")
-        names = sorted(os.listdir(log_dir))
-        assert [n for n in names if ".tmp" in n] == []
-        assert [n for n in names if n.endswith(".json")] == [
-            f"{v:05d}.json" for v in range(5)
-        ]
+        log_dir = txn_log.log_of(base)
+        assert [n for n in os.listdir(log_dir) if ".tmp" in n] == []
+        assert txn_log.versions(log_dir) == [0, 1, 2, 3, 4]
         # the aborted rewrite's directory was discarded
         assert not os.path.exists(os.path.join(base, "dataE_c"))
-        live = []
-        for n in names:
-            rec = json.load(open(os.path.join(log_dir, n)))
-            for r in rec["removes"]:
-                live.remove(r)
-            live.extend(rec["adds"])
+        live = txn_log.live_adds(txn_log.records(log_dir))
         assert sorted(live) == ["dataE_ac", "dataN", "dataO"]
 
     def test_cas_primitive_second_writer_loses(self, tmp_path):
-        """The link-based CAS itself: two records staged for the same
-        version — the second link must fail and leave the winner's
-        bytes untouched (rename would silently clobber them)."""
-        import json
-
-        log = tmp_path / "log"
-        log.mkdir()
-        final = log / "00007.json"
-
-        def cas(writer, payload):
-            tmp = log / f"00007.json.tmp.{writer}"
-            tmp.write_text(json.dumps(payload))
-            try:
-                os.link(tmp, final)
-                won = True
-            except FileExistsError:
-                won = False
-            tmp.unlink()
-            return won
-
-        assert cas("X", {"who": "X"}) is True
-        assert cas("Y", {"who": "Y"}) is False
-        assert json.loads(final.read_text()) == {"who": "X"}
+        """The link-based CAS the operator commits through: the second
+        commit to a version must fail and leave the winner's bytes
+        untouched (rename would silently clobber them)."""
+        log_dir = str(tmp_path)
+        assert txn_log.commit(log_dir, 7, {"who": "X"}) is True
+        assert txn_log.commit(log_dir, 7, {"who": "Y"}) is False
+        assert txn_log.read(log_dir, 7) == {"who": "X"}
 
 
 class TestTxnLogSchemaEvolution:
@@ -236,8 +211,6 @@ class TestTxnLogSchemaEvolution:
         """The log owns the schema in BOTH directions: a DROP COLUMN
         metadata record makes the column vanish from the resolved read
         even though every byte of it remains in the live files."""
-        import json
-
         from etl_8x8_spark.sources.readers import scratch_dir
         from etl_8x8_spark.sources.scans import _src_tag
 
@@ -247,17 +220,10 @@ class TestTxnLogSchemaEvolution:
         base = os.path.join(
             scratch_dir(), f"txnschema_g2_{_src_tag(sf_dir, 'orders')}"
         )
-        log_dir = os.path.join(base, "_log")
         # replay the reader's fold with one extra DROP-COLUMN record
-        live, schema = [], []
-        for name in sorted(os.listdir(log_dir)):
-            if name.endswith(".json"):
-                rec = json.load(open(os.path.join(log_dir, name)))
-                for r in rec["removes"]:
-                    live.remove(r)
-                live.extend(rec["adds"])
-                if "schema" in rec:
-                    schema = rec["schema"]
+        recs = list(txn_log.records(txn_log.log_of(base)))
+        live = txn_log.live_adds(recs)
+        schema = [r["schema"] for _, r in recs if "schema" in r][-1]
         schema = [c for c in schema if c[0] != "o_totalprice"]  # DROP
         from pyspark.sql import functions as F
 
@@ -293,8 +259,6 @@ class TestTxnLogTailReader:
         one commit per poll; answers are monotone; and
         partitions(start, end) yields one input partition per added
         file of exactly the commits in [start, end)."""
-        import json
-
         from etl_8x8_spark.sources.readers import scratch_dir
         from etl_8x8_spark.sources.scans import _src_tag
         from etl_8x8_spark.sources.txn_log_stream import TxnLogTailReader
@@ -324,8 +288,6 @@ class TestTxnLogTailReader:
         """With the backlog drained, commits landing one at a time are
         served one per poll (commit-aligned micro-batches); a BURST of
         late commits drains one per poll too — monotone throughout."""
-        import json
-
         from pyspark.sql import functions as F
 
         from etl_8x8_spark.sources.txn_log_stream import TxnLogTailReader
@@ -340,8 +302,7 @@ class TestTxnLogTailReader:
                 F.col("id").alias("o_orderkey"),
                 (F.col("id") * 1.0).alias("o_totalprice"),
             ).write.parquet(os.path.join(base, d))
-            with open(os.path.join(log_dir, f"{v:05d}.json"), "w") as fh:
-                json.dump({"adds": [d], "removes": []}, fh)
+            txn_log.commit(log_dir, v, {"adds": [d], "removes": []})
 
         land(0)
         r = TxnLogTailReader({"path": base})
@@ -440,8 +401,6 @@ class TestTxnLogTailRestart:
         input (recentProgress numInputRows) is exactly the new
         commits' rows — nothing re-served; and the sink holds every
         version exactly once — nothing skipped."""
-        import json
-
         from pyspark.sql import functions as F
 
         from etl_8x8_spark.sources.txn_log_stream import (
@@ -458,10 +417,7 @@ class TestTxnLogTailRestart:
                 (F.col("id") + version * 1000).alias("o_orderkey"),
                 (F.col("id") * 1.5).alias("o_totalprice"),
             ).write.parquet(os.path.join(base, d))
-            tmp = os.path.join(log_dir, f"{version:05d}.json.tmp")
-            with open(tmp, "w") as fh:
-                json.dump({"adds": [d], "removes": []}, fh)
-            os.rename(tmp, os.path.join(log_dir, f"{version:05d}.json"))
+            txn_log.commit(log_dir, version, {"adds": [d], "removes": []})
 
         for v, n in ((0, 10), (1, 20), (2, 30)):
             land_commit(v, n)
@@ -514,8 +470,6 @@ class TestTxnLogRestore:
         live-set symmetric difference, and the 'bad' intermediate
         versions remain queryable afterward (history preserved, not
         erased)."""
-        import json
-
         from pyspark.sql import functions as F
 
         from etl_8x8_spark.sources.readers import scratch_dir
@@ -528,7 +482,7 @@ class TestTxnLogRestore:
             scratch_dir(), f"txnrestore_{_src_tag(sf_dir, 'orders')}"
         )
         log_dir = os.path.join(base, "_log")
-        rec3 = json.load(open(os.path.join(log_dir, "00003.json")))
+        rec3 = txn_log.read(log_dir, 3)
         assert rec3 == {"adds": ["fileA"], "removes": ["fileB", "fileC"]}
         # metadata-only: fileA predates the restore commit record
         a_mtime = os.stat(

@@ -17,6 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_8x8_spark.registry import all_queries
+from etl_8x8_spark.sources import txn_log
 from etl_8x8_spark.sources.readers import load_table, scratch_dir
 
 
@@ -160,16 +161,23 @@ def test_column_mapping_drop_survives_in_file_not_in_read(spark, sf_dir):
     raw_f3 = spark.read.parquet(os.path.join(base, "f3"))
     assert raw_f3.columns == ["col_1", "col_2"]
     # the log's latest schema has no col_3 mapping: reads can't see it
-    import json
-
-    log_dir = os.path.join(base, "_log")
-    schema = []
-    for name in sorted(os.listdir(log_dir)):
-        if name.endswith(".json"):
-            rec = json.load(open(os.path.join(log_dir, name)))
-            if "schema" in rec:
-                schema = rec["schema"]
+    recs = txn_log.records(txn_log.log_of(base))
+    schema = [r["schema"] for _, r in recs if "schema" in r][-1]
     assert [e[1] for e in schema] == ["o_orderkey", "price"]
+
+
+def test_alter_and_dv_commits_add_no_data_files(spark, sf_dir, dv_table):
+    """The O(1)-ALTER and merge-on-read claims, counted on the log: the
+    column-mapping RENAME (v1) and DROP (v3) and the two DV DELETEs
+    (v2, v3) commit metadata only, and each log holds exactly 5
+    commits — the same at any scale factor."""
+    all_queries()["sink_txn_log_column_mapping"].builder(spark, sf_dir)
+    colmap = dict(txn_log.records(txn_log.log_of(_colmap_base(sf_dir))))
+    dv = dict(txn_log.records(dv_table[2]))
+    assert sorted(colmap) == sorted(dv) == [0, 1, 2, 3, 4]
+    assert [v for v, r in colmap.items() if not r["adds"]] == [1, 3]
+    assert [v for v, r in dv.items() if not r["adds"]] == [2, 3]
+    assert all(dv[v]["dv"] for v in (2, 3))
 
 
 # ---------------------------------------------------------------------------
@@ -284,10 +292,6 @@ def test_zorder_pruning_effective(spark, sf_dir, zorder_table):
     """The heart of the key: the quarter-box predicate intersects ALL
     8 pre-OPTIMIZE slices (mod-8 layout => every file spans the full
     range of both columns) but <= 3 of the 8 z-clustered units."""
-    import json
-
-    from etl_8x8_spark.sources.scans import txn_zorder_live_adds
-
     _, base = zorder_table
     log_dir = os.path.join(base, "_log")
     orders = load_table(spark, sf_dir, "orders")
@@ -303,12 +307,9 @@ def test_zorder_pruning_effective(spark, sf_dir, zorder_table):
             a for a in adds if a["cmin"] <= chi and a["kmin"] <= khi
         ]
 
-    rec0 = json.load(
-        open(os.path.join(log_dir, "00000.json"))
-    )
-    pre = rec0["adds"]
+    pre = txn_log.read(log_dir, 0)["adds"]
     assert len(pre) == 8 and len(kept(pre)) == 8  # no pruning possible
-    post = txn_zorder_live_adds(log_dir)
+    post = list(txn_log.live_adds(txn_log.records(log_dir)).values())
     assert len(post) == 8
     assert len(kept(post)) <= 3  # z-clustering makes the box local
 
@@ -316,11 +317,9 @@ def test_zorder_pruning_effective(spark, sf_dir, zorder_table):
 def test_zorder_optimize_preserves_state(spark, sf_dir, zorder_table):
     """OPTIMIZE rewrites layout, never content: the live set's full
     row count equals the source table's."""
-    from etl_8x8_spark.sources.scans import txn_zorder_live_adds
-
     _, base = zorder_table
-    live = txn_zorder_live_adds(os.path.join(base, "_log"))
-    total = sum(a["rows"] for a in live)
+    live = txn_log.live_adds(txn_log.records(txn_log.log_of(base)))
+    total = sum(a["rows"] for a in live.values())
     assert total == load_table(spark, sf_dir, "orders").count()
 
 
@@ -377,8 +376,6 @@ def part_table(spark, sf_dir):
 def test_partitioned_delete_and_prune(spark, sf_dir, part_table):
     """The metadata DELETE removed 3-MEDIUM from reads; the IN
     predicate then serves entirely from 2-HIGH's two live adds."""
-    from etl_8x8_spark.sources.scans import txn_partitioned_live_adds
-
     rows, base = part_table
     orders = load_table(spark, sf_dir, "orders")
     # result: only 2-HIGH survives the predicate ∩ delete
@@ -386,11 +383,12 @@ def test_partitioned_delete_and_prune(spark, sf_dir, part_table):
     assert rows[0].n == orders.filter(
         F.col("o_orderpriority") == "2-HIGH"
     ).count()
-    live = txn_partitioned_live_adds(os.path.join(base, "_log"))
+    live = txn_log.live_adds(txn_log.records(txn_log.log_of(base)))
     assert len(live) == 8  # 10 written, 2 metadata-deleted
     want = {"2-HIGH", "3-MEDIUM"}
     kept = [
-        a for a in live if a["partition"]["o_orderpriority"] in want
+        a for a in live.values()
+        if a["partition"]["o_orderpriority"] in want
     ]
     assert len(kept) == 2  # partition pruning: 2 dirs of 8 scanned
     assert all(
@@ -426,20 +424,14 @@ def test_stream_sink_exactly_once(spark, sf_dir):
     """The harness replays the final epoch with the same batch_id
     (inside the builder); the log must hold each epoch EXACTLY once
     and the folded table must equal the batch source."""
-    import json
-
     df = all_queries()["stream_txn_log_sink"].builder(spark, sf_dir)
     total = df.agg(F.sum("n_rows")).collect()[0][0]
     orders = load_table(spark, sf_dir, "orders")
     assert total == orders.count()
 
     base = _sink_base(sf_dir)
-    log_dir = os.path.join(base, "_log")
-    epochs = []
-    for name in sorted(os.listdir(log_dir)):
-        if name.endswith(".json"):
-            rec = json.load(open(os.path.join(log_dir, name)))
-            epochs.append(rec["epoch"])
+    recs = txn_log.records(txn_log.log_of(base))
+    epochs = [rec["epoch"] for _, rec in recs]
     assert len(epochs) == 4  # four micro-batches, one commit each
     assert len(set(epochs)) == 4  # the replayed epoch did NOT recommit
     # the replay's data write left an orphan attempt dir (VACUUM
@@ -483,12 +475,9 @@ def test_constraints_reject_then_accept(spark, sf_dir):
     assert row.n == n_even + n_clean
 
     base = _constraint_base(sf_dir)
-    log_dir = os.path.join(base, "_log")
-    commits = sorted(
-        n for n in os.listdir(log_dir) if n.endswith(".json")
-    )
-    assert commits == ["00000.json", "00001.json", "00002.json"]
-    rec1 = json.load(open(os.path.join(log_dir, "00001.json")))
+    log_dir = txn_log.log_of(base)
+    assert txn_log.versions(log_dir) == [0, 1, 2]
+    rec1 = txn_log.read(log_dir, 1)
     assert rec1["add_constraints"] == ["o_totalprice > 0"]
     audit = json.load(open(os.path.join(base, "_AUDIT.json")))
     assert audit["rejected_version"] == 2
@@ -533,11 +522,7 @@ def test_shallow_clone_zero_copy_and_divergence(spark, sf_dir):
     assert os.path.isdir(os.path.join(src_base, "half0"))
     assert os.path.isdir(os.path.join(src_base, "half1"))
     # clone v0 referenced the source's files across roots
-    import json
-
-    rec0 = json.load(
-        open(os.path.join(clone_base, "_log", "00000.json"))
-    )
+    rec0 = txn_log.read(txn_log.log_of(clone_base), 0)
     assert rec0["clone_of"] == src_base
     assert {a["root"] for a in rec0["adds"]} == {src_base}
 

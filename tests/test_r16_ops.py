@@ -3,8 +3,6 @@ hatch and the honest-timing invariants."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 SF = "/root/testdata/sf0.001"
@@ -12,9 +10,9 @@ SF = "/root/testdata/sf0.001"
 
 class TestCheckpointEscapeHatch:
     """functions/iterative.py (VERDICT r15 items 5/9): the bounded
-    loops persist per round by default; SPARK_GRAFT_CHECKPOINT_EVERY
-    makes every Nth round a lazy localCheckpoint. Results must be
-    identical either way — only the plan boundary moves."""
+    loops persist per round by default; ``CHECKPOINT_EVERY`` makes
+    every Nth round a lazy localCheckpoint. Results must be identical
+    either way — only the plan boundary moves."""
 
     def _rows(self, spark, name):
         from etl_8x8_spark.registry import all_queries
@@ -29,33 +27,23 @@ class TestCheckpointEscapeHatch:
     def test_checkpoint_every_round_same_result(
         self, spark, name, monkeypatch
     ):
+        from etl_8x8_spark.functions import iterative
+
         base = self._rows(spark, name)
         spark.catalog.clearCache()
-        monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_EVERY", "1")
+        monkeypatch.setattr(iterative, "CHECKPOINT_EVERY", 1)
         hatch = self._rows(spark, name)
         spark.catalog.clearCache()
         assert base == hatch
-
-    def test_cadence_parsing(self, monkeypatch):
-        from etl_8x8_spark.functions.iterative import (
-            DEFAULT_CHECKPOINT_EVERY,
-            checkpoint_every,
-        )
-
-        monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_EVERY", raising=False)
-        assert checkpoint_every() == DEFAULT_CHECKPOINT_EVERY
-        monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_EVERY", "3")
-        assert checkpoint_every() == 3
-        monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_EVERY", "0")
-        assert checkpoint_every() == 0
 
     def test_checkpoint_truncates_lineage(self, spark, monkeypatch):
         """With cadence 1 every round is a localCheckpoint: the
         terminal plan must contain a scanned checkpoint RDD instead of
         a persisted InMemoryRelation chain."""
+        from etl_8x8_spark.functions import iterative
         from etl_8x8_spark.registry import all_queries
 
-        monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_EVERY", "1")
+        monkeypatch.setattr(iterative, "CHECKPOINT_EVERY", 1)
         df = all_queries()["graph_bfs_layers"].builder(spark, SF)
         df.collect()
         plan = df._jdf.queryExecution().optimizedPlan().toString()
@@ -105,3 +93,17 @@ class TestInt64GuardsNullTransparent:
         g = _guard_product_fits_int64(big, "a", "b", "t")
         with pytest.raises(Exception, match="2\\^62"):
             g.collect()
+
+
+class TestPinSessionConfsQuiet:
+    def test_repeat_pin_sets_nothing(self, spark, monkeypatch):
+        """Every load_table pins the session confs. Once they hold,
+        a repeat pin must set nothing: setting the deprecated
+        escapedStringLiterals logs a WARN on every call."""
+        from etl_8x8_spark.sources.readers import pin_session_confs
+
+        pin_session_confs(spark)
+        calls = []
+        monkeypatch.setattr(spark.conf, "set", lambda *a: calls.append(a))
+        pin_session_confs(spark)
+        assert calls == []
