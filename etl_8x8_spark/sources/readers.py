@@ -158,3 +158,8 @@ def scratch_dir() -> str:
     )
     os.makedirs(d, exist_ok=True)
     return d
+
+
+def _sf_tag(sf_dir: str) -> str:
+    """The sf directory's name: keys per-sf scratch dirs."""
+    return os.path.basename(sf_dir.rstrip("/")) or "sf"

@@ -21,6 +21,7 @@ from etl_8x8_spark.functions.parity import dsum, oracle_dsum
 from etl_8x8_spark.registry import register
 from etl_8x8_spark.sources import txn_log
 from etl_8x8_spark.sources.readers import (
+    _sf_tag,
     load_table,
     read_json_lines,
     scratch_dir,
@@ -29,10 +30,6 @@ from etl_8x8_spark.sources.sinks import (
     overwrite_partitions,
     write_parquet_partitioned,
 )
-
-
-def _sf_tag(sf_dir: str) -> str:
-    return os.path.basename(sf_dir.rstrip("/")) or "sf"
 
 
 def _src_tag(sf_dir: str, table: str) -> str:

@@ -1,14 +1,32 @@
 """Structured Streaming operators (SURVEY.md §2b "Streaming",
 generalizing R15's TTL result cache + the ``events`` table).
 
-Each key consumes ``events`` as a file stream (micros-converted
-scratch copy — the nanos parquet can't be streamed directly), runs a
-streaming transformation to completion with an ``availableNow``
-trigger, and returns the materialized result — so the same DataFrame
-code is exercised through the streaming engine and remains
-batch-checkable: four keys have exact DuckDB oracles; the
-watermark/late-data key is rows-only by nature (state semantics have
-no batch twin) and is pinned down in tests/test_streaming.py instead.
+Every key runs a streaming transformation to completion and returns
+the materialized result, so the same DataFrame code goes through the
+streaming engine and stays batch-checkable: every key has an exact
+DuckDB value-hash oracle. The keys use one of four drives:
+
+- ``run_to_table``: stateless and complete-mode keys read a
+  micros-timestamp scratch copy of ``events`` (the nanos parquet
+  cannot be streamed directly) with an ``availableNow`` trigger into a
+  memory sink.
+- ``drain_to_table``: custom Python stream sources, drained with
+  ``processAllAvailable`` into a memory sink.
+- ``foreachBatch``: the two upsert/exactly-once sink keys drive their
+  own sink.
+- ``run_phases``: keys whose output depends on state carried across
+  micro-batches (cache hits, late-data drops, event-time timers,
+  outer-join nulls). This is the LESSONS #38 sentinel-phase idiom.
+  Fresh ``in/out/ckpt`` dirs; each phase appends one input file and
+  runs one checkpointed ``availableNow`` query into a parquet sink, so
+  a phase is one micro-batch and the watermark moves only between
+  phases. The last phases are far-future sentinel rows
+  (``sentinel_events``, user_id -1) that push the watermark past every
+  real window, timer and join bound, so append-mode state is flushed
+  completely. Two of them, because eviction in batch N uses the
+  watermark computed at the end of batch N-1. The emitted rows then
+  equal a plain batch query, which is the oracle; each builder drops
+  the sentinel rows on its final read.
 
 Scale notes: tumbling/sliding/session aggregations carry watermarks in
 production so state is bounded; ``complete`` output mode here is the
@@ -23,7 +41,10 @@ from __future__ import annotations
 
 import itertools
 import os
+import shutil
 import sys
+from datetime import datetime
+from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,7 +52,7 @@ from pyspark.sql import functions as F
 from etl_8x8_spark.functions.parity import dsum, oracle_dsum
 from etl_8x8_spark.registry import register
 from etl_8x8_spark.sources import txn_log
-from etl_8x8_spark.sources.readers import load_table, scratch_dir
+from etl_8x8_spark.sources.readers import _sf_tag, load_table, scratch_dir
 
 _EVENTS_STREAM_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string,"
@@ -39,10 +60,6 @@ _EVENTS_STREAM_SCHEMA = (
 )
 
 _counter = itertools.count()
-
-
-def _sf_tag(sf_dir: str) -> str:
-    return os.path.basename(sf_dir.rstrip("/")) or "sf"
 
 
 def events_stream_dir(spark: SparkSession, sf_dir: str, copies: int = 1) -> str:
@@ -87,6 +104,97 @@ def run_to_table(sdf: DataFrame, mode: str, prefix: str) -> DataFrame:
     )
     q.awaitTermination()
     return sdf.sparkSession.table(name)
+
+
+def drain_to_table(sdf: DataFrame, mode: str, prefix: str) -> DataFrame:
+    """Drive a streaming DataFrame into a memory sink until its source
+    stops advancing, then stop the query: the finite-backfill drive
+    for custom stream readers (``availableNow`` consumes a single page
+    from a simple stream reader; ``processAllAvailable`` drains them
+    all)."""
+    name = f"{prefix}_{next(_counter)}"
+    q = sdf.writeStream.format("memory").queryName(name).outputMode(mode).start()
+    q.processAllAvailable()
+    q.stop()
+    q.awaitTermination()
+    return sdf.sparkSession.table(name)
+
+
+def run_phases(
+    spark: SparkSession,
+    name: str,
+    sf_dir: str,
+    phases: Iterable[DataFrame],
+    build: Callable[[Callable[[], DataFrame]], DataFrame],
+) -> DataFrame:
+    """Run a stateful stream as checkpointed phases (the module
+    docstring's sentinel-phase idiom) and return everything it emitted.
+
+    ``<scratch>/<name>_<sf tag>/{in,out,ckpt}`` start empty. Each
+    events-shaped phase DataFrame is appended to ``in/`` as one file;
+    then ``build(read)`` turns the stream into the operator's output,
+    which runs to the parquet sink with ``availableNow``. ``read``
+    returns a fresh file stream over ``in/`` (a self-join reads it
+    twice). The checkpoint carries state and watermark from phase to
+    phase. A failed run removes its dirs, so no partial output is left
+    behind.
+    """
+    base = os.path.join(scratch_dir(), f"{name}_{_sf_tag(sf_dir)}")
+    shutil.rmtree(base, ignore_errors=True)
+    in_dir = os.path.join(base, "in")
+    out_dir = os.path.join(base, "out")
+
+    def read() -> DataFrame:
+        return spark.readStream.schema(_EVENTS_STREAM_SCHEMA).parquet(in_dir)
+
+    try:
+        for df in phases:
+            df.coalesce(1).write.mode("append").parquet(in_dir)
+            (
+                build(read)
+                .writeStream.format("parquet")
+                .option("path", out_dir)
+                .option("checkpointLocation", os.path.join(base, "ckpt"))
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
+    except Exception:
+        shutil.rmtree(base, ignore_errors=True)
+        raise
+    return spark.read.parquet(out_dir)
+
+
+def sentinel_events(
+    spark: SparkSession,
+    max_ts: datetime,
+    days: int,
+    event_id: int,
+    event_type: str = "sentinel",
+) -> DataFrame:
+    """One events-shaped flush row ``days`` past ``max_ts`` (user_id
+    -1, so builders can filter it out of the final read)."""
+    return spark.range(1).select(
+        F.lit(event_id).cast("long").alias("event_id"),
+        (F.lit(max_ts) + F.expr(f"INTERVAL {days} DAYS")).alias("ts"),
+        F.lit(-1).cast("long").alias("user_id"),
+        F.lit(event_type).alias("event_type"),
+        F.lit(0.0).alias("value"),
+        F.lit(None).cast("string").alias("props"),
+    )
+
+
+def event_time_halves(events: DataFrame) -> list[DataFrame]:
+    """Split ``events`` at the median ``unix_micros(ts)``: the second
+    half is strictly later, so the phase boundary is a real watermark
+    advance. Relative error 0 makes the quantile exact, the value
+    ``quantile_disc`` gives the stream_tws_ttl_cache oracle."""
+    t = F.expr("unix_micros(ts)")
+    median = events.select(t.cast("double").alias("t")).approxQuantile(
+        "t", [0.5], 0.0
+    )[0]
+    return [events.filter(t <= median), events.filter(t > median)]
 
 
 @register(
@@ -294,41 +402,22 @@ def stream_state_ttl_cache(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     events = load_table(spark, sf_dir, "events")
-    base = os.path.join(scratch_dir(), f"state_cache_{_sf_tag(sf_dir)}")
-    in_dir = os.path.join(base, "in")
-    out_dir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    for d in (out_dir, ckpt, in_dir):
-        if os.path.exists(d):
-            import shutil
-
-            shutil.rmtree(d)
-
     median = events.approxQuantile("event_id", [0.5], 0.0)[0]
 
-    def run_phase(df: DataFrame) -> None:
-        df.write.mode("append").parquet(in_dir)
-        s = spark.readStream.schema(_EVENTS_STREAM_SCHEMA).parquet(in_dir)
-        counted = s.groupBy("user_id").applyInPandasWithState(
+    def build(read: Callable[[], DataFrame]) -> DataFrame:
+        return read().groupBy("user_id").applyInPandasWithState(
             _cache_counter_fn,
             "user_id long, n_new long, n_total long, was_cached boolean",
             "total long",
             "append",
             GroupStateTimeout.NoTimeout,
         )
-        q = (
-            counted.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
-    run_phase(events.filter(F.col("event_id") <= median))
-    run_phase(events.filter(F.col("event_id") > median))
-    return spark.read.parquet(out_dir)
+    phases = [
+        events.filter(F.col("event_id") <= median),
+        events.filter(F.col("event_id") > median),
+    ]
+    return run_phases(spark, "state_cache", sf_dir, phases, build)
 
 
 @register(
@@ -354,11 +443,8 @@ def stream_watermark_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
       with ts < max(real ts) − 3 h, so every copy's 1 h window end is
       provably ≤ the phase-1 watermark ⇒ ALL are dropped before
       aggregation. This is the late-data semantics under test.
-    - phases 3+4: one far-future sentinel row each (+30 d, +60 d,
-      event_type 'sentinel') advance the watermark past every real
-      window end, flushing append-mode state completely (two phases
-      because eviction in batch N uses the watermark computed at the
-      end of batch N−1).
+    - phases 3+4: the two sentinel flushes (+30 d, +60 d, event_type
+      'sentinel') push the watermark past every real window end.
 
     Emitted real windows therefore equal the BATCH tumbling aggregate
     over `events` exactly — the oracle shows the late copies never
@@ -369,17 +455,7 @@ def stream_watermark_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a map-side filter against the broadcast watermark — this is
     what keeps a 100 TB/day windowed aggregation's state finite.
     """
-    import shutil
-
     events = load_table(spark, sf_dir, "events")
-    base = os.path.join(scratch_dir(), f"late_demo_{_sf_tag(sf_dir)}")
-    in_dir = os.path.join(base, "in")
-    out_dir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    for d in (out_dir, ckpt, in_dir):
-        if os.path.exists(d):
-            shutil.rmtree(d)
-
     max_ts = events.agg(F.max("ts")).first()[0]
     # provably-late copies: old enough that window_end <= phase-1
     # watermark (max_ts - 10 min) with hours of margin
@@ -392,21 +468,10 @@ def stream_watermark_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("event_id", F.col("event_id") + F.lit(10_000_000))
     )
 
-    def sentinel(days: int) -> DataFrame:
-        return spark.range(1).select(
-            F.lit(10_000_000_000 + days).alias("event_id"),
-            (F.lit(max_ts) + F.expr(f"INTERVAL {days} DAYS")).alias("ts"),
-            F.lit(-1).cast("long").alias("user_id"),
-            F.lit("sentinel").alias("event_type"),
-            F.lit(0.0).alias("value"),
-            F.lit(None).cast("string").alias("props"),
-        )
-
-    def run_phase(df: DataFrame) -> None:
-        df.coalesce(1).write.mode("append").parquet(in_dir)
-        s = spark.readStream.schema(_EVENTS_STREAM_SCHEMA).parquet(in_dir)
-        agg = (
-            s.withWatermark("ts", "10 minutes")
+    def build(read: Callable[[], DataFrame]) -> DataFrame:
+        return (
+            read()
+            .withWatermark("ts", "10 minutes")
             .groupBy(F.window("ts", "1 hour"), "event_type")
             .agg(F.count("*").alias("n_events"))
             .select(
@@ -415,21 +480,11 @@ def stream_watermark_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_events",
             )
         )
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
-    run_phase(events)
-    run_phase(late)
-    run_phase(sentinel(30))
-    run_phase(sentinel(60))
-    return spark.read.parquet(out_dir).filter(
+    phases = [events, late] + [
+        sentinel_events(spark, max_ts, d, 10_000_000_000 + d) for d in (30, 60)
+    ]
+    return run_phases(spark, "late_demo", sf_dir, phases, build).filter(
         F.col("event_type") != "sentinel"
     )
 
@@ -527,8 +582,6 @@ def stream_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     its touched partitions (the streaming twin of
     ``sink_partition_overwrite``).
     """
-    import shutil
-
     from etl_8x8_spark.functions.parity import DEC
 
     src = events_stream_dir(spark, sf_dir, copies=2)
@@ -629,20 +682,7 @@ def stream_custom_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load()
     )
     out = s.filter(F.col("shard") != 3).select("id", "name", "shard")
-    # availableNow consumes a single page from a simple stream reader;
-    # processAllAvailable drains until the offset stops advancing (4
-    # pages), then the query stops — the finite-backfill drive pattern.
-    name = f"stream_custom_{next(_counter)}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    return spark.table(name)
+    return drain_to_table(out, "append", "stream_custom")
 
 
 @register(
@@ -867,39 +907,12 @@ def stream_session_window_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     why this rides ``applyInPandasWithState`` rather than Spark 4's
     ``transformWithStateInPandas`` in this environment.
     """
-    import shutil
-
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    events = load_table(spark, sf_dir, "events")
-    base = os.path.join(scratch_dir(), f"sess_state_{_sf_tag(sf_dir)}")
-    in_dir = os.path.join(base, "in")
-    out_dir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    for d in (out_dir, ckpt, in_dir):
-        if os.path.exists(d):
-            shutil.rmtree(d)
-
-    split_us = events.selectExpr(
-        "cast(unix_micros(ts) as double) AS t"
-    ).approxQuantile("t", [0.5], 0.0)[0]
-    max_ts = events.agg(F.max("ts")).first()[0]
-
-    def sentinel(days: int) -> DataFrame:
-        return spark.range(1).select(
-            F.lit(10_000_000_000 + days).alias("event_id"),
-            (F.lit(max_ts) + F.expr(f"INTERVAL {days} DAYS")).alias("ts"),
-            F.lit(-1).cast("long").alias("user_id"),
-            F.lit("sentinel").alias("event_type"),
-            F.lit(0.0).alias("value"),
-            F.lit(None).cast("string").alias("props"),
-        )
-
-    def run_phase(df: DataFrame) -> None:
-        df.coalesce(1).write.mode("append").parquet(in_dir)
-        s = spark.readStream.schema(_EVENTS_STREAM_SCHEMA).parquet(in_dir)
-        sessions = (
-            s.withWatermark("ts", "1 hour")
+    def build(read: Callable[[], DataFrame]) -> DataFrame:
+        return (
+            read()
+            .withWatermark("ts", "1 hour")
             .groupBy("user_id")
             .applyInPandasWithState(
                 _session_window_fn,
@@ -910,21 +923,15 @@ def stream_session_window_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                 GroupStateTimeout.EventTimeTimeout,
             )
         )
-        q = (
-            sessions.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
-    run_phase(events.filter(F.expr("unix_micros(ts)") <= split_us))
-    run_phase(events.filter(F.expr("unix_micros(ts)") > split_us))
-    run_phase(sentinel(30))
-    run_phase(sentinel(60))
-    return spark.read.parquet(out_dir).filter(F.col("user_id") >= 0)
+    events = load_table(spark, sf_dir, "events")
+    max_ts = events.agg(F.max("ts")).first()[0]
+    phases = event_time_halves(events) + [
+        sentinel_events(spark, max_ts, d, 10_000_000_000 + d) for d in (30, 60)
+    ]
+    return run_phases(spark, "sess_state", sf_dir, phases, build).filter(
+        F.col("user_id") >= 0
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -977,8 +984,6 @@ def _wire_tws_env(spark: SparkSession, pb_dir: str) -> None:
     (TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK, runtime_version.py)
     for a 1-minor-version lag (gencode 6.33 vs runtime 6.32) that is
     wire-compatible."""
-    import sys
-
     for env in (spark.sparkContext.environment, os.environ):
         if pb_dir:
             cur = env.get("PYTHONPATH", "")
@@ -1069,9 +1074,63 @@ class _TwsSessionProcessor:
         pass
 
 
+def _tws_processor(spark: SparkSession, mixin: type) -> type | None:
+    """The ``StatefulProcessor`` subclass of ``mixin``, with the Python
+    workers wired for ``google.protobuf``; None when no protobuf
+    runtime can be found (the caller falls back to its
+    ``applyInPandasWithState`` twin). Subclassing at call time keeps
+    this module importable where the TWS APIs are not."""
+    pb_dir = find_protobuf_pythonpath()
+    if pb_dir is None:
+        return None
+    _wire_tws_env(spark, pb_dir)
+
+    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
+
+    return type(mixin.__name__.lstrip("_"), (mixin, StatefulProcessor), {})
+
+
+_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 _ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
+
+
+def run_tws_phases(
+    spark: SparkSession,
+    name: str,
+    sf_dir: str,
+    phases: Iterable[DataFrame],
+    build: Callable[[Callable[[], DataFrame]], DataFrame],
+    twin: Callable[[SparkSession, str], DataFrame],
+) -> DataFrame:
+    """``run_phases`` for a ``transformWithStateInPandas`` stream: TWS
+    needs a state store with column families, so the session's
+    provider is RocksDB for this run only and restored afterwards.
+
+    TWS worker boot can still fail on exotic hosts (protobuf skew
+    beyond the version-check bypass, missing rocksdb jni). Then the
+    key falls back to ``twin``, its ``applyInPandasWithState`` form,
+    rather than go red. The failure is logged, so a real processor bug
+    on a protobuf-capable host stays visible, and the twin runs only
+    after the restore, on the session's default state store.
+    """
+    prev = spark.conf.get(_PROVIDER_CONF, None)
+    spark.conf.set(_PROVIDER_CONF, _ROCKSDB_PROVIDER)
+    try:
+        return run_phases(spark, name, sf_dir, phases, build)
+    except Exception as exc:
+        print(
+            f"{name}: TWS path failed, falling back to "
+            f"applyInPandasWithState twin: {exc!r}",
+            file=sys.stderr,
+        )
+    finally:
+        if prev is None:
+            spark.conf.unset(_PROVIDER_CONF)
+        else:
+            spark.conf.set(_PROVIDER_CONF, prev)
+    return twin(spark, sf_dir)
 
 
 @register("stream_session_window_tws", oracle=_SESSION_STATE_ORACLE)
@@ -1097,50 +1156,14 @@ def stream_session_window_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     timer row in RocksDB, sharded by key; append output; watermark
     bounds state and late input exactly as in the predecessor.
     """
-    import shutil
-
-    pb_dir = find_protobuf_pythonpath()
-    if pb_dir is None:
+    proc_cls = _tws_processor(spark, _TwsSessionProcessor)
+    if proc_cls is None:
         return stream_session_window_state(spark, sf_dir)
-    _wire_tws_env(spark, pb_dir)
 
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    # subclass at call time so importing this module never requires
-    # the streaming APIs to be loadable
-    proc_cls = type(
-        "TwsSessionProcessor", (_TwsSessionProcessor, StatefulProcessor), {}
-    )
-
-    events = load_table(spark, sf_dir, "events")
-    base = os.path.join(scratch_dir(), f"sess_tws_{_sf_tag(sf_dir)}")
-    in_dir = os.path.join(base, "in")
-    out_dir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    for d in (out_dir, ckpt, in_dir):
-        if os.path.exists(d):
-            shutil.rmtree(d)
-
-    split_us = events.selectExpr(
-        "cast(unix_micros(ts) as double) AS t"
-    ).approxQuantile("t", [0.5], 0.0)[0]
-    max_ts = events.agg(F.max("ts")).first()[0]
-
-    def sentinel(days: int) -> DataFrame:
-        return spark.range(1).select(
-            F.lit(10_000_000_000 + days).alias("event_id"),
-            (F.lit(max_ts) + F.expr(f"INTERVAL {days} DAYS")).alias("ts"),
-            F.lit(-1).cast("long").alias("user_id"),
-            F.lit("sentinel").alias("event_type"),
-            F.lit(0.0).alias("value"),
-            F.lit(None).cast("string").alias("props"),
-        )
-
-    def run_phase(df: DataFrame) -> None:
-        df.coalesce(1).write.mode("append").parquet(in_dir)
-        s = spark.readStream.schema(_EVENTS_STREAM_SCHEMA).parquet(in_dir)
-        sessions = (
-            s.withWatermark("ts", "1 hour")
+    def build(read: Callable[[], DataFrame]) -> DataFrame:
+        return (
+            read()
+            .withWatermark("ts", "1 hour")
             .groupBy("user_id")
             .transformWithStateInPandas(
                 proc_cls(),
@@ -1152,55 +1175,15 @@ def stream_session_window_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
                 timeMode="EventTime",
             )
         )
-        q = (
-            sessions.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER
-    )
-    fallback = False
-    try:
-        run_phase(events.filter(F.expr("unix_micros(ts)") <= split_us))
-        run_phase(events.filter(F.expr("unix_micros(ts)") > split_us))
-        run_phase(sentinel(30))
-        run_phase(sentinel(60))
-    except Exception as exc:
-        # TWS worker boot can still fail on exotic hosts (protobuf
-        # skew beyond the bypass, missing rocksdb jni) — fall back to
-        # the applyInPandasWithState twin rather than go red. Log the
-        # activation so a real processor bug on a protobuf-capable
-        # host is visible, not silently masked.
-        print(
-            "stream_session_window_tws: TWS path failed, falling back to "
-            f"applyInPandasWithState twin: {exc!r}",
-            file=sys.stderr,
-        )
-        for d in (out_dir, ckpt, in_dir):
-            if os.path.exists(d):
-                shutil.rmtree(d)
-        fallback = True
-    finally:
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-    if fallback:
-        # invoked only after the provider conf is restored, so the twin
-        # runs with the session's default state store, not RocksDB
-        return stream_session_window_state(spark, sf_dir)
-    return spark.read.parquet(out_dir).filter(F.col("user_id") >= 0)
+    events = load_table(spark, sf_dir, "events")
+    max_ts = events.agg(F.max("ts")).first()[0]
+    phases = event_time_halves(events) + [
+        sentinel_events(spark, max_ts, d, 10_000_000_000 + d) for d in (30, 60)
+    ]
+    return run_tws_phases(
+        spark, "sess_tws", sf_dir, phases, build, stream_session_window_state
+    ).filter(F.col("user_id") >= 0)
 
 
 # ---------------------------------------------------------------------------
@@ -1246,39 +1229,10 @@ def stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     never match a future click and is dropped) — the property that
     makes a 100 TB/day outer attribution join runnable at all.
     """
-    import shutil
-
-    events = load_table(spark, sf_dir, "events")
-    base = os.path.join(scratch_dir(), f"join_outer_{_sf_tag(sf_dir)}")
-    in_dir = os.path.join(base, "in")
-    out_dir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    for d in (out_dir, ckpt, in_dir):
-        if os.path.exists(d):
-            shutil.rmtree(d)
-
-    max_ts = events.agg(F.max("ts")).first()[0]
-
-    def sentinels(days: int) -> DataFrame:
-        rows = []
-        for i, etype in enumerate(("click", "purchase")):
-            rows.append((20_000_000_000 + 10 * days + i, etype))
-        return spark.createDataFrame(
-            rows, "event_id long, event_type string"
-        ).select(
-            "event_id",
-            (F.lit(max_ts) + F.expr(f"INTERVAL {days} DAYS")).alias("ts"),
-            F.lit(-1).cast("long").alias("user_id"),
-            "event_type",
-            F.lit(0.0).alias("value"),
-            F.lit(None).cast("string").alias("props"),
-        )
-
-    def run_phase(df: DataFrame) -> None:
-        df.coalesce(1).write.mode("append").parquet(in_dir)
-        s = spark.readStream.schema(_EVENTS_STREAM_SCHEMA).parquet(in_dir)
+    def build(read: Callable[[], DataFrame]) -> DataFrame:
         clicks = (
-            s.filter(F.col("event_type") == "click")
+            read()
+            .filter(F.col("event_type") == "click")
             .select(
                 F.col("event_id").alias("click_id"),
                 F.col("user_id").alias("c_user_id"),
@@ -1286,9 +1240,9 @@ def stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .withWatermark("click_ts", "10 minutes")
         )
-        s2 = spark.readStream.schema(_EVENTS_STREAM_SCHEMA).parquet(in_dir)
         purchases = (
-            s2.filter(F.col("event_type") == "purchase")
+            read()
+            .filter(F.col("event_type") == "purchase")
             .select(
                 F.col("event_id").alias("purchase_id"),
                 F.col("user_id").alias("p_user_id"),
@@ -1296,7 +1250,7 @@ def stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .withWatermark("purchase_ts", "10 minutes")
         )
-        joined = clicks.join(
+        return clicks.join(
             purchases,
             (F.col("c_user_id") == F.col("p_user_id"))
             & (F.col("purchase_ts") >= F.col("click_ts"))
@@ -1314,20 +1268,24 @@ def stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
                 - F.unix_micros(F.col("click_ts"))
             ).alias("lag_us"),
         )
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
-    run_phase(events.filter(F.col("event_type").isin("click", "purchase")))
-    run_phase(sentinels(30))
-    run_phase(sentinels(60))
-    return spark.read.parquet(out_dir).filter(F.col("user_id") >= 0)
+    events = load_table(spark, sf_dir, "events")
+    max_ts = events.agg(F.max("ts")).first()[0]
+
+    def flush(days: int) -> DataFrame:
+        event_id = 20_000_000_000 + 10 * days
+        return sentinel_events(spark, max_ts, days, event_id, "click").unionByName(
+            sentinel_events(spark, max_ts, days, event_id + 1, "purchase")
+        )
+
+    phases = [
+        events.filter(F.col("event_type").isin("click", "purchase")),
+        flush(30),
+        flush(60),
+    ]
+    return run_phases(spark, "join_outer", sf_dir, phases, build).filter(
+        F.col("user_id") >= 0
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1472,48 +1430,14 @@ def stream_tws_ttl_cache(spark: SparkSession, sf_dir: str) -> DataFrame:
     TTL rides an explicit event-time timer rather than
     ttlDurationMs/ProcessingTime in this build.
     """
-    import shutil
-
-    pb_dir = find_protobuf_pythonpath()
-    if pb_dir is None:
+    proc_cls = _tws_processor(spark, _TwsCacheProcessor)
+    if proc_cls is None:
         return stream_state_ttl_cache(spark, sf_dir)
-    _wire_tws_env(spark, pb_dir)
 
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    proc_cls = type(
-        "TwsCacheProcessor", (_TwsCacheProcessor, StatefulProcessor), {}
-    )
-
-    events = load_table(spark, sf_dir, "events")
-    base = os.path.join(scratch_dir(), f"tws_cache_{_sf_tag(sf_dir)}")
-    in_dir = os.path.join(base, "in")
-    out_dir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    for d in (out_dir, ckpt, in_dir):
-        if os.path.exists(d):
-            shutil.rmtree(d)
-
-    split_us = events.selectExpr(
-        "cast(unix_micros(ts) as double) AS t"
-    ).approxQuantile("t", [0.5], 0.0)[0]
-    max_ts = events.agg(F.max("ts")).first()[0]
-
-    def sentinel(days: int) -> DataFrame:
-        return spark.range(1).select(
-            F.lit(30_000_000_000 + days).alias("event_id"),
-            (F.lit(max_ts) + F.expr(f"INTERVAL {days} DAYS")).alias("ts"),
-            F.lit(-1).cast("long").alias("user_id"),
-            F.lit("sentinel").alias("event_type"),
-            F.lit(0.0).alias("value"),
-            F.lit(None).cast("string").alias("props"),
-        )
-
-    def run_phase(df: DataFrame) -> None:
-        df.coalesce(1).write.mode("append").parquet(in_dir)
-        s = spark.readStream.schema(_EVENTS_STREAM_SCHEMA).parquet(in_dir)
-        counted = (
-            s.withWatermark("ts", "1 hour")
+    def build(read: Callable[[], DataFrame]) -> DataFrame:
+        return (
+            read()
+            .withWatermark("ts", "1 hour")
             .groupBy("user_id")
             .transformWithStateInPandas(
                 proc_cls(),
@@ -1525,49 +1449,15 @@ def stream_tws_ttl_cache(spark: SparkSession, sf_dir: str) -> DataFrame:
                 timeMode="EventTime",
             )
         )
-        q = (
-            counted.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER
-    )
-    fallback = False
-    try:
-        run_phase(events.filter(F.expr("unix_micros(ts)") <= split_us))
-        run_phase(events.filter(F.expr("unix_micros(ts)") > split_us))
-        run_phase(sentinel(60))
-        run_phase(sentinel(90))
-    except Exception as exc:
-        print(
-            "stream_tws_ttl_cache: TWS path failed, falling back to "
-            f"applyInPandasWithState twin: {exc!r}",
-            file=sys.stderr,
-        )
-        for d in (out_dir, ckpt, in_dir):
-            if os.path.exists(d):
-                shutil.rmtree(d)
-        fallback = True
-    finally:
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-    if fallback:
-        # after provider restore, so the twin runs on the default store
-        return stream_state_ttl_cache(spark, sf_dir)
-    return spark.read.parquet(out_dir).filter(F.col("user_id") >= 0)
+    events = load_table(spark, sf_dir, "events")
+    max_ts = events.agg(F.max("ts")).first()[0]
+    phases = event_time_halves(events) + [
+        sentinel_events(spark, max_ts, d, 30_000_000_000 + d) for d in (60, 90)
+    ]
+    return run_tws_phases(
+        spark, "tws_cache", sf_dir, phases, build, stream_state_ttl_cache
+    ).filter(F.col("user_id") >= 0)
 
 
 @register(
@@ -1655,17 +1545,7 @@ def stream_txn_log_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("n_rows"),
         dsum("o_totalprice", "sum_price"),
     )
-    name = f"stream_txntail_{next(_counter)}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination()
-    return spark.table(name).orderBy("version")
+    return drain_to_table(agg, "complete", "stream_txntail").orderBy("version")
 
 
 _TXN_STREAM_SINK_ORACLE = f"""

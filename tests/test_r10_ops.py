@@ -188,11 +188,8 @@ class TestTwsRegisteredOperator:
         """On THIS host protobuf is locatable, so the operator must
         have exercised transformWithStateInPandas, not the fallback:
         its own scratch output dir exists and holds the result."""
-        from etl_8x8_spark.sources.readers import scratch_dir
-        from etl_8x8_spark.streaming.streams import (
-            _sf_tag,
-            find_protobuf_pythonpath,
-        )
+        from etl_8x8_spark.sources.readers import _sf_tag, scratch_dir
+        from etl_8x8_spark.streaming.streams import find_protobuf_pythonpath
 
         assert find_protobuf_pythonpath() is not None
         out_dir = os.path.join(
@@ -532,8 +529,7 @@ class TestParquetBloomScan:
         import os
 
         from etl_8x8_spark.registry import all_queries
-        from etl_8x8_spark.sources.readers import scratch_dir
-        from etl_8x8_spark.sources.scans import _sf_tag
+        from etl_8x8_spark.sources.readers import _sf_tag, scratch_dir
 
         # ensure the fixture exists
         all_queries()["scan_parquet_bloom"].builder(spark, sf_dir).collect()

@@ -107,3 +107,59 @@ class TestPinSessionConfsQuiet:
         monkeypatch.setattr(spark.conf, "set", lambda *a: calls.append(a))
         pin_session_confs(spark)
         assert calls == []
+
+
+class TestWidenScanScanOnly:
+    """``readers.widen_scan`` reads the input's partition count while
+    the query is being built. On a plan with an exchange that can run
+    jobs, so every caller must hand it a scan-shaped plan. Each key
+    that calls it is built with the helper wrapped: the wrapped call
+    must run no job."""
+
+    KEYS = (
+        "dedup_substring_span",
+        "dedup_substring_scrub",
+        "dedup_incremental_substring",
+        "text_contamination_check",
+        "text_bigram_perplexity",
+        "text_quality_gopher",
+        "text_quality_classifier",
+        "pipeline_quality_gate",
+        "embed_pq_encode",
+        "sim_search_pq_adc",
+        "sim_search_ivfpq_topk",
+    )
+
+    def test_partition_count_runs_no_jobs(self, spark, monkeypatch, tmp_path):
+        from etl_8x8_spark.operators import dedup, similarity, text
+        from etl_8x8_spark.registry import all_queries
+        from etl_8x8_spark.sources import readers
+
+        sc = spark.sparkContext
+        jobs: dict[str, list[int]] = {k: [] for k in self.KEYS}
+        current = []
+
+        def counted(df):
+            key = current[-1]
+            group = f"widen_scan_{key}_{len(jobs[key])}"
+            sc.setJobGroup(group, group)
+            try:
+                # getNumPartitions is the helper's only eager step
+                out = readers.widen_scan(df)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs[key].append(len(sc.statusTracker().getJobIdsForGroup(group)))
+            return out
+
+        for mod in (dedup, similarity, text):
+            monkeypatch.setattr(mod, "widen_scan", counted)
+        # dedup_incremental_substring widens only while it builds its
+        # scratch index, so start from an empty scratch dir
+        monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+        queries = all_queries()
+        for key in self.KEYS:
+            current.append(key)
+            queries[key].builder(spark, SF)
+
+        assert [k for k, v in jobs.items() if not v] == []
+        assert {k: v for k, v in jobs.items() if any(v)} == {}

@@ -564,15 +564,13 @@ class TestSinkCompaction:
         import glob
         import os
 
-        from etl_8x8_spark.sources.readers import scratch_dir
+        from etl_8x8_spark.sources.readers import _sf_tag, scratch_dir
 
         rows = queries["sink_compaction"].builder(spark, sf_dir).collect()
         assert rows and all(r["n_orders"] > 0 for r in rows)
         # Match THIS sf's output dir exactly — a glob that settles for
         # any orders_compact_* dir can assert on a stale run at a
         # different SF.
-        from etl_8x8_spark.sources.scans import _sf_tag
-
         base = os.path.join(scratch_dir(), f"orders_compact_{_sf_tag(sf_dir)}")
         assert os.path.isdir(base), base
         assert glob.glob(os.path.join(base, "o_orderstatus=*"))

@@ -9,6 +9,8 @@ Usage:
     python tools/r15_profile.py [--sf DIR] [--cpus N] name [name ...]
     python tools/r15_profile.py --plans DIR name ...   # also dump
         explain("formatted") per query to DIR/<name>.txt
+    python tools/r15_profile.py --conf k=v [--conf k=v ...] name ...
+        # override session confs for the profiling session
 """
 
 from __future__ import annotations
@@ -29,6 +31,7 @@ def main() -> None:
     ap.add_argument("--cpus", default="32")
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--plans", default=None, help="dir for explain dumps")
+    ap.add_argument("--conf", action="append", default=[], help="k=v")
     args = ap.parse_args()
 
     from etl_8x8_spark.session import get_spark
@@ -37,7 +40,10 @@ def main() -> None:
 
     qs = entry_mod.queries()
     spark = get_spark(
-        "r15_profile", cpus=args.cpus, shuffle_partitions=int(args.cpus)
+        "r15_profile",
+        cpus=args.cpus,
+        shuffle_partitions=int(args.cpus),
+        extra_conf=dict(kv.split("=", 1) for kv in args.conf),
     )
     spark.range(1000).selectExpr("sum(id)").collect()
     sc = spark.sparkContext

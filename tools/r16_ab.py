@@ -4,8 +4,8 @@ The r16 adjudication harness (VERDICT r15 item 1): run each query
 under variant A and variant B of one session conf in ALTERNATING
 fresh sessions (A,B,A,B...) so slow host drift cancels across blocks,
 with the bench methodology inside each block (cold + two warm noop
-sink runs, best warm recorded, clearCache + dual-heap GC between
-queries).
+sink runs, best warm recorded, clearCache after every run outside the
+timed region, dual-heap GC between queries).
 
 Usage:
     python tools/r16_ab.py --conf spark.sql.join.preferSortMergeJoin \
@@ -60,6 +60,7 @@ def main() -> None:
                         df = qs[name](spark, args.sf)
                         df.write.format("noop").mode("overwrite").save()
                         per_run.append(round(time.time() - t0, 3))
+                        spark.catalog.clearCache()
                 except Exception as exc:  # noqa: BLE001
                     print(
                         json.dumps(
@@ -67,6 +68,7 @@ def main() -> None:
                         ),
                         flush=True,
                     )
+                    spark.catalog.clearCache()  # the failed run skipped its clear
                     continue
                 warm = min(per_run[1:])
                 results[name][val].append(warm)
@@ -84,7 +86,6 @@ def main() -> None:
                     ),
                     flush=True,
                 )
-                spark.catalog.clearCache()
                 gc.collect()
                 spark.sparkContext._jvm.System.gc()
             spark.stop()
