@@ -13,6 +13,8 @@ reference's boundary validation (R14, SURVEY.md §1.3).
 from __future__ import annotations
 
 import os
+import stat
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,6 +32,17 @@ _PINNED_CONFS = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.parser.escapedStringLiterals": "false",
 }
+
+#: unpinned confs that shape the schema Spark infers from a footer
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+#: session -> {(path, file version, inference confs): inferred StructType}
+_FOOTER_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -71,17 +84,55 @@ def pin_session_confs(spark: SparkSession) -> None:
             spark.conf.set(key, value)
 
 
+def _file_version(path: str) -> tuple:
+    """What changes whenever a table's bytes do: inode, size and
+    ``mtime_ns`` of a single-file table; name, size and ``mtime_ns`` of
+    every file under a directory table (a Spark overwrite replaces the
+    part files, which the directory's own stat would not show)."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_ino, st.st_size, st.st_mtime_ns)
+    files = []
+    for root, _, names in os.walk(path, followlinks=True):
+        for name in names:
+            f = os.path.join(root, name)
+            fst = os.stat(f)
+            files.append((os.path.relpath(f, path), fst.st_size, fst.st_mtime_ns))
+    return tuple(sorted(files))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the footer schema once
+    per session and file version, then reads with it."""
+    try:
+        version = _file_version(path)
+    except OSError:  # missing or not local: Spark resolves (and reports) it
+        return spark.read.parquet(path)
+    key = (path, version, tuple(spark.conf.get(c) for c in _INFERENCE_CONFS))
+    memo = _FOOTER_SCHEMAS.setdefault(spark, {})
+    if key in memo:
+        return spark.read.schema(memo[key]).parquet(path)
+    df = spark.read.parquet(path)
+    memo[key] = df.schema
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar scan of one engine table.
 
-    No explicit schema is passed for parquet: the footer is
-    authoritative and self-describing; forcing TABLE_SCHEMAS here would
-    disable vectorized-reader schema evolution. TABLE_SCHEMAS is used
-    for the schemaless formats (csv/json) and for validation in tests.
+    The parquet footer is authoritative: the schema is whatever Spark
+    infers from it, never TABLE_SCHEMAS (forcing that would disable
+    vectorized-reader schema evolution; it serves the schemaless
+    formats and test validation). Inference runs a Spark job, so it
+    runs once per session and file version: later calls read with the
+    exact StructType inferred then, and a rewritten file is inferred
+    again. The memo is per session, and keyed on the inference confs,
+    because session confs (``nanosAsLong``, ``inferTimestampNTZ``)
+    shape the inferred types.
     """
     pin_session_confs(spark)
+    df = _read_parquet(spark, table_path(sf_dir, name))
     if name == "events":
-        df = spark.read.parquet(table_path(sf_dir, name))
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, T.LongType):
             # TIMESTAMP(NANOS) parquet surfaces as nanos-since-epoch
@@ -102,7 +153,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return df.select(
             "event_id", "ts", "user_id", "event_type", "value", "props"
         )
-    return spark.read.parquet(table_path(sf_dir, name))
+    return df
 
 
 def widen_scan(df: DataFrame) -> DataFrame:

@@ -1211,7 +1211,8 @@ def view_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     merged = (
-        spark.read.parquet(path)
+        # the writer's schema: inferring it back would run a footer job
+        spark.read.schema(hist.schema).parquet(path)
         .unionByName(delta)
         .groupBy("o_orderstatus")
         .agg(

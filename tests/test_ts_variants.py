@@ -114,3 +114,41 @@ def test_ts_window_family_runs_on_every_variant(spark, variant_dirs, query):
         else:
             assert rows == ref, f"{query} diverges on variant {name}"
         assert rows, f"{query} produced no rows on variant {name}"
+
+
+def _events_as(src: pa.Table, typ: pa.DataType) -> pa.Table:
+    i = src.schema.get_field_index("ts")
+    return src.set_column(i, "ts", src.column("ts").cast(typ))
+
+
+def test_rewritten_events_file_is_inferred_again(spark, tmp_path):
+    """``load_table`` remembers each table's footer schema per session;
+    a file rewritten in place under another ts encoding must be read
+    with its new footer (a path-keyed memo would read nanos as NTZ
+    micros), still normalized to LTZ with the same values."""
+    src = pq.read_table(os.path.join(SF_DIR, "events.parquet"))
+    path = os.path.join(tmp_path, "events.parquet")
+    seen = []
+    for typ in (pa.timestamp("us"), pa.timestamp("ns")):
+        pq.write_table(_events_as(src, typ), path)
+        df = load_table(spark, str(tmp_path), "events")
+        assert isinstance(df.schema["ts"].dataType, T.TimestampType)
+        seen.append(sorted(df.select("event_id", "ts").collect()))
+    assert seen[0] == seen[1]
+
+
+def test_overwritten_table_directory_shows_added_column(spark, tmp_path):
+    """A Spark-written ``<t>.parquet`` directory overwritten with one
+    more column: the next ``load_table`` must see the column."""
+    from pyspark.sql import functions as F
+
+    path = os.path.join(tmp_path, "region.parquet")
+    base = spark.read.parquet(os.path.join(SF_DIR, "region.parquet"))
+    base.coalesce(1).write.mode("overwrite").parquet(path)
+    assert "added" not in load_table(spark, str(tmp_path), "region").columns
+    base.withColumn("added", F.lit(1)).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(path)
+    back = load_table(spark, str(tmp_path), "region")
+    assert back.columns[-1] == "added"
+    assert {r.added for r in back.select("added").collect()} == {1}
