@@ -1,43 +1,50 @@
-"""Engine benchmark — the driver's per-round feedback loop.
+"""Engine benchmark and the per-query run loop every timing tool shares.
 
 Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]``. Stdout carries
 one compact JSON line per query as it finishes ({"q", "s", "c"}) and
 ends with the summary JSON line {"metric", "value", "unit", "queries"
-(slowest 10), "sf", "n_queries", "full_record"} — LAST and <700 chars,
-so a bounded stdout-tail always keeps it WHOLE (a full 162-query map
-is ~7 KB and overflowed the driver's 2000-char tail in r4/r5 →
-`parsed: null`). The complete per-query record is written to
-``BENCH_LOCAL.json`` at the repo root, committed per round. Spark
+(slowest 10), "sf", "n_queries", "full_record"}. The summary is LAST
+and under 700 chars, so a bounded stdout tail always keeps it whole: a
+full per-query map is ~7 KB and does not fit a 2000-char tail. Spark
 console progress is disabled in the session so no non-JSON line lands
 between them.
 
-Each query is forced end-to-end with a noop sink (full computation,
-no driver-side collect). A JVM/catalog warmup query runs first so the
-measured numbers are execution, not session bootstrap. Every query
-runs three times and the BEST WARM run is recorded (single warm
-samples showed GC outliers on a long suite), so per-query numbers are
-comparable across rounds regardless of HEADLINE order or which query
-pays the cold parquet-footer read; cold totals are reported separately
-as "cold_seconds".
+Every query goes through ``run_query``, the loop ``tools/profile_queries.py``
+and ``tools/scale_experiment.py`` use too: three runs, each building
+the query and forcing it end to end into the noop sink (full
+computation, no collect into Python), with the cache cleared after
+every run so a builder-side persist() is paid by every run, never
+served back from run 1's blocks. Cold time is run 1. Warm time is the
+best of runs 2-3, because single warm samples showed GC outliers on a
+long suite. A JVM/catalog warmup query runs first in every session so
+the numbers are execution, not session bootstrap.
 
-r16 measurement fix (VERDICT r15 item 3, declared in
-OPTIMIZATION_r16.md): the cache is cleared BETWEEN the runs of a
-query, not only between queries, so a builder-side persist() is paid
-by every run — warm numbers measure per-run work, never run 1's
-cached blocks served back to runs 2-3. Timing methodology is
-otherwise unchanged (same env-var contract, same JSON line, same
-best-warm-of-3); warm numbers for the persisted iterative builders
-(LPA, BFS, pagerank, perplexity, pretrain corpus) are NOT comparable
-to pre-r16 records — the r16 record re-baselines them.
+The full record (``BENCH_LOCAL.json`` for a canonical run;
+``record_target`` names the others) holds, per query:
+
+- ``queries``: the best warm time, and ``cold``: the cold time;
+- ``warm_runs``: the best warm run's ``build_s`` (builder, including
+  the jobs it runs eagerly), ``exec_s`` (the noop write), ``jobs`` and
+  ``stages``; ``build_s + exec_s`` is the warm time up to rounding;
+- ``loads``: the 1-min load average when the query started, and
+  ``warm_spreads``: the ratio of its two warm runs;
+- ``errors`` and ``regressions``, when there are any.
+
+It also holds the suite totals (``value``, ``cold_seconds``,
+``diag_seconds``), the sf and core count, the load stamps
+(``ambient_load``, ``chunk_loads``) and the throttle check against the
+previous record (``gradient_status``, ``chunk_drift``).
 """
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import sys
 import time
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -596,24 +603,22 @@ def gradient_check(
 def record_target(
     sf: float, cpus: int, prev_cpus: int | None, gradient_status: str
 ) -> str:
-    """Which sidecar this run's full record may write.
+    """Which file this run's full record may write.
 
     Only a canonical-SF run at the committed record's core count may
-    overwrite ``BENCH_LOCAL.json`` (the regression-gate baseline):
-    off-SF runs go to the smoke sidecar, different-core runs (the
-    driver's scaling pass — which overwrote the canonical record
-    after r15 and poisoned the gate) to the scaling sidecar, and a
+    overwrite ``BENCH_LOCAL.json``, the regression-gate baseline; when
+    that record names no core count, only a run at the default core
+    count may. Every other run writes a sidecar named by its own sf and
+    core count, so no run replaces a record taken at other settings. A
     throttle-degraded run is quarantined regardless.
     """
-    if sf != 0.1:
-        name = "BENCH_SMOKE.json"
-    elif prev_cpus is not None and prev_cpus != cpus:
-        name = "BENCH_SCALING.json"
-    else:
-        name = "BENCH_LOCAL.json"
     if gradient_status == "degraded_host":
-        name = "BENCH_DEGRADED.json"
-    return name
+        return "BENCH_DEGRADED.json"
+    if sf != 0.1:
+        return f"BENCH_SMOKE_sf{sf:g}_c{cpus}.json"
+    if cpus != (int(DEFAULT_CPUS) if prev_cpus is None else prev_cpus):
+        return f"BENCH_SCALING_c{cpus}.json"
+    return "BENCH_LOCAL.json"
 
 
 def _sf_from_dir(sf_dir: str) -> float:
@@ -624,21 +629,103 @@ def _sf_from_dir(sf_dir: str) -> float:
         return -1.0
 
 
+DEFAULT_CPUS = "32"
+
+
+def warm_session(app: str, cpus: str, extra_conf: dict[str, str] | None = None):
+    """A fresh session with the catalog and codegen paths touched once."""
+    from etl_8x8_spark.session import get_spark
+
+    spark = get_spark(
+        app, cpus=cpus, shuffle_partitions=int(cpus), extra_conf=extra_conf
+    )
+    spark.range(1000).selectExpr("sum(id)").collect()
+    return spark
+
+
+RUNS = 3
+
+
+def run_query(spark, builder, sf_dir: str) -> list[dict]:
+    """Build and execute one query ``RUNS`` times; one record per run.
+
+    Each run's timed region is the builder call (``build_s``, which
+    includes any job the builder runs eagerly) followed by a write to
+    the noop sink (``exec_s``); ``s`` is their sum. The run's jobs and
+    stages are counted from a ``statusTracker`` job group that is set
+    and read outside the timed region.
+
+    The cache is cleared after every run, outside the timed region:
+    identical analyzed plans hit the CacheManager otherwise, and runs
+    2-3 would read run 1's persisted blocks instead of re-paying the
+    builder's own materialization. A failing run also clears the cache
+    and unsets the job group before the exception propagates. Both
+    heaps are collected on the way out: clearCache misses
+    localCheckpoint and broadcast blocks, which are freed only when
+    their DataFrame is garbage-collected, and on a long suite the
+    stragglers squeeze execution memory and inflate later queries 3-6x.
+    """
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    runs: list[dict] = []
+    try:
+        for _ in range(RUNS):
+            group = f"run_query-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, "run_query")
+            t0 = time.perf_counter()
+            df = builder(spark, sf_dir)
+            t1 = time.perf_counter()
+            df.write.format("noop").mode("overwrite").save()
+            t2 = time.perf_counter()
+            sc._jsc.clearJobGroup()
+            job_ids = tracker.getJobIdsForGroup(group)
+            runs.append(
+                {
+                    "s": round(t2 - t0, 3),
+                    "build_s": round(t1 - t0, 3),
+                    "exec_s": round(t2 - t1, 3),
+                    "jobs": len(job_ids),
+                    "stages": sum(
+                        len(tracker.getJobInfo(j).stageIds or [])
+                        for j in job_ids
+                    ),
+                }
+            )
+            spark.catalog.clearCache()
+    except BaseException:
+        sc._jsc.clearJobGroup()
+        spark.catalog.clearCache()
+        raise
+    finally:
+        gc.collect()
+        sc._jvm.System.gc()
+    return runs
+
+
+def best_warm(runs: list[dict]) -> dict:
+    """The fastest of the warm runs (all but run 1)."""
+    return min(runs[1:], key=lambda r: r["s"])
+
+
 # Queries per SparkSession: even with per-query clearCache + dual-heap
 # GC, a 140-query session slowly accretes JVM state (code cache,
 # broadcast cleanup backlogs, driver-side listener queues) that
 # inflated the 10 slowest in-suite numbers 20-40% over their
-# standalone times in r4. A fresh session every N queries resets that
+# standalone times. A fresh session every N queries resets that
 # baseline; the restart cost lands between queries, never inside a
 # timing, and JIT-compiled code survives in the shared JVM.
 _CHUNK = 45
 
 
-def main() -> None:
+def bench_env() -> tuple[str, str]:
+    """The sf dir and core count the bench tools run at."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS)
+    return sf_dir, cpus
 
-    from etl_8x8_spark.session import get_spark
+
+def main() -> None:
+    sf_dir, cpus = bench_env()
 
     import __spark_entry__ as entry_mod
 
@@ -649,13 +736,14 @@ def main() -> None:
 
     # Ambient host load BEFORE our own JVM spins up: the only moment
     # the 1-min loadavg measures OTHER processes, not this suite. Two
-    # same-code r9 runs differed 12% suite-wide (r9 verdict item 7) —
-    # gate flags must carry their own adjudication evidence.
+    # same-code runs can differ 12% suite-wide, so gate flags must
+    # carry their own adjudication evidence.
     ambient_load = round(os.getloadavg()[0], 2)
     noisy_host = ambient_load > 0.25 * int(cpus)
 
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
+    warm_runs: dict[str, dict] = {}
     loads: dict[str, float] = {}
     spreads: dict[str, float] = {}
     errors: dict[str, str] = {}
@@ -664,84 +752,43 @@ def main() -> None:
         if qi % _CHUNK == 0:
             if spark is not None:
                 spark.stop()
-            # loadavg at each session boundary: the r10 noisy window
-            # arrived MID-run (first chunk 2-15x slow, ambient_load at
-            # start a clean 1.57) — one start-of-suite stamp cannot
-            # adjudicate that; four chunk stamps can.
+            # loadavg at each session boundary: a noisy window can
+            # arrive mid-run, which one start-of-suite stamp cannot
+            # adjudicate.
             chunk_loads.append(round(os.getloadavg()[0], 2))
-            spark = get_spark("bench", cpus=cpus, shuffle_partitions=int(cpus))
-            # Warmup: touch the catalog + codegen paths once.
-            spark.range(1000).selectExpr("sum(id)").collect()
-        # cold + two warm runs; record the BEST warm — single warm
-        # samples showed multi-second GC outliers on a 40-query suite.
+            spark = warm_session("bench", cpus)
         # Per-query try/except: one broken builder must never zero the
-        # whole round's bench signal (round 3 lost its official bench
-        # to a single AnalysisException).
-        per_run = []
+        # whole bench signal.
         try:
             loads[name] = round(os.getloadavg()[0], 2)
-            for run in range(3):
-                t0 = time.time()
-                df = qs[name](spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                per_run.append(round(time.time() - t0, 3))
-                # Honest warm runs (r16, VERDICT r15 item 3): drop
-                # whatever the builder persisted BETWEEN the runs of a
-                # query, so warm runs 2-3 re-pay the builder's own
-                # materialization instead of reading run 1's cached
-                # blocks (identical analyzed plans hit the
-                # CacheManager otherwise — the r15 warm numbers for
-                # the persisted iterative builders measured cache
-                # reuse, not per-run work). The clear sits OUTSIDE the
-                # timed region; the JVM stays warm.
-                spark.catalog.clearCache()
-            cold[name] = per_run[0]
-            timings[name] = min(per_run[1:])
-            # warm-pair spread: a same-session repeat differing >30%
-            # is scheduler/GC noise, not plan cost — per-query noise
-            # evidence the regression gate reads below
-            spreads[name] = round(
-                max(per_run[1:]) / max(min(per_run[1:]), 1e-9), 2
-            )
+            per_run = run_query(spark, qs[name], sf_dir)
         except Exception as exc:  # noqa: BLE001 — survive any query
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-            # the failed run skipped its in-loop clear — drop whatever
-            # it persisted so the next query starts clean
-            spark.catalog.clearCache()
-        # Stream one compact line per query so a stdout-tail window
-        # truncates the OLDEST results, never the final summary line
-        # (BENCH_r04 kept only the last 67 of 136 queries because the
-        # single end-of-run line sat behind progress-bar spam).
-        if name in timings:
-            print(
-                json.dumps({"q": name, "s": timings[name], "c": cold[name]}),
-                flush=True,
-            )
-        elif name in errors:
             print(json.dumps({"q": name, "err": errors[name][:120]}), flush=True)
-        # The per-run clearCache above already freed cached blocks
-        # (queries that persist internal relations — minhash, CC, knn
-        # — would otherwise accumulate across the suite and drift
-        # timings by query 30); what remains is the heap hygiene:
-        # clearCache misses localCheckpoint/broadcast blocks, which are
-        # only freed when their DataFrame is GC'd — on a 130-query
-        # suite the stragglers squeeze execution memory and inflate
-        # mid-suite queries 3-6x (measured on sql_tpch_q10_shape:
-        # 4.5 s in-suite vs 1.1 s isolated). Collect both heaps so
-        # every query starts from the same memory baseline.
-        import gc
-
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
+            continue
+        best = best_warm(per_run)
+        cold[name] = per_run[0]["s"]
+        timings[name] = best["s"]
+        warm_runs[name] = {k: v for k, v in best.items() if k != "s"}
+        # warm-pair spread: a same-session repeat differing >30% is
+        # scheduler/GC noise, not plan cost — per-query noise evidence
+        # the regression gate reads below
+        warm = [r["s"] for r in per_run[1:]]
+        spreads[name] = round(max(warm) / max(min(warm), 1e-9), 2)
+        # One compact line per query, so a stdout-tail window
+        # truncates the OLDEST results, never the final summary line.
+        print(
+            json.dumps({"q": name, "s": timings[name], "c": cold[name]}),
+            flush=True,
+        )
 
     total = round(sum(timings.values()), 3)
     # Regression gate: diff this run against the previously COMMITTED
     # BENCH_LOCAL.json before overwriting it. A >1.5x per-query warm
     # slowdown with >=0.3 s absolute delta (the floor keeps 60 ms
     # queries from tripping on scheduler noise) is flagged loudly in
-    # both the full record and the summary line — round 7 shipped a 9x
-    # agg_rfm_segments regression invisible inside a +6 s suite total
-    # precisely because nothing diffed per-query times across rounds.
+    # both the full record and the summary line: a 9x single-query
+    # regression is invisible inside a suite total.
     sidecar = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json"
     )
@@ -752,15 +799,14 @@ def main() -> None:
             prev_full = json.load(fh)
         prev_cpus = prev_full.get("cpus")
         # Only a same-SF, same-core record is comparable: an sf0.001
-        # smoke run against the committed sf0.1 record flags phantom
-        # ratios (and vice versa hides real ones), and an 8-core
-        # scaling run against a 32-core record mis-adjudicates every
-        # query (r16: the r15 driver's low-core scaling run overwrote
-        # the canonical record and poisoned the gate baseline).
+        # smoke run against the sf0.1 record flags phantom ratios (and
+        # vice versa hides real ones), and a low-core scaling run
+        # against a 32-core record mis-adjudicates every query. A
+        # record that names no core count is comparable to nothing.
         prev = (
             prev_full.get("queries", {})
             if prev_full.get("sf") == _sf_from_dir(sf_dir)
-            and (prev_cpus is None or prev_cpus == int(cpus))
+            and prev_cpus == int(cpus)
             else {}
         )
     except (OSError, ValueError):
@@ -768,12 +814,11 @@ def main() -> None:
     for name, now_s in timings.items():
         was = prev.get(name)
         if was and was > 0 and now_s > was * 1.5 and now_s - was >= 0.3:
-            # Separate "regression" from "noisy-host candidate"
-            # (r9 verdict item 7): a flag raised while the host was
-            # loaded by other work at suite start, or whose own warm
-            # pair disagreed >30%, carries its adjudication evidence
-            # with it — Lesson 36's protocol starts from here instead
-            # of from a bare ratio.
+            # Separate "regression" from "noisy-host candidate": a flag
+            # raised while the host was loaded by other work at suite
+            # start, or whose own warm pair disagreed >30%, carries its
+            # adjudication evidence with it — Lesson 36's protocol
+            # starts from here instead of from a bare ratio.
             candidate = noisy_host or spreads.get(name, 1.0) > 1.3
             regressions[name] = {
                 "prev_s": was,
@@ -807,6 +852,7 @@ def main() -> None:
         "queries": timings,
         "cold": cold,
         "cold_seconds": round(sum(cold.values()), 3),
+        "warm_runs": warm_runs,
         "sf": _sf_from_dir(sf_dir),
         "cpus": int(cpus),
         "n_queries": len(timings),
@@ -824,17 +870,9 @@ def main() -> None:
         full["errors"] = errors
     if regressions:
         full["regressions"] = regressions
-    # The full per-query record is too long for a bounded stdout-tail
-    # capture (the driver keeps the last 2000 chars: a 162-query map
-    # is ~7 KB, so BENCH_r04/r05 recorded `parsed: null`). Persist the
-    # complete record as a sidecar IN THE REPO — every per-query
-    # number stays recoverable from the artifact even if stdout is
-    # truncated — and keep the final stdout line small enough to
-    # always fit the tail window whole.
-    # Only a canonical-SF (0.1) run may overwrite the committed
-    # baseline record: a local sf0.001 smoke run clobbering the sf0.1
-    # record destroyed the regression-gate baseline twice in r8 —
-    # off-SF runs persist to a separate smoke sidecar instead.
+    # The complete record is persisted as a file in the repo, so every
+    # per-query number stays recoverable even when stdout is truncated,
+    # and the final stdout line stays small enough to fit the tail.
     record_name = record_target(
         full["sf"], int(cpus), prev_cpus, gradient_status
     )
@@ -864,8 +902,8 @@ def main() -> None:
     if gradient_status == "degraded_host":
         out["status"] = "degraded_host"
     # The summary is the LAST stdout line, after the per-query stream,
-    # so any tail window that holds >=1 line always holds the total —
-    # and at <700 chars it now PARSES from a 2000-char tail too.
+    # so any tail window that holds >=1 line always holds the total,
+    # and at <700 chars it parses from a 2000-char tail too.
     print(json.dumps(out), flush=True)
     if gradient_status == "degraded_host":
         # nonzero exit: no downstream automation can adopt this record

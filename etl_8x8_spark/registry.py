@@ -58,80 +58,69 @@ _QUERY_MODULES = [
 # ORDER MATTERS for driver sampling: the driver evaluates only the first
 # 50 keys of ``all_queries()`` per round. Keys listed here lead the
 # returned dict (in this order); all other keys follow in registration
-# order. Round-15 priority (r14 verdict item 4 + the r15 changes),
-# filling exactly the 50-slot window as 9 + 2 + 39:
-#   0. the 9 r15-new keys (deletion vectors, avro scan, column
-#      mapping, zorder OPTIMIZE, partitioned table, exactly-once
-#      stream sink, CHECK constraints, shallow clone, identity
-#      columns — no driver evidence yet);
-#   1. the 2 keys whose implementation materially changed in r15
-#      (sink_txn_log_schema_evolution: generation-grouped reader +
-#      split-gen1 fixture; stream_txn_log_tail: name-based Arrow
-#      column lookup) — their r14 rows are stale evidence.
-#      sink_txn_log_conflict's r15 change (assert → raise) is
-#      behavior-neutral under normal execution and its r14 row is one
-#      round old, so it yields its slot to the aging cohort;
-#   2. 39 of the 45-key r8-vintage cohort (the oldest evidence after
-#      the r14 rotation retired r7); the remaining 6
-#      (sink_json_roundtrip, sink_parquet_partitioned,
-#      sink_partition_overwrite, stream_static_enrich,
-#      text_quality_gopher, sink_csv_roundtrip) roll to r16.
-# Target: after the r15 driver run at most 6 keys older than r9.
+# order. The rule that fills the 50-key window:
+#   1. keys whose builder changed after their last CORRECTNESS_r*.json
+#      row was recorded, so that row is stale evidence;
+#   2. then the keys with the oldest evidence (last CORRECTNESS round,
+#      ties in registration order).
 # bench.py's HEADLINE order is independent and unaffected.
 _SAMPLE_PRIORITY = [
-    # new in r15 — no driver evidence yet
-    "sink_txn_log_delete_vectors",
-    "scan_avro",
-    "sink_txn_log_column_mapping",
-    "sink_txn_log_optimize_zorder",
-    "sink_txn_log_partitioned",
-    "stream_txn_log_sink",
-    "sink_txn_log_constraints",
-    "sink_txn_log_shallow_clone",
-    "sink_txn_log_identity",
-    # implementation changed in r15 — previous rows are stale
-    "sink_txn_log_schema_evolution",
-    "stream_txn_log_tail",
-    # r8-vintage cohort, 39 of 45
-    "dedup_semdedup",
-    "embed_mrl_truncate",
+    # round 16: graph and cluster loops (round-lineage checkpointing)
+    "graph_pagerank_converged",
+    "graph_label_propagation",
+    "graph_k_core",
+    "graph_bfs_layers",
+    "dedup_cluster_cc",
+    # round 16: both k-means, roc_auc / ks_test, the widen_scan family
+    # (substring-dedup trio, text quality, PQ), mrl truncate, manifest
+    "ml_kmeans_lloyd",
+    "ml_kmeans_converged",
+    "agg_roc_auc_rank",
+    "agg_ks_test_two_sample",
+    "dedup_substring_span",
+    "dedup_substring_scrub",
+    "dedup_incremental_substring",
+    "text_contamination_check",
+    "text_bigram_perplexity",
+    "text_quality_gopher",
+    "text_quality_classifier",
+    "pipeline_quality_gate",
     "embed_pq_encode",
-    "env_derive",
-    "fn_array",
-    "fn_bitwise",
-    "fn_conditional",
-    "fn_date",
-    "fn_encode_decode",
-    "fn_format",
-    "fn_json",
-    "fn_map",
-    "fn_math",
-    "fn_string",
-    "fn_url",
-    "join_asof_forward",
-    "join_bucketed_colocated",
-    "join_dim_scd2",
-    "join_full_outer",
-    "join_fuzzy_match",
-    "join_range_bucketed",
-    "pipeline_dedup_cascade",
-    "quality_report",
-    "sample_bottom_k_sketch",
-    "sample_group_cap",
-    "sample_mixture_rebalance",
-    "sample_systematic",
-    "sample_temperature_mixture",
-    "sample_train_test_split",
-    "scan_csv",
-    "scan_custom_source",
-    "scan_json_lines",
-    "scan_orc",
-    "scan_parquet",
-    "scan_schema_evolution",
-    "scan_text",
-    "set_except",
-    "set_intersect",
-    "set_union_dedup",
+    "sim_search_pq_adc",
+    "sim_search_ivfpq_topk",
+    "embed_mrl_truncate",
+    "scan_manifest_pruned",
+    # moved onto streams.run_phases / drain_to_table
+    "stream_state_ttl_cache",
+    "stream_watermark_late_data",
+    "stream_session_window_state",
+    "stream_session_window_tws",
+    "stream_join_outer",
+    "stream_tws_ttl_cache",
+    "stream_custom_source",
+    "stream_txn_log_tail",
+    # reads its aggregate back with the writer's schema
+    "view_incremental_refresh",
+    # oldest evidence: r8, then r9
+    "sink_parquet_partitioned",
+    "sink_partition_overwrite",
+    "sink_csv_roundtrip",
+    "sink_json_roundtrip",
+    "stream_static_enrich",
+    "sink_sorted_clustered",
+    "window_rank_topn_per_group",
+    "window_running_sum",
+    "window_trailing_range",
+    "window_first_last",
+    "window_cumulative_users",
+    "window_scd2_build",
+    "window_anomaly_zscore",
+    "window_gap_islands",
+    "window_rolling_median",
+    "window_holt_forecast",
+    "sort_limit_topk",
+    "sql_tpch_q3_shape",
+    "sql_tpch_q5_shape",
 ]
 
 

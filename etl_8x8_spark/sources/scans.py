@@ -503,12 +503,27 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Z_BITS = 12  # per-dimension resolution: 4096 buckets, 24-bit z-value
 
 
+def _zvalue(c: "F.Column", k: "F.Column", bits: int = 10) -> "F.Column":
+    """Morton/Z-order interleave of two pre-scaled non-negative ints
+    (each < 2**bits): ``k`` on the even bits, ``c`` on the odd — a
+    codegen'd shift/or chain, 2*bits integer ops per row, no UDF."""
+    z = F.lit(0).cast("long")
+    one = F.lit(1).cast("long")
+    for b in range(bits):
+        z = z.bitwiseOR(
+            F.shiftleft(F.shiftright(c, b).bitwiseAND(one), 2 * b + 1)
+        ).bitwiseOR(
+            F.shiftleft(F.shiftright(k, b).bitwiseAND(one), 2 * b)
+        )
+    return z
+
+
 def _zorder_value(col_a, col_b, min_a, max_a, min_b, max_b):
     """Morton (Z-order) interleave of two bucketized columns.
 
     Each key is min-max normalized into a {0..2^_Z_BITS-1} bucket, then
-    the bucket bits are interleaved (a even positions, b odd) with a
-    codegen'd shift/or chain — 2*_Z_BITS integer ops per row, no UDF.
+    the bucket bits are interleaved by ``_zvalue``: a on the even
+    positions, b on the odd.
     """
     span_a = max(1, max_a - min_a)
     span_b = max(1, max_b - min_b)
@@ -521,20 +536,7 @@ def _zorder_value(col_a, col_b, min_a, max_a, min_b, max_b):
         F.lit(lim),
         ((col_b - F.lit(min_b)) * F.lit(lim) / F.lit(span_b)).cast("long"),
     )
-    z = F.lit(0).cast("long")
-    for bit in range(_Z_BITS):
-        z = (
-            z.bitwiseOR(
-                F.shiftleft(
-                    F.shiftright(bucket_a, bit).bitwiseAND(F.lit(1)), 2 * bit
-                )
-            )
-        ).bitwiseOR(
-            F.shiftleft(
-                F.shiftright(bucket_b, bit).bitwiseAND(F.lit(1)), 2 * bit + 1
-            )
-        )
-    return z
+    return _zvalue(bucket_b, bucket_a, bits=_Z_BITS)
 
 
 @register(
@@ -3518,20 +3520,6 @@ WHERE o_custkey <= (SELECT MIN(o_custkey)
 GROUP BY o_orderstatus
 ORDER BY o_orderstatus
 """
-
-
-def _zvalue(c: "F.Column", k: "F.Column", bits: int = 10) -> "F.Column":
-    """Morton/Z-order interleave of two pre-scaled non-negative ints
-    (each < 2**bits) — pure JVM bitwise expressions, no UDF."""
-    z = F.lit(0).cast("long")
-    one = F.lit(1).cast("long")
-    for b in range(bits):
-        z = z.bitwiseOR(
-            F.shiftleft(F.shiftright(c, b).bitwiseAND(one), 2 * b + 1)
-        ).bitwiseOR(
-            F.shiftleft(F.shiftright(k, b).bitwiseAND(one), 2 * b)
-        )
-    return z
 
 
 @register("sink_txn_log_optimize_zorder", oracle=_TXN_ZORDER_ORACLE)

@@ -92,13 +92,27 @@ def test_no_committed_record_is_insufficient():
 
 
 def test_record_target_gating():
-    """r16: only a canonical-SF run at the committed record's core
-    count may overwrite BENCH_LOCAL.json — the r15 driver's 8-core
-    scaling pass overwrote the 32-core record and poisoned the gate."""
+    """Only a canonical-SF run at the committed record's core count
+    may overwrite BENCH_LOCAL.json — an 8-core scaling pass once
+    overwrote the 32-core record and poisoned the gate. Every other
+    run writes a sidecar named by its own sf and core count, so an
+    8-core record and a 16-core record never replace each other."""
     assert bench.record_target(0.1, 32, 32, "ok") == "BENCH_LOCAL.json"
-    assert bench.record_target(0.1, 32, None, "ok") == "BENCH_LOCAL.json"
-    assert bench.record_target(0.1, 8, 32, "ok") == "BENCH_SCALING.json"
-    assert bench.record_target(0.001, 4, 32, "ok") == "BENCH_SMOKE.json"
+    assert bench.record_target(0.1, 8, 32, "ok") == "BENCH_SCALING_c8.json"
+    assert bench.record_target(0.1, 16, 32, "ok") == "BENCH_SCALING_c16.json"
+    assert (
+        bench.record_target(0.001, 4, 32, "ok") == "BENCH_SMOKE_sf0.001_c4.json"
+    )
+    assert (
+        bench.record_target(0.01, 4, 32, "ok") == "BENCH_SMOKE_sf0.01_c4.json"
+    )
+    # a record without a core count is not same-core: only a run at
+    # the default core count may replace it
+    assert bench.record_target(0.1, 8, None, "ok") == "BENCH_SCALING_c8.json"
+    assert (
+        bench.record_target(0.1, int(bench.DEFAULT_CPUS), None, "ok")
+        == "BENCH_LOCAL.json"
+    )
     assert (
         bench.record_target(0.1, 32, 32, "degraded_host")
         == "BENCH_DEGRADED.json"

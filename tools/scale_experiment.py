@@ -16,7 +16,9 @@ not fatter keys:
   per-copy noise (no degenerate ties in top-k).
 
 Usage: python tools/scale_experiment.py [--copies 10] [--queries a,b]
-Prints one JSON line per query: {name, base_s, scaled_s, ratio}.
+Prints one JSON line per query: {query, base_s, scaled_s, ratio}, where
+each time is the best warm run of ``bench.run_query`` on
+``local[$SPARK_GRAFT_CPUS]``.
 """
 
 from __future__ import annotations
@@ -25,11 +27,12 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
+
+import bench  # noqa: E402
 
 BASE_SF = "/root/testdata/sf0.1"
 
@@ -116,22 +119,6 @@ def build_replica(spark, copies: int) -> str:
     return out
 
 
-def time_warm(qs, spark, name: str, sf_dir: str) -> float:
-    """Best of two warm runs, cache cleared first — the bench.py
-    protocol. Persisted relations left by earlier queries in the same
-    session otherwise poison later timings (this produced two phantom
-    >4x 'outliers' in r2/r3: sql_tpch_q5_shape 4.4s→1.5s clean,
-    window_anomaly_zscore 24s→1.5s clean)."""
-    spark.catalog.clearCache()
-    qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.time()
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = min(best, time.time() - t0)
-    return round(best, 3)
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--copies", type=int, default=10)
@@ -156,15 +143,15 @@ def main() -> None:
     # 6M-row shuffles fit comfortably in 256 x ~25 MB partitions)
     spark = get_spark(
         "scale_experiment",
-        cpus="32",
+        cpus=bench.bench_env()[1],
         shuffle_partitions=min(max(32, 8 * args.copies), 256),
     )
     replica = build_replica(spark, args.copies)
 
     results = {}
     for name in names:
-        base = time_warm(qs, spark, name, BASE_SF)
-        scaled = time_warm(qs, spark, name, replica)
+        base = bench.best_warm(bench.run_query(spark, qs[name], BASE_SF))["s"]
+        scaled = bench.best_warm(bench.run_query(spark, qs[name], replica))["s"]
         ratio = round(scaled / base, 1) if base > 0 else None
         results[name] = {"base_s": base, "scaled_s": scaled, "ratio": ratio}
         print(json.dumps({"query": name, **results[name]}), flush=True)
@@ -193,7 +180,9 @@ def skew_experiment(copies: int = 10) -> None:
     from etl_8x8_spark.sources.readers import load_table, scratch_dir
 
     spark = get_spark(
-        "skew_experiment", cpus="32", shuffle_partitions=max(32, 8 * copies)
+        "skew_experiment",
+        cpus=bench.bench_env()[1],
+        shuffle_partitions=max(32, 8 * copies),
     )
     out = os.path.join(scratch_dir(), f"skew{copies}x")
     path = os.path.join(out, "events.parquet")
