@@ -25,8 +25,9 @@ The full record (``BENCH_LOCAL.json`` for a canonical run;
 
 - ``queries``: the best warm time, and ``cold``: the cold time;
 - ``warm_runs``: the best warm run's ``build_s`` (builder, including
-  the jobs it runs eagerly), ``exec_s`` (the noop write), ``jobs`` and
-  ``stages``; ``build_s + exec_s`` is the warm time up to rounding;
+  the jobs it runs eagerly), ``exec_s`` (the noop write), ``jobs``,
+  ``stages`` and ``compiles`` (codegen classes compiled);
+  ``build_s + exec_s`` is the warm time up to rounding;
 - ``loads``: the 1-min load average when the query started, and
   ``warm_spreads``: the ratio of its two warm runs;
 - ``errors`` and ``regressions``, when there are any.
@@ -643,6 +644,31 @@ def warm_session(app: str, cpus: str, extra_conf: dict[str, str] | None = None):
     return spark
 
 
+def stop_session(spark) -> None:
+    """Stop ``spark`` so that the next session in this JVM starts clean.
+
+    The JVM-wide state store outlives the session: its maintenance
+    thread keeps the old session's coordinator and, once a streaming
+    query has run, logs a ``WARN StateStore: Error doing maintenance``
+    with an ``RpcEndpointNotFoundException`` every interval after the
+    restart. Stopping it first ends that thread; the next stateful
+    query starts a new one.
+    """
+    spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+    spark.stop()
+
+
+def codegen_compiles(spark) -> int:
+    """Classes whole-stage codegen has compiled in this JVM so far.
+
+    Spark's compile timer counts every Janino compilation, driver- and
+    task-side; a hit in the compiled-class cache is not counted.
+    """
+    jvm = spark.sparkContext._jvm
+    timer = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    return timer.getCount()
+
+
 RUNS = 3
 
 
@@ -653,7 +679,8 @@ def run_query(spark, builder, sf_dir: str) -> list[dict]:
     includes any job the builder runs eagerly) followed by a write to
     the noop sink (``exec_s``); ``s`` is their sum. The run's jobs and
     stages are counted from a ``statusTracker`` job group that is set
-    and read outside the timed region.
+    and read outside the timed region, and so is ``compiles``, the
+    classes codegen compiled during the run (``codegen_compiles``).
 
     The cache is cleared after every run, outside the timed region:
     identical analyzed plans hit the CacheManager otherwise, and runs
@@ -672,12 +699,14 @@ def run_query(spark, builder, sf_dir: str) -> list[dict]:
         for _ in range(RUNS):
             group = f"run_query-{uuid.uuid4().hex}"
             sc.setJobGroup(group, "run_query")
+            compiled = codegen_compiles(spark)
             t0 = time.perf_counter()
             df = builder(spark, sf_dir)
             t1 = time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
             t2 = time.perf_counter()
             sc._jsc.clearJobGroup()
+            compiles = codegen_compiles(spark) - compiled
             job_ids = tracker.getJobIdsForGroup(group)
             runs.append(
                 {
@@ -689,6 +718,7 @@ def run_query(spark, builder, sf_dir: str) -> list[dict]:
                         len(tracker.getJobInfo(j).stageIds or [])
                         for j in job_ids
                     ),
+                    "compiles": compiles,
                 }
             )
             spark.catalog.clearCache()
@@ -751,7 +781,7 @@ def main() -> None:
     for qi, name in enumerate(names):
         if qi % _CHUNK == 0:
             if spark is not None:
-                spark.stop()
+                stop_session(spark)
             # loadavg at each session boundary: a noisy window can
             # arrive mid-run, which one start-of-suite stamp cannot
             # adjudicate.

@@ -2240,17 +2240,20 @@ def agg_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.min("ts").alias("c_ts"))
     )
+    # Both sides come from one `events` scan: joining `user_id` to
+    # itself builds a predicate Spark warns is trivially true, so the
+    # purchase side's key gets its own name.
     purchases = events.filter(
         F.col("event_type") == "purchase"
-    ).select("user_id", F.col("ts").alias("p_ts"))
+    ).select(F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts"))
     conv = (
         first_click.join(
             purchases,
-            (first_click.user_id == purchases.user_id)
+            (F.col("user_id") == F.col("p_user"))
             & (F.col("p_ts") > F.col("c_ts")),
             "left",
         )
-        .groupBy(first_click.user_id, "c_ts")
+        .groupBy("user_id", "c_ts")
         .agg(F.min("p_ts").alias("p_ts"))
     )
     dt_h = (

@@ -5,6 +5,15 @@ Used by tests and bench.py. The driver supplies its own session to
 never rely on session-level config set here — anything
 correctness-critical (e.g. timezone-sensitive expressions) is avoided
 or made explicit inside the builders themselves.
+
+The compiled-class cache of whole-stage codegen is sized here because
+its size is a static conf, fixed when the JVM starts. Spark keeps the
+classes Janino compiles in one JVM-wide LRU cache of
+``spark.sql.codegen.cache.maxEntries`` entries (default 100). A
+repeated workload whose compiled working set is larger than the cache
+misses on every access: each pass evicts every class before its next
+use and compiles it again. The comment on ``CODEGEN_CACHE_MAX_ENTRIES``
+gives the measured working sets.
 """
 
 from __future__ import annotations
@@ -14,6 +23,15 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+# Compiled working sets, counted as CodegenMetrics compilations over one
+# pass at local[4]: the 16 perfbench `adhoc_small` keys compile 145
+# classes at sf0.01 (over Spark's default of 100, so every steady pass
+# compiled 87-102 of them again), `etl_ingest` 70. One pass over all
+# 334 registry keys at sf0.001 with an unbounded cache compiled 3,958
+# classes (median key 9, largest 54, `text_textrank_keywords`) and left
+# Metaspace at 272 MB, so the cache stays bounded.
+CODEGEN_CACHE_MAX_ENTRIES = 1000
 
 
 def get_spark(
@@ -51,6 +69,9 @@ def get_spark(
         # degrade to SMJ; extreme-scale deployments can restore the
         # Spark default via spark-submit conf.
         .config("spark.sql.join.preferSortMergeJoin", "false")
+        .config(
+            "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES)
+        )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

@@ -13,6 +13,13 @@ fresh sessions (v1, v2, v1, v2, ... for ``--blocks`` blocks), so slow
 host drift cancels across blocks, and ends with one summary line per
 query.
 
+``--ab`` compares session confs only. A static conf such as
+``spark.sql.codegen.cache.maxEntries`` is fixed when the JVM starts:
+each variant's fresh session runs in the same JVM, whose codegen class
+cache keeps the size it started with, so both variants would measure
+the same cache. Compare such a conf across processes instead, one
+process per value.
+
 Usage:
     python tools/profile_queries.py name [name ...]
     python tools/profile_queries.py --plans DIR name ...
@@ -24,7 +31,8 @@ Usage:
 
 Prints one JSON line per query and session: {"block", "q", "ab" (the
 variant's value, null without --ab), "runs" (one {"s", "build_s",
-"exec_s", "jobs", "stages"} per run), "cold", "warm", "load"}, or
+"exec_s", "jobs", "stages", "compiles"} per run; ``compiles`` counts
+the classes codegen compiled during the run), "cold", "warm", "load"}, or
 {"block", "q", "ab", "err"} for a query that failed.
 """
 
@@ -97,7 +105,7 @@ def main() -> None:
                             )
                         )
                     spark.catalog.clearCache()
-            spark.stop()
+            bench.stop_session(spark)
     if key is not None:
         for name, per_val in warm.items():
             if all(per_val.values()):
