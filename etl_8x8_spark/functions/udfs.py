@@ -25,6 +25,8 @@ import time
 import pandas as pd
 from pyspark.sql import functions as F
 
+from etl_8x8_spark.sources.readers import widen_to
+
 # Fixed engine secret — the analog of the reference's SSM-fetched
 # THOR_API_SECRET_KEY (serverless.core.yml:95).
 JWT_SECRET = b"etl-8x8-engine-secret"
@@ -128,24 +130,44 @@ def jwt_verify_token(token):
     return _UDF_CACHE["verify"](token)
 
 
-def widen_for_python(df):
-    """Raise map-stage parallelism to cluster width before an expensive
-    per-row stage (Arrow-batched Python, or heavy JVM array math like
-    MinHash signatures — anything whose per-row cost dwarfs row bytes).
+#: estimated input bytes per Python task (see widen_for_python)
+PY_TASK_BYTES = 512 * 1024
 
-    A small or heavily-filtered input can arrive in fewer partitions
-    than the cluster has cores (a single-row-group parquet file is a
-    one-task scan), and then a ``pandas_udf`` / ``mapInPandas`` chain
-    runs serially no matter how wide the cluster is — per-row Python
-    cost, unlike codegen'd expressions, dwarfs the row's byte size, so
-    partition count IS the throughput. A round-robin repartition to
-    ``defaultParallelism`` pays one tiny shuffle of the raw input and
-    buys cores× on the Python stage. No-op when the input is already
-    at least that wide (the common case at 100 TB, where the scan
-    itself yields thousands of tasks). AQE never coalesces an explicit
-    ``repartition(n)``, so the width survives adaptive re-planning.
+
+def widen_for_python(df):
+    """Size a Python stage (``pandas_udf`` / ``mapInPandas``) to its
+    input: ``min(defaultParallelism, ceil(input_bytes / PY_TASK_BYTES))``
+    tasks, where ``input_bytes`` is Catalyst's size estimate of ``df``
+    (read from the optimized plan's statistics, which runs no job).
+
+    A single-row-group parquet file scans as one task, and then the
+    Python chain runs serially however wide the cluster is: per-row
+    Python cost dwarfs the row's bytes, so on a large input the task
+    count is the throughput. But every Python task also pays a fixed
+    cost that does not depend on its rows. Measured at local[4] on a
+    4-core host with an identity ``mapInPandas`` over 2,000 rows, in
+    reused workers, Python-worker CPU per run was 0.27-0.29 s for 1
+    task, 0.96-1.11 s for 4 and 2.1-2.3 s for 8 (200,000 rows on 4
+    tasks: 1.0-1.2 s).
+    cProfile traced it to pyspark's ``worker_util.setup_spark_files``,
+    which calls ``importlib.invalidate_caches()`` once per task; under
+    Python 3.11 each of the worker's zipimporters then re-reads the
+    directory of ``pyspark.zip`` (1,328 entries). That cost lives in
+    the installed pyspark, so the engine's one lever is how many
+    Python tasks it starts, and widening a small input to every slot
+    multiplies the fixed cost for no gain.
+
+    ``PY_TASK_BYTES`` (512 KiB) sizes a task at about 25k rows of the
+    ``events`` scan (about 20.5 bytes per row on disk), about 0.5 s of
+    ``jwt_verify`` HMAC work at 20 µs per row: roughly twice a task's
+    fixed cost. So sf0.01 inputs (events 221 kB, the document payload
+    projection 90 kB) run as one task, and sf0.1 events (2.0 MB) as 4.
+    A plan Spark cannot size reports ``Long.MaxValue`` and gets full
+    width; an input already as wide as the target is returned as is;
+    the input must be scan-shaped (``readers.widen_to``).
     """
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+    stats = df._jdf.queryExecution().optimizedPlan().stats()
+    tasks = -(-int(stats.sizeInBytes()) // PY_TASK_BYTES)
+    return widen_to(
+        df, min(df.sparkSession.sparkContext.defaultParallelism, tasks)
+    )

@@ -42,7 +42,6 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_8x8_spark.functions.iterative import bound_round_lineage
-from etl_8x8_spark.functions.udfs import widen_for_python
 from etl_8x8_spark.functions.vectors import cosine, norm, oracle_dot, oracle_norm
 from etl_8x8_spark.registry import register
 from etl_8x8_spark.sources.readers import load_table, widen_scan
@@ -242,7 +241,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     verification only ever runs on candidate pairs produced by a
     blocking join, never all-pairs.
     """
-    corpus = widen_for_python(
+    corpus = widen_scan(
         seeded_near_corpus(load_table(spark, sf_dir, "documents"))
     )
     # persisted: BOTH self-join sides consume the shingle table, and
@@ -352,7 +351,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly on candidates only, never all-pairs, and the shingle table
     is built once behind a persist barrier shared by both join sides.
     """
-    corpus = widen_for_python(
+    corpus = widen_scan(
         seeded_contain_corpus(load_table(spark, sf_dir, "documents"))
     )
     # persist barrier: both self-join sides consume the shingle table
@@ -1475,7 +1474,7 @@ def pipeline_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     w = Window.partitionBy(F.sha2(normalized(), 256)).orderBy("doc_id")
-    hashed = widen_for_python(corpus).withColumn(
+    hashed = widen_scan(corpus).withColumn(
         "rn", F.row_number().over(w)
     )
     # persisted for the same CollapseProject reason as

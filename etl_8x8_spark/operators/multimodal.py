@@ -14,9 +14,14 @@ Registered queries:
 
 The actual media codecs aren't in this container, so every decode/
 sample/extract/resize is the REAL Spark-side plumbing (binary columns,
-Arrow batching, explicit output schemas, partition parallelism — no
-shuffle anywhere) around a clearly marked deterministic stub; swap the
-stub for a PIL/ffmpeg/model call and nothing else changes. The stubs
+Arrow batching, explicit output schemas, partition parallelism) around
+a clearly marked deterministic stub; swap the stub for a PIL/ffmpeg/
+model call and nothing else changes. Each Python stage is sized to its
+input by ``widen_for_python``: one task per ``PY_TASK_BYTES`` of the
+payload projection's estimated size, at most one per slot, because
+every Python task pays a fixed cost whatever its rows. The sf0.01
+payloads (90 kB) run as one task with no exchange; sf0.1 (820 kB) as
+two, behind one round-robin exchange of the raw payloads. The stubs
 being deterministic arithmetic is what makes three of the four queries
 fully DuckDB-oracle-checkable. See tests/test_llm_ops.py.
 """
@@ -379,9 +384,12 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     #54's discipline applied to the binary modality).
 
     Scale: identical posture to multimodal_decode — per-partition
-    Python cost, Arrow batch transfer, widen_for_python sizes the
-    Python stage's parallelism; at 100 TB the resized payloads stream
-    to the sink from the worker that produced them.
+    Python cost, Arrow batch transfer. ``widen_for_python`` sizes the
+    Python stage to the payloads' estimated bytes (one task per
+    ``PY_TASK_BYTES``, at most one per slot), so a small input pays
+    one task's fixed cost rather than one per core; at 100 TB the
+    scan is already wider than the target, and the resized payloads
+    stream to the sink from the worker that produced them.
     """
     docs = load_table(spark, sf_dir, "documents")
     payloads = widen_for_python(

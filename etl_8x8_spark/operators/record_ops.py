@@ -607,10 +607,12 @@ def jwt_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     unverified decode (``src/handlers.py:37-39``); a bad signature
     yields ``unknown_user``.
 
-    The input is widened to cluster parallelism first: per-row HMAC
-    cost dominates row size, so Python-stage partition count is the
-    throughput (a single-row-group scan would otherwise run the whole
-    UDF chain on one core)."""
+    ``widen_for_python`` sizes the UDF stage to its input first: one
+    Python task per ``PY_TASK_BYTES`` of estimated input, at most one
+    per slot. Per-row HMAC cost dominates row size, so a large
+    single-row-group scan is spread over the cores; a small one stays
+    one task, because each Python task also pays a fixed cost (one
+    task at sf0.01, four at sf0.1 on four cores)."""
     events = widen_for_python(load_table(spark, sf_dir, "events"))
     df = events.withColumn(
         "token", jwt_build_token(F.col("user_id"), F.col("event_id"))

@@ -156,6 +156,48 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def _first_exchange(plan) -> str | None:
+    """Name of the first exchange node in a physical plan, or None.
+
+    Walks children and inner children (a cached relation's plan,
+    subquery plans) and the initial plan of an adaptive plan, which
+    has neither."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if "Exchange" in name:
+            return name
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.initialPlan())
+        for seq in (node.children(), node.innerChildren()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
+    return None
+
+
+def widen_to(df: DataFrame, target: int) -> DataFrame:
+    """Round-robin ``df`` to ``target`` partitions when it has fewer;
+    otherwise return ``df`` itself.
+
+    The partition count is read while the query is built
+    (``df.rdd.getNumPartitions()``), and on a plan with an exchange
+    that runs the exchange's jobs. So the input must be scan-shaped:
+    a plan with an exchange node raises ``ValueError`` naming the node,
+    before any RDD is built. A target of 1 or less reads no partition
+    count at all. AQE never coalesces an explicit ``repartition(n)``,
+    so the width survives adaptive re-planning.
+    """
+    exchange = _first_exchange(df._jdf.queryExecution().executedPlan())
+    if exchange is not None:
+        raise ValueError(
+            f"widening needs a scan-shaped input; its plan has an "
+            f"exchange node: {exchange}"
+        )
+    if target > 1 and df.rdd.getNumPartitions() < target:
+        return df.repartition(target)
+    return df
+
+
 def widen_scan(df: DataFrame) -> DataFrame:
     """Spread a narrow scan across the session's cores when the input
     has fewer partitions than the cluster has slots (guide §2.5
@@ -164,18 +206,16 @@ def widen_scan(df: DataFrame) -> DataFrame:
 
     The sf fixtures are one parquet row group each, so a scan is ONE
     task; an operator whose per-row compute dominates (tokenize +
-    shingle folds) then runs single-threaded however many cores the
-    session has. The repartition is CONDITIONAL: at real scale the
-    input already carries >= slots partitions and this is a no-op —
-    no extra exchange is ever added to a properly-split input. Only
-    callers whose downstream is key-based (distinct/groupBy/window
-    per key) may use it: a round-robin repartition changes row order.
+    shingle folds, JVM array math over shingle sets) then runs
+    single-threaded however many cores the session has. The
+    repartition is CONDITIONAL: at real scale the input already
+    carries >= slots partitions and this is a no-op — no extra
+    exchange is ever added to a properly-split input. Only callers
+    whose downstream is key-based (distinct/groupBy/join/window per
+    key) may use it: a round-robin repartition changes row order.
+    The input must be scan-shaped (see ``widen_to``).
     """
-    sc = df.sparkSession.sparkContext
-    slots = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < slots:
-        return df.repartition(slots)
-    return df
+    return widen_to(df, df.sparkSession.sparkContext.defaultParallelism)
 
 
 def read_json_lines(

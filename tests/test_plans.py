@@ -197,18 +197,43 @@ class TestNewOperatorPlans:
         assert "l_shipdate" in pushed
         assert "GreaterThanOrEqual" in pushed and "LessThan" in pushed
 
-    def test_widen_for_python_widens_narrow_scan(self, spark, sf_dir):
-        from etl_8x8_spark.functions.udfs import widen_for_python
+    def test_widen_for_python_sizes_stage_to_input(self, spark, sf_dir):
+        """A Python stage gets one task per PY_TASK_BYTES of estimated
+        input, at most one per slot, decided from plan statistics
+        without running a job."""
+        from etl_8x8_spark.functions.udfs import PY_TASK_BYTES, widen_for_python
         from etl_8x8_spark.sources.readers import load_table
 
+        sc = spark.sparkContext
+        slots = sc.defaultParallelism
         events = load_table(spark, sf_dir, "events")
-        wide = widen_for_python(events)
-        target = spark.sparkContext.defaultParallelism
-        assert wide.rdd.getNumPartitions() >= min(
-            target, events.rdd.getNumPartitions() + 1
-        )
+        # one partition, estimated at 8 bytes per row: 8 MB
+        big = spark.range(0, 10**6, 1, 1)
+        already = spark.range(0, 10**6, 1, slots)
+        # an RDD-backed plan has no size estimate (Long.MaxValue)
+        unsized = spark.createDataFrame(sc.parallelize([(1,)], 1), "x long")
+        assert big.rdd.getNumPartitions() == 1
+        size = big._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        assert int(size) > slots * PY_TASK_BYTES
+
+        sc.setJobGroup("widen_for_python", "widen_for_python")
+        try:
+            small = widen_for_python(events)
+            wide = widen_for_python(big)
+            same = widen_for_python(already)
+            full = widen_for_python(unsized)
+        finally:
+            sc._jsc.clearJobGroup()
+        assert sc.statusTracker().getJobIdsForGroup("widen_for_python") == []
+
+        # the sf0.001 events scan is far below one task's bytes: it
+        # keeps its scan width and gains no exchange
+        assert small is events
+        assert "Exchange" not in plan_string(small)
+        assert wide.rdd.getNumPartitions() == slots
+        assert full.rdd.getNumPartitions() == slots
         # already-wide inputs pass through untouched (no extra shuffle)
-        assert widen_for_python(wide) is wide
+        assert same is already
 
     def test_tpch_shapes_never_broadcast_lineitem(
         self, spark, sf_dir, queries

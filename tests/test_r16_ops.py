@@ -112,9 +112,9 @@ class TestPinSessionConfsQuiet:
 class TestWidenScanScanOnly:
     """``readers.widen_scan`` reads the input's partition count while
     the query is being built. On a plan with an exchange that can run
-    jobs, so every caller must hand it a scan-shaped plan. Each key
-    that calls it is built with the helper wrapped: the wrapped call
-    must run no job."""
+    jobs, so every caller must hand it a scan-shaped plan, and the
+    helper refuses one with an exchange. Each key that calls it is
+    built with the helper wrapped: the wrapped call must run no job."""
 
     KEYS = (
         "dedup_substring_span",
@@ -128,6 +128,9 @@ class TestWidenScanScanOnly:
         "embed_pq_encode",
         "sim_search_pq_adc",
         "sim_search_ivfpq_topk",
+        "dedup_ngram_jaccard",
+        "dedup_containment",
+        "pipeline_dedup_cascade",
     )
 
     def test_partition_count_runs_no_jobs(self, spark, monkeypatch, tmp_path):
@@ -163,3 +166,45 @@ class TestWidenScanScanOnly:
 
         assert [k for k, v in jobs.items() if not v] == []
         assert {k: v for k, v in jobs.items() if any(v)} == {}
+
+    def test_shuffled_input_is_refused(self, spark):
+        """Both widening helpers refuse a plan with an exchange, naming
+        the node, before they build an RDD."""
+        from etl_8x8_spark.functions.udfs import widen_for_python
+        from etl_8x8_spark.sources import readers
+
+        sc = spark.sparkContext
+        shuffled = readers.load_table(spark, SF, "events").distinct()
+        for widen in (readers.widen_scan, widen_for_python):
+            group = f"refuse_{widen.__name__}"
+            sc.setJobGroup(group, group)
+            try:
+                with pytest.raises(ValueError, match="Exchange"):
+                    widen(shuffled)
+            finally:
+                sc._jsc.clearJobGroup()
+            assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+class TestPythonStageTasks:
+    """A Python task pays a fixed cost whatever its rows, so at the
+    test sf each Python stage runs as one task with no exchange before
+    it: one job, one stage, one task."""
+
+    @pytest.mark.parametrize("key", ["jwt_verify", "multimodal_decode"])
+    def test_one_task_at_small_input(self, spark, key):
+        from etl_8x8_spark.registry import all_queries
+
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        df = all_queries()[key].builder(spark, SF)
+        group = f"python_stage_tasks_{key}"
+        sc.setJobGroup(group, group)
+        try:
+            df.write.format("noop").mode("overwrite").save()
+        finally:
+            sc._jsc.clearJobGroup()
+        jobs = tracker.getJobIdsForGroup(group)
+        stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
+        tasks = [tracker.getStageInfo(s).numTasks for s in stages]
+        assert (len(jobs), len(stages), tasks) == (1, 1, [1])
