@@ -144,23 +144,27 @@ def widen_for_python(df):
     Python chain runs serially however wide the cluster is: per-row
     Python cost dwarfs the row's bytes, so on a large input the task
     count is the throughput. But every Python task also pays a fixed
-    cost that does not depend on its rows. Measured at local[4] on a
-    4-core host with an identity ``mapInPandas`` over 2,000 rows, in
-    reused workers, Python-worker CPU per run was 0.27-0.29 s for 1
-    task, 0.96-1.11 s for 4 and 2.1-2.3 s for 8 (200,000 rows on 4
-    tasks: 1.0-1.2 s).
-    cProfile traced it to pyspark's ``worker_util.setup_spark_files``,
-    which calls ``importlib.invalidate_caches()`` once per task; under
-    Python 3.11 each of the worker's zipimporters then re-reads the
-    directory of ``pyspark.zip`` (1,328 entries). That cost lives in
-    the installed pyspark, so the engine's one lever is how many
-    Python tasks it starts, and widening a small input to every slot
-    multiplies the fixed cost for no gain.
+    cost that does not depend on its rows. With Spark's own daemon,
+    pyspark's ``worker_util.setup_spark_files`` calls
+    ``importlib.invalidate_caches()`` once per task, and under Python
+    3.11 each zipimporter on the worker's path then re-reads its
+    archive's directory: 16 importers, 26,672 entries per task
+    (LESSONS #64, #65). Engine sessions start the ``pyworker`` daemon,
+    which takes Spark's archives off the worker's path. Measured at
+    local[4] on a 4-core host with an identity ``mapInPandas`` over
+    2,000 rows in reused workers, Python-worker CPU per run went from
+    0.20-0.33 s to 0.02-0.05 s on 1 task, 0.96-1.30 s to 0.13-0.23 s
+    on 4 and 1.97-2.74 s to 0.32-0.38 s on 8; whole-process-tree CPU
+    from 0.50-0.91 s to 0.34-0.66 s, 1.66-2.25 s to 0.58-0.85 s and
+    2.62-3.67 s to 0.96-1.22 s. So a task still costs something, and
+    widening a small input to every slot still multiplies that for no
+    gain.
 
     ``PY_TASK_BYTES`` (512 KiB) sizes a task at about 25k rows of the
     ``events`` scan (about 20.5 bytes per row on disk), about 0.5 s of
-    ``jwt_verify`` HMAC work at 20 µs per row: roughly twice a task's
-    fixed cost. So sf0.01 inputs (events 221 kB, the document payload
+    ``jwt_verify`` HMAC work at 20 µs per row: about twice a task's
+    fixed cost under Spark's daemon, and over ten times it under the
+    engine's. So sf0.01 inputs (events 221 kB, the document payload
     projection 90 kB) run as one task, and sf0.1 events (2.0 MB) as 4.
     A plan Spark cannot size reports ``Long.MaxValue`` and gets full
     width; an input already as wide as the target is returned as is;

@@ -1,10 +1,11 @@
 """``session.get_spark``: the compiled-class cache of whole-stage codegen
-holds a working set larger than Spark's default of 100 classes."""
+holds a working set larger than Spark's default of 100 classes, and
+engine sessions start the engine's Python-worker daemon."""
 
 from __future__ import annotations
 
 import bench
-from etl_8x8_spark.session import CODEGEN_CACHE_MAX_ENTRIES
+from etl_8x8_spark.session import CODEGEN_CACHE_MAX_ENTRIES, PYTHON_DAEMON_MODULE
 
 PROJECTIONS = 120
 
@@ -25,3 +26,8 @@ def test_repeated_working_set_above_100_classes_compiles_once(spark):
     first = _pass_compiles(spark)
     assert first > 100  # the working set really exceeds Spark's default
     assert _pass_compiles(spark) == 0
+
+
+def test_engine_sessions_start_the_engine_python_daemon(spark):
+    conf = spark.sparkContext.getConf().get("spark.python.daemon.module")
+    assert conf == PYTHON_DAEMON_MODULE == "etl_8x8_spark.pyworker"
