@@ -24,7 +24,7 @@ buckets) instead of 1, and each task sorts ~N/B rows. At 100 TB raise
 ``buckets``; the bucket-offset window stays a <=B-row single task
 either way.
 
-``ntile_from_rank`` closes the loop for quantile scoring: Spark's
+``ntile_from_rank_sql`` closes the loop for quantile scoring: Spark's
 ``ntile(t)`` is a pure function of (row_number, n, t) — first
 ``n % t`` tiles get ``ceil(n/t)`` rows, the rest ``floor(n/t)`` — so
 an exact distributed row_number gives an exact distributed ntile with
@@ -34,7 +34,7 @@ no extra shuffle.
 from __future__ import annotations
 
 from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 #: Default bucket count: 1024-way parallelism upper bound, 1024-row
@@ -339,36 +339,16 @@ def histogram_global_rank_multi(
     )
 
 
-def ntile_from_rank(i: Column, n: Column, t: int) -> Column:
-    """Exact ``ntile(t)`` from a 1-based global row_number ``i`` and
-    total count ``n`` — Spark/DuckDB ntile semantics: the first
-    ``n % t`` tiles hold ``ceil(n/t)`` rows, the rest ``floor(n/t)``.
-
-    Pure integer arithmetic on longs (floor-div via (a - a%b)/b so no
-    float path), returns int. Divisor guarded for the n < t case
-    (where every row falls in the first branch anyway).
-    """
-
-    def idiv(a: Column, b: Column) -> Column:
-        return ((a - a % b) / b).cast("long")
-
-    q = idiv(n, F.lit(t))
-    r = (n % t).cast("long")
-    cut = r * (q + 1)
-    return (
-        F.when(i <= cut, F.lit(1) + idiv(i - 1, q + 1))
-        .otherwise(F.lit(1) + r + idiv(i - 1 - cut, F.greatest(q, F.lit(1))))
-        .cast("int")
-    )
-
-
 def ntile_from_rank_sql(i: str, n: str, t: int) -> str:
-    """SQL-string twin of ``ntile_from_rank`` (guide §4.4: assemble
-    hot-path expression trees as strings, not chained Column ops).
-    ``i``/``n`` are SQL expressions; the emitted text reproduces the
-    Column form's arithmetic operation-for-operation (int literals,
-    double ``/`` then CAST AS BIGINT, greatest-guarded divisor), so
-    results are bit-identical — pinned by the same oracle hashes."""
+    """Exact ``ntile(t)`` from a 1-based global row_number ``i`` and
+    total count ``n`` (SQL expressions) — Spark/DuckDB ntile
+    semantics: the first ``n % t`` tiles hold ``ceil(n/t)`` rows, the
+    rest ``floor(n/t)``.
+
+    Integer arithmetic on longs (floor-div as (a - a%b)/b, the double
+    quotient cast back to BIGINT), returns int. The divisor is guarded
+    for the n < t case (where every row falls in the first branch
+    anyway). SQL text, not chained Column ops (guide §4.4)."""
 
     def idiv(a: str, b: str) -> str:
         return f"CAST((({a}) - ({a}) % ({b})) / ({b}) AS BIGINT)"

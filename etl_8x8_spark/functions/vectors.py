@@ -2,10 +2,18 @@
 
 Floating-point summation is order-dependent, so the dot products and
 norms used by the similarity operators fold LEFT over the array in both
-engines: Spark ``F.aggregate`` is a sequential left fold, and DuckDB
+engines: Spark ``aggregate`` is a sequential left fold, and DuckDB
 ``list_reduce`` folds left too — same element order, same IEEE ops,
 bit-identical doubles, so even comparisons/orderings derived from the
-values agree across engines.
+values agree across engines. One exception: a zero sum may differ in
+sign, as Spark folds from ``0.0D`` and DuckDB from the first product
+(``0.0 + -0.0`` is ``0.0``); the two zeros compare equal.
+
+The Spark side is SQL text for ``F.expr`` / ``selectExpr``, the one
+form of these expressions: a lambda higher-order Column op costs
+several py4j round trips per build, a string none (guide §4.4). A
+cosine is ``F.expr(f"{dot_sql('qe', 'embedding')} / (qn * nrm)")``,
+with both norms projected once per row, not once per pair.
 
 Everything here is a built-in higher-order function (whole-stage
 codegen'd, JVM-side) — no UDF in the vector hot path.
@@ -13,34 +21,10 @@ codegen'd, JVM-side) — no UDF in the vector hot path.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-
-def dot(a: Column, b: Column) -> Column:
-    """Σ a_i·b_i as a left-fold over doubles."""
-    products = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(products, F.lit(0.0), lambda acc, v: acc + v)
-
-
-def norm(a: Column) -> Column:
-    """Euclidean norm, same fold order as :func:`dot`."""
-    return F.sqrt(dot(a, a))
-
-
-def cosine(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
-    """Cosine similarity with precomputed norms (norms are computed
-    once per row, not once per pair)."""
-    return dot(a, b) / (norm_a * norm_b)
-
 
 def dot_sql(a: str, b: str) -> str:
-    """Spark-SQL string twin of :func:`dot` — the IDENTICAL left fold
-    assembled as one expression string instead of two lambda
-    higher-order-function Column ops (guide §4.4: each F.zip_with /
-    F.aggregate lambda costs multiple py4j round-trips per build;
-    the string form costs none). Same analyzed plan, bit-identical
-    doubles."""
+    """Σ a_i·b_i as a left fold over doubles; ``a``/``b`` are SQL
+    expressions."""
     return (
         f"aggregate(zip_with({a}, {b},"
         " (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
@@ -49,12 +33,12 @@ def dot_sql(a: str, b: str) -> str:
 
 
 def norm_sql(a: str) -> str:
-    """Spark-SQL string twin of :func:`norm` (same fold order)."""
+    """Euclidean norm, same fold order as :func:`dot_sql`."""
     return f"sqrt({dot_sql(a, a)})"
 
 
 def oracle_dot(a: str, b: str) -> str:
-    """DuckDB twin of :func:`dot` — left fold via ``list_reduce``."""
+    """DuckDB twin of :func:`dot_sql` — left fold via ``list_reduce``."""
     return (
         f"list_reduce(list_transform(generate_series(1, len({a})),"
         f" i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)),"

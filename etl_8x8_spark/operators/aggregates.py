@@ -2944,7 +2944,7 @@ def agg_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spend quantizes to integer cents so the cumulative sums are
     exact; both shares are floor-quantized integer ratios.
     """
-    from ..functions.ranks import histogram_global_rank, ntile_from_rank
+    from ..functions.ranks import histogram_global_rank, ntile_from_rank_sql
 
     orders = load_table(spark, sf_dir, "orders")
     spend = orders.groupBy("o_custkey").agg(
@@ -2958,7 +2958,7 @@ def agg_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = spend.agg(F.sum("s_u").alias("tot_u"))
     cum = ranked.crossJoin(F.broadcast(tot)).select(
-        ntile_from_rank(F.col("rk"), F.col("n"), 10).alias("decile"),
+        F.expr(ntile_from_rank_sql("rk", "n", 10)).alias("decile"),
         "rk",
         "n",
         F.col("cum").alias("cum_u"),

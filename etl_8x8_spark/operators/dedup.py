@@ -42,7 +42,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_8x8_spark.functions.iterative import bound_round_lineage
-from etl_8x8_spark.functions.vectors import cosine, norm, oracle_dot, oracle_norm
+from etl_8x8_spark.functions.vectors import dot_sql, norm_sql, oracle_dot, oracle_norm
 from etl_8x8_spark.registry import register
 from etl_8x8_spark.sources.readers import load_table, widen_scan
 
@@ -89,51 +89,32 @@ def seeded_near_corpus(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", "text").unionByName(variants)
 
 
-def normalized(text: Column = None):  # type: ignore[assignment]
-    """lower + trim + collapse internal whitespace."""
-    c = F.col("text") if text is None else text
-    return F.lower(F.trim(F.regexp_replace(c, r"\s+", " ")))
-
-
-_NORM_SQL = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
-
-
-def tokens(col=None):
-    c = normalized(col)
-    return F.split(c, " ")
-
-
-_TOKENS_SQL = f"string_split({_NORM_SQL}, ' ')"
-
-# Spark-SQL string twin of tokens() (guide §4.4: the dedup family's
-# expression stacks are assembled as SQL strings at the hot call
-# sites — identical trees, a handful of py4j calls instead of
-# hundreds of chained Column/lambda ops). '\\s+' unescapes to the
-# same \s+ pattern the Column form passes verbatim.
-_NORM_SQLX = r"lower(trim(regexp_replace(text, '\\s+', ' ')))"
+# The Spark side of every expression the text, dedup and similarity
+# families share is SQL text, one form per expression: a stack of
+# chained Column/lambda ops costs hundreds of py4j round trips per
+# build, one F.expr string a handful (OPTIMIZATION_r15.md, "dedup
+# family expression-stack stringification"). The names without the X
+# (_NORM_SQL, _shingles_sql, ...) are the DuckDB oracle's forms.
+# Spark-side SQL text must not contain a backslash escape: under the
+# legacy spark.sql.parser.escapedStringLiterals=true a driver-supplied
+# session would read '\\s+' as a literal backslash. So the whitespace
+# class is Java's \s set with the real characters embedded here.
+_NORM_SQLX = "lower(trim(regexp_replace(text, '[ \t\n\x0b\f\r]+', ' ')))"
 _TOKENS_SQLX = f"split({_NORM_SQLX}, ' ')"
 
+_NORM_SQL = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
+_TOKENS_SQL = f"string_split({_NORM_SQL}, ' ')"
 
-def shingles(tok_col: Column, n: int = 3) -> Column:
-    """Word n-gram shingle set (distinct).
 
-    Built from n shifted slices folded with ``zip_with`` — NOT a
-    ``transform`` over positions with ``slice(tok_col, i, n)`` inside
-    the lambda: when ``tok_col`` is an expression (the usual
-    ``tokens()`` split), a lambda that references it re-derives the
-    whole split per OUTPUT ELEMENT, turning shingling O(tokens²) in
-    split evaluations (measured 2-6× slowdowns across the dedup
-    family). Shifted slices reference the expression O(n) times per
-    ROW. ``zip_with`` pads the shorter side with NULL and
-    ``concat_ws`` skips NULLs, which exactly reproduces the
-    end-of-array truncation of the positional form for short docs."""
-    m = F.greatest(F.size(tok_col) - (n - 1), F.lit(1))
-    acc = F.slice(tok_col, 1, m)
-    for k in range(2, n + 1):
-        acc = F.zip_with(
-            acc, F.slice(tok_col, k, m), lambda a, b: F.concat_ws(" ", a, b)
-        )
-    return F.array_distinct(acc)
+def normalized(text: str = "text") -> Column:
+    """lower + trim + collapse internal whitespace of the SQL
+    expression ``text`` (:data:`_NORM_SQLX` over it)."""
+    return F.expr(_NORM_SQLX.replace("text", text, 1))
+
+
+def tokens() -> Column:
+    """The normalized ``text`` split on single spaces."""
+    return F.expr(_TOKENS_SQLX)
 
 
 def _shingles_sql(toks: str, n: int = 3) -> str:
@@ -145,9 +126,18 @@ def _shingles_sql(toks: str, n: int = 3) -> str:
 
 
 def _shingles_sqlx(toks: str, n: int = 3) -> str:
-    """Spark-SQL string twin of :func:`shingles` — the same shifted-
-    slice zip_with fold, token expression referenced O(n) times per
-    row (never per element)."""
+    """Word n-gram shingle set (distinct).
+
+    Built from n shifted slices folded with ``zip_with`` — NOT a
+    ``transform`` over positions with ``slice(toks, i, n)`` inside the
+    lambda: when ``toks`` is an expression (the usual tokens split), a
+    lambda that references it re-derives the whole split per OUTPUT
+    ELEMENT, turning shingling O(tokens²) in split evaluations
+    (measured 2-6× slowdowns across the dedup family). Shifted slices
+    reference the expression O(n) times per ROW. ``zip_with`` pads the
+    shorter side with NULL and ``concat_ws`` skips NULLs, which exactly
+    reproduces the end-of-array truncation of the positional form for
+    short docs."""
     m = f"greatest(size({toks}) - {n - 1}, 1)"
     acc = f"slice({toks}, 1, {m})"
     for k in range(2, n + 1):
@@ -411,25 +401,13 @@ _PH_B_MUL = 2_654_435_761
 _PH_B_MOD = 1 << 32
 
 
-def token_hashes(tok_col: Column) -> Column:
+def _token_hashes_sqlx(toks: str) -> str:
     """Portable per-token polynomial hash (char left-fold mod P).
 
     One fold per token — shingle hashes then combine these O(1) per
     shingle instead of re-hashing ~3x the characters per shingle.
     Pass a MATERIALIZED column to consumers that slice it (each slice
     reference re-evaluates the expression)."""
-    return F.transform(
-        tok_col,
-        lambda t: F.aggregate(
-            F.transform(F.split(t, ""), lambda c: F.ascii(c).cast("long")),
-            F.lit(0).cast("long"),
-            lambda acc, v: (acc * _PH_CHAR_MUL + v) % _PH_P,
-        ),
-    )
-
-
-def _token_hashes_sqlx(toks: str) -> str:
-    """Spark-SQL string twin of :func:`token_hashes`."""
     return (
         f"transform({toks}, t -> aggregate("
         "transform(split(t, ''), c -> CAST(ascii(c) AS BIGINT)),"
@@ -439,7 +417,7 @@ def _token_hashes_sqlx(toks: str) -> str:
 
 
 def _token_hashes_sql(toks: str) -> str:
-    """DuckDB twin of :func:`token_hashes` (string_split(t, '') splits
+    """DuckDB twin of :func:`_token_hashes_sqlx` (string_split(t, '') splits
     into characters in DuckDB, matching Spark's split(t, ''))."""
     return (
         f"list_transform({toks}, t -> list_reduce("
@@ -449,27 +427,12 @@ def _token_hashes_sql(toks: str) -> str:
     )
 
 
-def shingle_hashes(th: Column, n: int = 3) -> Column:
+def _shingle_hashes_sqlx(th: str, n: int = 3) -> str:
     """Order-sensitive hash of every word n-gram, combined from the
     per-token hashes with the same shifted-slice zip as
-    :func:`shingles` (short docs truncate identically: a NULL slice
-    element leaves the accumulator unchanged, mirroring concat_ws
-    skipping NULLs)."""
-    m = F.greatest(F.size(th) - (n - 1), F.lit(1))
-    acc = F.slice(th, 1, m)
-    for k in range(2, n + 1):
-        acc = F.zip_with(
-            acc,
-            F.slice(th, k, m),
-            lambda a, b: F.when(b.isNull(), a).otherwise(
-                (a * _PH_TOK_MUL + b) % _PH_P
-            ),
-        )
-    return acc
-
-
-def _shingle_hashes_sqlx(th: str, n: int = 3) -> str:
-    """Spark-SQL string twin of :func:`shingle_hashes`."""
+    :func:`_shingles_sqlx` (short docs truncate identically: a NULL
+    slice element leaves the accumulator unchanged, mirroring
+    concat_ws skipping NULLs)."""
     m = f"greatest(size({th}) - {n - 1}, 1)"
     acc = f"slice({th}, 1, {m})"
     for k in range(2, n + 1):
@@ -482,7 +445,7 @@ def _shingle_hashes_sqlx(th: str, n: int = 3) -> str:
 
 
 def _shingle_hashes_sql(th: str, n: int = 3) -> str:
-    """DuckDB twin of :func:`shingle_hashes` — out-of-range list
+    """DuckDB twin of :func:`_shingle_hashes_sqlx` — out-of-range list
     indexing yields NULL, matching the zip_with padding."""
     acc = f"({th})[i]"
     for k in range(2, n + 1):
@@ -496,7 +459,7 @@ def _shingle_hashes_sql(th: str, n: int = 3) -> str:
     )
 
 
-def minhash_signature(sh: Column) -> Column:
+def _minhash_signature_sqlx(sh: str) -> str:
     """32-function MinHash signature as a SINGLE left fold over the
     shingle hashes: acc_i = min(acc_i, (a + i·b) mod P) with
     b = Knuth-multiplicative(a).
@@ -507,26 +470,6 @@ def minhash_signature(sh: Column) -> Column:
     expressions, which would otherwise re-hash every shingle once per
     function. min over the multiset == min over the set, so the input
     needs no array_distinct."""
-    init = F.array_repeat(F.lit(1 << 62).cast("long"), _MINHASH_FUNCS)
-    idx = F.sequence(F.lit(0), F.lit(_MINHASH_FUNCS - 1))
-    pairs = F.transform(
-        sh, lambda a: F.array(a, (a * _PH_B_MUL) % _PH_B_MOD)
-    )
-    return F.aggregate(
-        pairs,
-        init,
-        lambda acc, p: F.zip_with(
-            acc,
-            idx,
-            lambda m, i: F.least(
-                m, (F.element_at(p, 1) + i * F.element_at(p, 2)) % _PH_P
-            ),
-        ),
-    )
-
-
-def _minhash_signature_sqlx(sh: str) -> str:
-    """Spark-SQL string twin of :func:`minhash_signature`."""
     init = f"array_repeat(CAST({1 << 62} AS BIGINT), {_MINHASH_FUNCS})"
     idx = f"sequence(0, {_MINHASH_FUNCS - 1})"
     pairs = f"transform({sh}, a -> array(a, (a * {_PH_B_MUL}) % {_PH_B_MOD}))"
@@ -538,7 +481,7 @@ def _minhash_signature_sqlx(sh: str) -> str:
 
 
 def _minhash_signature_sql(sh: str) -> str:
-    """DuckDB twin of :func:`minhash_signature`. The accumulator and
+    """DuckDB twin of :func:`_minhash_signature_sqlx`. The accumulator and
     the (a, b) pairs are both BIGINT lists so list_reduce's
     init-via-prepend trick type-checks."""
     init = (
@@ -553,22 +496,11 @@ def _minhash_signature_sql(sh: str) -> str:
     )
 
 
-def band_hashes(sig: Column) -> Column:
+def _band_hashes_sqlx(sig: str) -> str:
     """Band the signature: a polynomial fold over each r-row slice
     (slices addressed positionally so ``sig`` should be a materialized
     column, not a re-evaluated expression). Signature entries are
     < P, so the fold never overflows."""
-    bands = []
-    for b in range(_BANDS):
-        h = F.lit(0).cast("long")
-        for r in range(_ROWS_PER_BAND):
-            h = (h * _PH_TOK_MUL + F.element_at(sig, b * _ROWS_PER_BAND + r + 1)) % _PH_P
-        bands.append(h)
-    return F.array(*bands)
-
-
-def _band_hashes_sqlx(sig: str) -> str:
-    """Spark-SQL string twin of :func:`band_hashes`."""
     bands = []
     for b in range(_BANDS):
         h = "CAST(0 AS BIGINT)"
@@ -658,9 +590,9 @@ def dedup_minhash_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CollapseProject + plan duplication re-derive it per consumer.
     # (At warehouse scale this persist is a materialized signature
     # table; 8-byte×32 signatures are ~0.3% of corpus bytes.)
-    # token_hashes is materialized as its own column first: the three
-    # shifted-slice references in shingle_hashes would each re-run the
-    # per-char fold if handed the raw expression.
+    # The token hashes are materialized as their own column first: the
+    # three shifted-slice references in the shingle hash would each
+    # re-run the per-char fold if handed the raw expression.
     sig_df = corpus.select(
         "doc_id",
         F.expr(_shingles_sqlx(_TOKENS_SQLX)).alias("sset"),
@@ -865,9 +797,10 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reference.
     fp = (
         corpus.select("doc_id", tokens().alias("toks"))
-        .select("doc_id", token_hashes(F.col("toks")).alias("th"))
+        .select("doc_id", F.expr(_token_hashes_sqlx("toks")).alias("th"))
         .select(
-            "doc_id", simhash_counters(shingle_hashes(F.col("th"))).alias("counters")
+            "doc_id",
+            simhash_counters(F.expr(_shingle_hashes_sqlx("th"))).alias("counters"),
         )
         .select("doc_id", simhash_from_counters(F.col("counters")).alias("fp"))
         .persist()  # lifecycle: see persist-barrier note in dedup_ngram_jaccard
@@ -952,13 +885,11 @@ def dedup_embed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "embedding",
         (F.col("vec_id") % _NEAR_OFFSET).alias("block_key"),
-        norm(F.col("embedding")).alias("nrm"),
+        F.expr(norm_sql("embedding")).alias("nrm"),
     )
     a = normed.alias("a")
     b = normed.alias("b")
-    sim = cosine(
-        F.col("a.embedding"), F.col("b.embedding"), F.col("a.nrm"), F.col("b.nrm")
-    )
+    sim = F.expr(f"{dot_sql('a.embedding', 'b.embedding')} / (a.nrm * b.nrm)")
     return (
         a.join(
             b,
@@ -1345,18 +1276,16 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("vec_id").alias("cid"),
             F.col("embedding").alias("cvec"),
-            norm(F.col("embedding")).alias("cnrm"),
+            F.expr(norm_sql("embedding")).alias("cnrm"),
         )
     )
     base = emb.select(
-        "vec_id", "embedding", norm(F.col("embedding")).alias("nrm")
+        "vec_id", "embedding", F.expr(norm_sql("embedding")).alias("nrm")
     )
     sims = base.crossJoin(F.broadcast(cents)).select(
         "vec_id",
         "cid",
-        cosine(
-            F.col("embedding"), F.col("cvec"), F.col("nrm"), F.col("cnrm")
-        ).alias("sim"),
+        F.expr(f"{dot_sql('embedding', 'cvec')} / (nrm * cnrm)").alias("sim"),
     )
     # argmax via max(struct(sim, -cid)): struct ordering compares sim
     # first, then -cid — highest sim wins, ties to the SMALLEST cid —
@@ -1702,28 +1631,15 @@ def _seeded_span_corpus(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", "text").unionByName(mids)
 
 
-def positional_shingles(tok_col: Column, k: int) -> Column:
-    """ORDERED word k-gram array (index i = shingle starting at token
-    i+1) — the position-preserving sibling of ``shingles()`` (no
-    ``array_distinct``), built with the same shifted-slice ``zip_with``
-    fold so the token expression is referenced O(k) times per ROW, not
-    per output element (see shingles() for the measured O(tokens²)
-    trap). Caller must guarantee ``size(tok_col) >= k``: every shifted
-    slice then has the full ``size-k+1`` elements and no NULL padding
-    (= no partial shingles) occurs."""
-    m = F.size(tok_col) - (k - 1)
-    acc = F.slice(tok_col, 1, m)
-    for j in range(2, k + 1):
-        acc = F.zip_with(
-            acc, F.slice(tok_col, j, m), lambda a, b: F.concat_ws(" ", a, b)
-        )
-    return acc
-
-
 def _positional_shingles_sqlx(toks: str, k: int) -> str:
-    """Spark-SQL string twin of :func:`positional_shingles` — same
-    shifted-slice zip_with fold (no greatest: caller guarantees
-    size >= k, exactly the Column form's contract)."""
+    """ORDERED word k-gram array (index i = shingle starting at token
+    i+1) — the position-preserving sibling of :func:`_shingles_sqlx`
+    (no ``array_distinct``), built with the same shifted-slice
+    ``zip_with`` fold so the token expression is referenced O(k) times
+    per ROW, not per output element (see :func:`_shingles_sqlx` for the
+    measured O(tokens²) trap). Caller must guarantee ``size(toks) >= k``:
+    every shifted slice then has the full ``size-k+1`` elements and no
+    NULL padding (= no partial shingles) occurs, hence no greatest."""
     m = f"(size({toks}) - {k - 1})"
     acc = f"slice({toks}, 1, {m})"
     for j in range(2, k + 1):

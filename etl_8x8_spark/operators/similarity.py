@@ -23,7 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_8x8_spark.functions.vectors import cosine, norm, oracle_dot, oracle_norm
+from etl_8x8_spark.functions.vectors import dot_sql, norm_sql, oracle_dot, oracle_norm
 from etl_8x8_spark.registry import register
 from etl_8x8_spark.sources.readers import load_table, widen_scan
 
@@ -65,7 +65,9 @@ def sim_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``sim_search_lsh_topk``.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    normed = emb.select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
+    normed = emb.select(
+        "vec_id", "embedding", F.expr(norm_sql("embedding")).alias("nrm")
+    )
     q = normed.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("qe"),
@@ -76,7 +78,7 @@ def sim_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             "vec_id",
-            cosine(F.col("qe"), F.col("embedding"), F.col("qn"), F.col("nrm")).alias(
+            F.expr(f"{dot_sql('qe', 'embedding')} / (qn * nrm)").alias(
                 "sim"
             ),
         )
@@ -162,14 +164,14 @@ def sim_search_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall-tested."""
     emb = load_table(spark, sf_dir, "embeddings")
     normed = emb.select(
-        "vec_id", "embedding", norm(F.col("embedding")).alias("nrm")
+        "vec_id", "embedding", F.expr(norm_sql("embedding")).alias("nrm")
     )
     cent = normed.filter(F.col("vec_id") < _IVF_K).select(
         F.col("vec_id").alias("cid"),
         F.col("embedding").alias("ce"),
         F.col("nrm").alias("cn"),
     )
-    csim = cosine(F.col("embedding"), F.col("ce"), F.col("nrm"), F.col("cn"))
+    csim = F.expr(f"{dot_sql('embedding', 'ce')} / (nrm * cn)")
     w_assign = Window.partitionBy("vec_id").orderBy(
         csim.desc(), F.col("cid").asc()
     )
@@ -184,7 +186,7 @@ def sim_search_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("qe"),
         F.col("nrm").alias("qn"),
     )
-    qsim = cosine(F.col("qe"), F.col("ce"), F.col("qn"), F.col("cn"))
+    qsim = F.expr(f"{dot_sql('qe', 'ce')} / (qn * cn)")
     w_probe = Window.partitionBy("q_id").orderBy(qsim.desc(), F.col("cid").asc())
     probes = (
         q.crossJoin(F.broadcast(cent))
@@ -198,7 +200,7 @@ def sim_search_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             "vec_id",
-            cosine(F.col("qe"), F.col("embedding"), F.col("qn"), F.col("nrm")).alias(
+            F.expr(f"{dot_sql('qe', 'embedding')} / (qn * nrm)").alias(
                 "sim"
             ),
         )
@@ -330,7 +332,7 @@ def sim_search_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     normed = emb.select(
         "vec_id",
         "embedding",
-        norm(F.col("embedding")).alias("nrm"),
+        F.expr(norm_sql("embedding")).alias("nrm"),
         lsh_bucket(F.col("embedding"), _LSH_DIM).alias("bucket"),
     )
     q = normed.filter(F.col("vec_id") < _N_QUERIES).select(
@@ -360,7 +362,7 @@ def sim_search_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             "vec_id",
-            cosine(F.col("qe"), F.col("embedding"), F.col("qn"), F.col("nrm")).alias(
+            F.expr(f"{dot_sql('qe', 'embedding')} / (qn * nrm)").alias(
                 "sim"
             ),
         )
@@ -469,14 +471,14 @@ def sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     n_cells = max(_IVF_K, math.ceil(emb.count() / _KNN_CELL_TARGET))
     normed = emb.select(
-        "vec_id", "embedding", norm(F.col("embedding")).alias("nrm")
+        "vec_id", "embedding", F.expr(norm_sql("embedding")).alias("nrm")
     )
     cent = normed.filter(F.col("vec_id") < n_cells).select(
         F.col("vec_id").alias("cid"),
         F.col("embedding").alias("ce"),
         F.col("nrm").alias("cn"),
     )
-    csim = cosine(F.col("embedding"), F.col("ce"), F.col("nrm"), F.col("cn"))
+    csim = F.expr(f"{dot_sql('embedding', 'ce')} / (nrm * cn)")
     w_assign = Window.partitionBy("vec_id").orderBy(
         csim.desc(), F.col("cid").asc()
     )
@@ -510,9 +512,7 @@ def sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             "vec_id",
-            cosine(
-                F.col("qe"), F.col("embedding"), F.col("qn"), F.col("nrm")
-            ).alias("sim"),
+            F.expr(f"{dot_sql('qe', 'embedding')} / (qn * nrm)").alias("sim"),
         )
     )
     w = Window.partitionBy("q_id").orderBy(
@@ -561,13 +561,15 @@ def sim_search_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning in front of the same map-side filter.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    normed = emb.select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
+    normed = emb.select(
+        "vec_id", "embedding", F.expr(norm_sql("embedding")).alias("nrm")
+    )
     q = normed.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("qe"),
         F.col("nrm").alias("qn"),
     )
-    sim = cosine(F.col("qe"), F.col("embedding"), F.col("qn"), F.col("nrm"))
+    sim = F.expr(f"{dot_sql('qe', 'embedding')} / (qn * nrm)")
     return (
         normed.join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))
         .filter(sim >= _RANGE_TAU)
@@ -851,7 +853,9 @@ def embed_normalize_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-derivation trap, LESSONS #4/#14).
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.select("vec_id", "embedding", norm(F.col("embedding")).alias("l2"))
+    base = emb.select(
+        "vec_id", "embedding", F.expr(norm_sql("embedding")).alias("l2")
+    )
     q = F.transform(
         "embedding",
         lambda v: F.round(v.cast("double") / F.col("l2") * 127).cast("int"),
@@ -1056,18 +1060,15 @@ def embed_mrl_truncate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "embedding",
         F.slice(F.col("embedding"), 1, _MRL_DIM).alias("emb_t"),
-        norm(F.col("embedding")).alias("nrm"),
-        norm(F.slice(F.col("embedding"), 1, _MRL_DIM)).alias("nrm_t"),
+        F.expr(norm_sql("embedding")).alias("nrm"),
+        F.expr(norm_sql(f"slice(embedding, 1, {_MRL_DIM})")).alias("nrm_t"),
     )
     a, b = base.alias("a"), base.alias("b")
-    cos_full = cosine(
-        F.col("a.embedding"),
-        F.col("b.embedding"),
-        F.col("a.nrm"),
-        F.col("b.nrm"),
+    cos_full = F.expr(
+        f"{dot_sql('a.embedding', 'b.embedding')} / (a.nrm * b.nrm)"
     )
-    cos_trunc = cosine(
-        F.col("a.emb_t"), F.col("b.emb_t"), F.col("a.nrm_t"), F.col("b.nrm_t")
+    cos_trunc = F.expr(
+        f"{dot_sql('a.emb_t', 'b.emb_t')} / (a.nrm_t * b.nrm_t)"
     )
     fm = F.floor(cos_full * 1e6 + 0.5).cast("long")
     tm = F.floor(cos_trunc * 1e6 + 0.5).cast("long")
@@ -1196,8 +1197,6 @@ def embed_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Expression trees ride the §4.4 SQL-string helpers
     # (_pq_subspaces / dot_sql) like the rest of the PQ family.
     emb = load_table(spark, sf_dir, "embeddings")
-    from etl_8x8_spark.functions.vectors import dot_sql
-
     cents = emb.filter(F.col("vec_id") < _PQ_K).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
     )
@@ -1321,8 +1320,6 @@ def _pq_codes_packed(emb: DataFrame) -> DataFrame:
     expanded rows map-side). r9 verdict item 4: the earlier shape
     carried M rows per vector through a second (s, cid)-join regroup
     of N·Q rows; packed codes make ADC scoring join-free."""
-    from etl_8x8_spark.functions.vectors import dot_sql
-
     cents = emb.filter(F.col("vec_id") < _PQ_K).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
     )
@@ -1613,8 +1610,6 @@ def sim_search_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-partitioned join, one window — nothing pairwise, nothing
     quadratic.
     """
-    from etl_8x8_spark.functions.vectors import dot_sql, norm_sql
-
     emb = load_table(spark, sf_dir, "embeddings")
     normed = emb.selectExpr(
         "vec_id", "embedding", f"{norm_sql('embedding')} AS nrm"
@@ -1750,7 +1745,7 @@ def ml_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = load_table(spark, sf_dir, "embeddings")
     normed = emb.select(
-        "vec_id", "embedding", norm(F.col("embedding")).alias("nrm")
+        "vec_id", "embedding", F.expr(norm_sql("embedding")).alias("nrm")
     )
     q = normed.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
@@ -1764,9 +1759,7 @@ def ml_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "q_id",
         "vec_id",
         "label",
-        cosine(
-            F.col("qe"), F.col("embedding"), F.col("qn"), F.col("nrm")
-        ).alias("sim"),
+        F.expr(f"{dot_sql('qe', 'embedding')} / (qn * nrm)").alias("sim"),
     )
     w = Window.partitionBy("q_id").orderBy(
         F.col("sim").desc(), F.col("vec_id").asc()
@@ -1995,7 +1988,7 @@ def embed_jl_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = emb.select(
         "vec_id",
         proj.alias("proj"),
-        norm(F.col("embedding")).alias("nf"),
+        F.expr(norm_sql("embedding")).alias("nf"),
     )
     return p.select(
         "vec_id",
@@ -2007,7 +2000,7 @@ def embed_jl_project(spark: SparkSession, sf_dir: str) -> DataFrame:
             ",",
         ).alias("proj_micro"),
         F.floor(
-            norm(F.col("proj")) / F.nullif(F.col("nf"), F.lit(0.0)) * 1e6
+            F.expr(norm_sql("proj")) / F.nullif(F.col("nf"), F.lit(0.0)) * 1e6
             + 0.5
         )
         .cast("long")

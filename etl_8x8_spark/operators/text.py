@@ -17,10 +17,11 @@ from etl_8x8_spark.operators.dedup import (
     _PH_B_MOD,
     _PH_B_MUL,
     _TOKENS_SQL,
+    _TOKENS_SQLX,
+    _shingles_sqlx,
     _token_hashes_sql,
+    _token_hashes_sqlx,
     normalized,
-    shingles,
-    token_hashes,
     tokens,
 )
 from etl_8x8_spark.registry import register
@@ -348,7 +349,7 @@ def text_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-row token work runs on every core (no-op on split inputs)
     docs = widen_scan(load_table(spark, sf_dir, "documents"))
     sh = docs.select(
-        "doc_id", F.explode(shingles(tokens())).alias("g")
+        "doc_id", F.explode(F.expr(_shingles_sqlx(_TOKENS_SQLX))).alias("g")
     )
     bench = (
         sh.filter(F.col("doc_id") < _CONTAM_BENCH_DOCS)
@@ -725,12 +726,16 @@ def pipeline_pretrain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # original — one string compare instead of the three extra
     # regexp_extract_all passes the standalone text_pii_redact needs
     # for its per-type counts (the pipeline only reports the boolean).
-    normed = corpus.select(
-        "doc_id",
-        "lang",
-        (red != F.col("text")).alias("had_pii"),
-        normalized(red).alias("norm"),
-    ).withColumn("toks", F.split("norm", " "))
+    normed = (
+        corpus.select(
+            "doc_id",
+            "lang",
+            (red != F.col("text")).alias("had_pii"),
+            red.alias("red"),
+        )
+        .select("doc_id", "lang", "had_pii", normalized("red").alias("norm"))
+        .withColumn("toks", F.split("norm", " "))
+    )
     ttr = F.size(F.array_distinct("toks")).cast("double") / F.size("toks")
     gated = normed.filter(
         (F.size("toks") >= _PIPE_MIN_TOKENS) & (ttr >= _PIPE_MIN_TTR)
@@ -1982,7 +1987,7 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     contributions are integer micro-units rank//degree (floor-div in
     both engines), summed exactly as BIGINTs in any order; the oracle
     unrolls the rounds as CTEs. Adjacent pairs build with the
-    shifted-slice zip (the shingles() lesson — O(n) not O(n²) in
+    shifted-slice zip (the _shingles_sqlx lesson — O(n) not O(n²) in
     split evaluations); the per-round plan is one join of the rank
     relation against the persisted pre-partitioned neighbor list + one
     min-exchange partial-agg sum (the LPA relation-reuse idiom).
@@ -2252,11 +2257,7 @@ def pipeline_corpus_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side + per-partition top-k. One composed plan, no driver-side
     data dependency.
     """
-    from etl_8x8_spark.operators.dedup import (
-        normalized,
-        seeded_exact_corpus,
-        tokens,
-    )
+    from etl_8x8_spark.operators.dedup import seeded_exact_corpus
 
     corpus = seeded_exact_corpus(
         load_table(spark, sf_dir, "documents")
@@ -2379,6 +2380,20 @@ _QC_W_MICRO = [
 ]
 _QC_W_SQL = "[" + ", ".join(str(w) for w in _QC_W_MICRO) + "]"
 
+
+def _qc_logit_sqlx(toks: str) -> str:
+    """The hashed model's exact BIGINT weight sum z over the token
+    array ``toks``: each token's char-fold hash t picks the weight in
+    bucket (t·_PH_B_MUL mod _PH_B_MOD) mod _QC_K. The document logit
+    is z / n_tokens, and z > 0 keeps the document."""
+    w_arr = "array(" + ", ".join(f"{w}L" for w in _QC_W_MICRO) + ")"
+    return (
+        f"aggregate({_token_hashes_sqlx(toks)}, CAST(0 AS BIGINT),"
+        f" (acc, t) -> acc + element_at({w_arr},"
+        f" CAST((t * {_PH_B_MUL}) % {_PH_B_MOD} % {_QC_K} AS INT) + 1))"
+    )
+
+
 _QCLS_ORACLE = f"""
 WITH th AS (
   SELECT doc_id, lang,
@@ -2437,24 +2452,13 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r16 (guide §2.5): widen the one-row-group fixture scan so the
     # per-row token work runs on every core (no-op on split inputs)
     docs = widen_scan(load_table(spark, sf_dir, "documents"))
-    w_arr = F.array(*[F.lit(w).cast("long") for w in _QC_W_MICRO])
-    th = token_hashes(tokens())
-    z = F.aggregate(
-        th,
-        F.lit(0).cast("long"),
-        lambda acc, t: acc
-        + F.element_at(
-            w_arr,
-            ((t * _PH_B_MUL) % _PH_B_MOD % _QC_K).cast("int") + 1,
-        ),
-    )
     base = docs.select(
         "doc_id",
         "lang",
         # count the raw split, not the hashed transform — size(th)
         # would re-derive every per-token char fold just to count
         F.size(tokens()).alias("n"),
-        z.alias("z"),
+        F.expr(_qc_logit_sqlx(_TOKENS_SQLX)).alias("z"),
     )
     avg_micro = F.col("z").cast("double") / F.col("n")
     return base.select(
@@ -2706,17 +2710,6 @@ def pipeline_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-row token work runs on every core (no-op on split inputs)
     docs = widen_scan(load_table(spark, sf_dir, "documents"))
     toks = tokens()
-    th = token_hashes(toks)
-    w_arr = F.array(*[F.lit(w).cast("long") for w in _QC_W_MICRO])
-    z = F.aggregate(
-        th,
-        F.lit(0).cast("long"),
-        lambda acc, t: acc
-        + F.element_at(
-            w_arr,
-            ((t * _PH_B_MUL) % _PH_B_MOD % _QC_K).cast("int") + 1,
-        ),
-    )
     n_chars = F.aggregate(
         toks, F.lit(0), lambda a, x: a + F.length(x)
     )
@@ -2724,7 +2717,7 @@ def pipeline_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         F.size(toks).alias("n_tok"),
         n_chars.alias("n_chars"),
-        z.alias("z"),
+        F.expr(_qc_logit_sqlx(_TOKENS_SQLX)).alias("z"),
     )
     verdict = (
         F.when(F.col("n_tok") < _QG_MIN_TOK, "too_short")

@@ -129,7 +129,7 @@ def window_ntile_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked relation grows with SF. The oracle keeps the literal
     five-function window as independent ground truth.
     """
-    from ..functions.ranks import histogram_global_rank, ntile_from_rank
+    from ..functions.ranks import histogram_global_rank, ntile_from_rank_sql
 
     customer = load_table(spark, sf_dir, "customer")
     ranked = histogram_global_rank(
@@ -143,7 +143,7 @@ def window_ntile_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     i, n = F.col("i"), F.col("n")
     return ranked.select(
         "c_custkey",
-        ntile_from_rank(i, n, 4).alias("spend_quartile"),
+        F.expr(ntile_from_rank_sql("i", "n", 4)).alias("spend_quartile"),
         q6(
             (i - 1).cast("double")
             / F.greatest(n - 1, F.lit(1)).cast("double"),

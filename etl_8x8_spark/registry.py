@@ -101,26 +101,28 @@ _SAMPLE_PRIORITY = [
     "stream_txn_log_tail",
     # reads its aggregate back with the writer's schema
     "view_incremental_refresh",
-    # oldest evidence: r8, then r9
-    "sink_parquet_partitioned",
-    "sink_partition_overwrite",
-    "sink_csv_roundtrip",
-    "sink_json_roundtrip",
-    "stream_static_enrich",
-    "sink_sorted_clustered",
-    "window_rank_topn_per_group",
-    "window_running_sum",
-    "window_trailing_range",
-    "window_first_last",
-    "window_cumulative_users",
-    "window_scd2_build",
-    "window_anomaly_zscore",
-    "window_gap_islands",
-    "window_rolling_median",
-    "window_holt_forecast",
-    "sort_limit_topk",
-    "sql_tpch_q3_shape",
-    "sql_tpch_q5_shape",
+    # one Spark form per shared expression (the SQL-text normalize,
+    # token, shingle, hash, vector and ntile builders): changed keys
+    # with the oldest evidence, r9 then r10, in registration order
+    "dedup_ngram_jaccard",
+    "dedup_embed_cosine",
+    "dedup_binary_exact",
+    "pipeline_training_data",
+    "dedup_incremental_minhash",
+    "sim_search_topk",
+    "sim_search_ivf_topk",
+    "sim_knn_join",
+    "sim_search_range",
+    "embed_normalize_quantize",
+    "pipeline_pretrain_corpus",
+    "dedup_minhash_near",
+    "dedup_simhash",
+    "sim_search_lsh_topk",
+    "text_analysis_stats",
+    "text_lang_id",
+    "text_tfidf_terms",
+    "text_fingerprint",
+    "text_ngram_counts",
 ]
 
 

@@ -67,12 +67,14 @@ def pin_session_confs(spark: SparkSession) -> None:
       rejects; it is read as nanos-since-epoch and floor-converted to
       micros (the same truncation DuckDB 1.x applies on read).
     - ``spark.sql.parser.escapedStringLiterals=false`` (r16 ADVICE):
-      the SQL-string expression twins (dedup._NORM_SQLX regexes, the
-      BPE merge literals in text.py) encode ``'\\\\s+'``-style escapes
-      that unescape correctly only under the default parser; a
-      driver-supplied session with the legacy conf set would silently
-      flip them to literal-backslash matches and diverge from the
-      Column forms and the oracle.
+      the engine builds its shared expressions as Spark SQL text, and
+      some of it still encodes backslash escapes (the BPE merge
+      literals in text.py) that unescape correctly only under the
+      default parser; a driver-supplied session with the legacy conf
+      set would silently flip them to literal-backslash matches and
+      diverge from the oracle. The normalize/token text
+      (dedup._NORM_SQLX) holds no escape and gives the same result
+      under both values, pinned or not.
 
     Each conf is set only when its effective value differs. Setting
     the deprecated ``escapedStringLiterals`` logs a WARN, and once it

@@ -36,9 +36,12 @@ def _src_tag(sf_dir: str, table: str) -> str:
     """Scratch-reuse key that survives fixture regeneration: sf tag +
     the source table's mtime — a regenerated parquet at the same path
     gets a fresh scratch dir instead of being served stale derived
-    files. Used ONLY by the incremental dedup operators, whose
-    standing cross-run index IS the operator's subject (unlike the
-    removed manifest-lake / PQ base-vector memos, r16)."""
+    files. Every builder that keeps derived files under
+    ``scratch_dir()`` names them with it: the transaction-log tables,
+    the Avro copy and the bad-CSV and metadata-stats fixtures here, the
+    two transaction-log stream keys (streaming/streams.py) and
+    ``dedup_incremental_substring``'s standing index
+    (operators/dedup.py)."""
     p = os.path.join(sf_dir, f"{table}.parquet")
     try:
         mt = os.stat(p).st_mtime_ns

@@ -329,6 +329,23 @@ def _py_signature(tokens: list[str]) -> list[int]:
     return sig
 
 
+def _py_bands(sig: list[int]) -> list[int]:
+    from etl_8x8_spark.operators.dedup import (
+        _BANDS,
+        _PH_P,
+        _PH_TOK_MUL,
+        _ROWS_PER_BAND,
+    )
+
+    bands = []
+    for b in range(_BANDS):
+        h = 0
+        for r in range(_ROWS_PER_BAND):
+            h = (h * _PH_TOK_MUL + sig[b * _ROWS_PER_BAND + r]) % _PH_P
+        bands.append(h)
+    return bands
+
+
 @settings(
     max_examples=10,
     deadline=None,
@@ -336,39 +353,53 @@ def _py_signature(tokens: list[str]) -> list[int]:
 )
 @given(tokens=token_lists)
 def test_minhash_signature_triple_parity(spark, tokens):
-    """The r5 portable hash family must agree bit-for-bit across
-    Spark, DuckDB, and a pure-Python reference on ADVERSARIAL token
-    lists (empty tokens, 1-token docs, punctuation) — this is the
-    property the LSH oracles stand on. ascii('') is 0 in both engines
-    (pinned here via the empty-token case)."""
+    """The r5 portable hash family — signature AND band hashes — must
+    agree bit-for-bit across Spark, DuckDB, and a pure-Python reference
+    on ADVERSARIAL token lists (empty tokens, 1-token docs,
+    punctuation) — this is the property the LSH oracles stand on.
+    ascii('') is 0 in both engines (pinned here via the empty-token
+    case). The Spark side is the SQL text the LSH builders run."""
     import duckdb
 
     from etl_8x8_spark.operators.dedup import (
+        _BANDS,
+        _band_hash_sql,
+        _band_hashes_sqlx,
         _minhash_signature_sql,
+        _minhash_signature_sqlx,
         _shingle_hashes_sql,
+        _shingle_hashes_sqlx,
         _token_hashes_sql,
-        minhash_signature,
-        shingle_hashes,
-        token_hashes,
+        _token_hashes_sqlx,
     )
 
     expected = _py_signature(tokens)
+    expected_bands = _py_bands(expected)
 
     df = spark.createDataFrame([(tokens,)], "toks array<string>")
     srow = (
-        df.select(token_hashes(F.col("toks")).alias("th"))
-        .select(minhash_signature(shingle_hashes(F.col("th"))).alias("sig"))
+        df.select(F.expr(_token_hashes_sqlx("toks")).alias("th"))
+        .select(
+            F.expr(_minhash_signature_sqlx(_shingle_hashes_sqlx("th"))).alias(
+                "sig"
+            )
+        )
+        .select("sig", F.expr(_band_hashes_sqlx("sig")).alias("bands"))
         .first()
     )
     assert list(srow["sig"]) == expected
+    assert list(srow["bands"]) == expected_bands
 
     con = duckdb.connect()
     sql_toks = "[" + ", ".join("'" + t.replace("'", "''") + "'" for t in tokens) + "]"
+    bands_sql = ", ".join(_band_hash_sql("sig", str(j)) for j in range(_BANDS))
     drow = con.execute(
+        f"SELECT sig, [{bands_sql}] AS bands FROM ("
         f"SELECT {_minhash_signature_sql(_shingle_hashes_sql('th'))} AS sig "
-        f"FROM (SELECT {_token_hashes_sql(f'{sql_toks}')} AS th)"
+        f"FROM (SELECT {_token_hashes_sql(f'{sql_toks}')} AS th))"
     ).fetchone()
     assert list(drow[0]) == expected
+    assert list(drow[1]) == expected_bands
 
 
 @settings(
@@ -384,13 +415,54 @@ def test_shingle_strings_cross_engine_parity(spark, tokens):
     the short-document truncation path (< n tokens)."""
     import duckdb
 
-    from etl_8x8_spark.operators.dedup import _shingles_sql, shingles
+    from etl_8x8_spark.operators.dedup import _shingles_sql, _shingles_sqlx
 
     df = spark.createDataFrame([(tokens,)], "toks array<string>")
-    srow = df.select(shingles(F.col("toks")).alias("s")).first()
+    srow = df.select(F.expr(_shingles_sqlx("toks")).alias("s")).first()
     con = duckdb.connect()
     sql_toks = "[" + ", ".join("'" + t.replace("'", "''") + "'" for t in tokens) + "]"
     drow = con.execute(
         f"SELECT {_shingles_sql(f'{sql_toks}')} AS s"
     ).fetchone()
     assert sorted(srow["s"]) == sorted(drow[0])
+
+
+# Finite float32 values of every magnitude, subnormals and signed zeros
+# included: each product is exact in a double, so only the summation
+# order can make the engines disagree.
+float32_pairs = st.lists(
+    st.tuples(
+        st.floats(width=32, allow_nan=False, allow_infinity=False),
+        st.floats(width=32, allow_nan=False, allow_infinity=False),
+    ),
+    min_size=1,
+    max_size=16,
+)
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(pairs=float32_pairs)
+def test_dot_cross_engine_parity(spark, pairs):
+    """functions/vectors.py promises bit-identical doubles: Spark's
+    ``dot_sql`` (aggregate over zip_with) and DuckDB's ``oracle_dot``
+    (list_reduce) both fold left in element order. Compared with ``==``
+    so a zero sum may differ in sign only: Spark folds from 0.0D,
+    DuckDB from the first product, and 0.0 + -0.0 is 0.0."""
+    import duckdb
+
+    from etl_8x8_spark.functions.vectors import dot_sql, oracle_dot
+
+    a = [x for x, _ in pairs]
+    b = [y for _, y in pairs]
+    df = spark.createDataFrame([(a, b)], "a array<float>, b array<float>")
+    got = df.select(F.expr(dot_sql("a", "b")).alias("d")).first()["d"]
+    want = duckdb.connect().execute(
+        f"SELECT {oracle_dot('a', 'b')} FROM ("
+        "SELECT CAST(? AS FLOAT[]) AS a, CAST(? AS FLOAT[]) AS b)",
+        [a, b],
+    ).fetchone()[0]
+    assert got == want

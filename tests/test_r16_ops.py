@@ -109,6 +109,36 @@ class TestPinSessionConfsQuiet:
         assert calls == []
 
 
+class TestNormalizeIgnoresEscapedStringLiterals:
+    def test_same_result_under_both_values(self, spark):
+        """The whitespace class in the normalize SQL text holds no
+        backslash escape, so the legacy
+        ``spark.sql.parser.escapedStringLiterals=true`` (which would read
+        ``'\\s+'`` as a literal backslash) leaves the result unchanged —
+        for ``normalized()`` and for the token split the dedup keys run.
+        A fresh session carries the conf, so the shared one stays
+        untouched; no ``load_table`` runs to pin it back."""
+        from pyspark.sql import functions as F
+
+        from etl_8x8_spark.operators.dedup import _TOKENS_SQLX, normalized
+
+        text = "A \t b\n  C\x0b\f\rd\u00a0e\u2003F"
+
+        def run(escaped: str):
+            s = spark.newSession()
+            s.conf.set("spark.sql.parser.escapedStringLiterals", escaped)
+            row = (
+                s.createDataFrame([(text,)], "text string")
+                .select(normalized().alias("n"), F.expr(_TOKENS_SQLX).alias("t"))
+                .first()
+            )
+            return row["n"], list(row["t"])
+
+        want = ("a b c d\u00a0e\u2003f", ["a", "b", "c", "d\u00a0e\u2003f"])
+        assert run("false") == want
+        assert run("true") == want
+
+
 class TestWidenScanScanOnly:
     """``readers.widen_scan`` reads the input's partition count while
     the query is being built. On a plan with an exchange that can run

@@ -53,14 +53,16 @@ class TestDedupContainment:
             _BOILERPLATE,
             _CONTAIN_OFFSET,
             _JACCARD_THRESHOLD,
+            _TOKENS_SQLX,
+            _shingles_sqlx,
             seeded_contain_corpus,
-            shingles,
-            tokens,
         )
         from etl_8x8_spark.sources.readers import load_table
 
         corpus = seeded_contain_corpus(load_table(spark, sf_dir, "documents"))
-        sh = corpus.select("doc_id", shingles(tokens()).alias("sset"))
+        sh = corpus.select(
+            "doc_id", F.expr(_shingles_sqlx(_TOKENS_SQLX)).alias("sset")
+        )
         orig = sh.filter(F.col("doc_id") < _CONTAIN_OFFSET).alias("o")
         wrap = sh.filter(F.col("doc_id") >= _CONTAIN_OFFSET).alias("w")
         jac = (

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from etl_8x8_spark.functions.ranks import (
     histogram_global_rank,
-    ntile_from_rank,
+    ntile_from_rank_sql,
 )
 
 
@@ -86,12 +86,12 @@ class TestHistogramGlobalRank:
         w = Window.orderBy("k")
         naive = df.select("k", F.ntile(t).over(w).alias("want"))
         got = df.select(
+            "k", F.row_number().over(w).cast("long").alias("i")
+        ).select(
             "k",
-            ntile_from_rank(
-                F.row_number().over(w).cast("long"),
-                F.lit(n).cast("long"),
-                t,
-            ).alias("tile"),
+            F.expr(ntile_from_rank_sql("i", f"CAST({n} AS BIGINT)", t)).alias(
+                "tile"
+            ),
         )
         bad = got.join(naive, "k").filter(F.col("tile") != F.col("want")).count()
         assert bad == 0

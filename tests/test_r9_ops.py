@@ -87,7 +87,7 @@ class TestSubstringSpan:
         re-derive via the public helper functions."""
         from etl_8x8_spark.operators.dedup import (
             _SPAN_K,
-            positional_shingles,
+            _positional_shingles_sqlx,
             tokens,
         )
         from pyspark.sql import Window
@@ -98,7 +98,7 @@ class TestSubstringSpan:
         )
         sh = long_docs.select(
             "doc_id",
-            F.posexplode(positional_shingles(F.col("tk"), _SPAN_K)).alias(
+            F.posexplode(F.expr(_positional_shingles_sqlx("tk", _SPAN_K))).alias(
                 "pos0", "s"
             ),
         ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "s")
@@ -392,7 +392,7 @@ class TestPqAdcSearch:
         from pyspark.sql import Window
         from pyspark.sql import functions as F
 
-        from etl_8x8_spark.functions.vectors import dot
+        from etl_8x8_spark.functions.vectors import dot_sql
         from etl_8x8_spark.registry import all_queries
         from etl_8x8_spark.sources.readers import load_table
 
@@ -406,10 +406,9 @@ class TestPqAdcSearch:
         q = emb.filter(F.col("vec_id") < 8).select(
             F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
         )
-        d2 = (
-            dot(F.col("qe"), F.col("qe"))
-            - 2 * dot(F.col("qe"), F.col("embedding"))
-            + dot(F.col("embedding"), F.col("embedding"))
+        d2 = F.expr(
+            f"{dot_sql('qe', 'qe')} - 2 * {dot_sql('qe', 'embedding')}"
+            f" + {dot_sql('embedding', 'embedding')}"
         )
         s = emb.join(F.broadcast(q), F.col("vec_id") != F.col("q_id")).select(
             "q_id", "vec_id", d2.alias("d2")
