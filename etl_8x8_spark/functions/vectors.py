@@ -1,13 +1,13 @@
 """Cross-engine deterministic vector math over ``array<float>`` columns.
 
 Floating-point summation is order-dependent, so the dot products and
-norms used by the similarity operators fold LEFT over the array in both
-engines: Spark ``aggregate`` is a sequential left fold, and DuckDB
-``list_reduce`` folds left too — same element order, same IEEE ops,
-bit-identical doubles, so even comparisons/orderings derived from the
-values agree across engines. One exception: a zero sum may differ in
-sign, as Spark folds from ``0.0D`` and DuckDB from the first product
-(``0.0 + -0.0`` is ``0.0``); the two zeros compare equal.
+norms used by the similarity operators fold LEFT from ``0.0`` over the
+array in both engines: Spark ``aggregate`` is a sequential left fold
+from ``0.0D``, and DuckDB ``list_reduce`` folds left too, over the
+products with a leading ``0.0`` — same element order, same IEEE ops,
+bit-identical doubles (an empty array sums to ``0.0``, and a sum of
+negative zeros to ``+0.0``), so even comparisons/orderings derived from
+the values agree across engines.
 
 The Spark side is SQL text for ``F.expr`` / ``selectExpr``, the one
 form of these expressions: a lambda higher-order Column op costs
@@ -38,10 +38,13 @@ def norm_sql(a: str) -> str:
 
 
 def oracle_dot(a: str, b: str) -> str:
-    """DuckDB twin of :func:`dot_sql` — left fold via ``list_reduce``."""
+    """DuckDB twin of :func:`dot_sql` — left fold via ``list_reduce``
+    over ``[0.0, a_1·b_1, ...]``; index 0 is the 0.0, as a NULL array
+    must stay NULL (``list_prepend`` would make it ``[0.0]``)."""
     return (
-        f"list_reduce(list_transform(generate_series(1, len({a})),"
-        f" i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)),"
+        f"list_reduce(list_transform(generate_series(0, len({a})),"
+        f" i -> CASE WHEN i = 0 THEN 0.0::DOUBLE"
+        f" ELSE CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE) END),"
         f" (acc, v) -> acc + v)"
     )
 

@@ -2337,16 +2337,11 @@ def dedup_incremental_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     (8 bytes/row; collision odds 2^-64 per pair) — kept as the raw
     string here so the DuckDB oracle is bit-exact.
     """
-    import os
-
-    from etl_8x8_spark.sources.readers import scratch_dir
-    from etl_8x8_spark.sources.scans import _src_tag
+    from etl_8x8_spark.sources.readers import derived
 
     docs = load_table(spark, sf_dir, "documents")
-    idx_path = os.path.join(
-        scratch_dir(), f"substr_sh_index_{_src_tag(sf_dir, 'documents')}"
-    )
-    if not os.path.exists(os.path.join(idx_path, "_SUCCESS")):
+
+    def write(idx_path: str) -> None:
         tk = tokens()
         (
             widen_scan(docs).select("doc_id", tk.alias("tk"))
@@ -2360,6 +2355,8 @@ def dedup_incremental_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(idx_path)
         )
+
+    idx_path = derived(sf_dir, "substr_sh_index", ["documents"], write)
     index = spark.read.parquet(idx_path)
 
     batch = _inc_span_batch(docs)

@@ -441,18 +441,11 @@ def multimodal_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from etl_8x8_spark.sources.readers import scratch_dir
+    from etl_8x8_spark.sources.readers import derived
 
     docs = load_table(spark, sf_dir, "documents")
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    # v2 suffix: fixture layout is versioned INTO the directory name so
-    # a scratch dir built by an older layout (e.g. pre-doc_id-cap) can
-    # never be half-reused against the current oracle — changing the
-    # fixture recipe must bump this suffix (r6 advice).
-    asset_dir = os.path.join(scratch_dir(), f"assets_{tag}_v2")
-    marker = os.path.join(asset_dir, "_DONE")
-    if not os.path.exists(marker):
-        os.makedirs(asset_dir, exist_ok=True)
+
+    def write(asset_dir: str) -> None:
         # FIXTURE SETUP, not operator dataflow: this collect writes the
         # synthetic .bin asset directory the binaryFile scan below then
         # reads — in production the asset bucket pre-exists and this
@@ -472,7 +465,8 @@ def multimodal_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.path.join(asset_dir, f"doc_{r.doc_id}.bin"), "wb"
             ) as f:
                 f.write((r.prefix or "").encode("utf-8"))
-        open(marker, "w").close()
+
+    asset_dir = derived(sf_dir, "assets", ["documents"], write)
     files = spark.read.format("binaryFile").option(
         "pathGlobFilter", "*.bin"
     ).load(asset_dir)

@@ -12,9 +12,17 @@ reference's boundary validation (R14, SURVEY.md §1.3).
 
 from __future__ import annotations
 
+import functools
+import glob
+import hashlib
+import inspect
 import os
+import shutil
 import stat
+import types
+import uuid
 import weakref
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -256,3 +264,44 @@ def scratch_dir() -> str:
 def _sf_tag(sf_dir: str) -> str:
     """The sf directory's name: keys per-sf scratch dirs."""
     return os.path.basename(sf_dir.rstrip("/")) or "sf"
+
+
+@functools.cache
+def _source_digest(code: types.CodeType) -> str:
+    """Digest of a writer's source text (``getsource`` costs ms)."""
+    return hashlib.sha1(inspect.getsource(code).encode()).hexdigest()
+
+
+def derived(
+    sf_dir: str, name: str, sources: Iterable[str], write: Callable[[str], None]
+) -> str:
+    """The one build-once idiom for files derived from an sf dir's
+    tables: ``scratch_dir()/<name>_<sf tag>_<key>``, where the key
+    digests each source table's ``(st_mtime_ns, st_size)`` and the
+    source text of ``write``. A miss has ``write`` fill an empty
+    ``.tmp-<uuid>`` sibling that ``os.rename`` publishes: a rename onto
+    a non-empty dir fails, so a racing loser uses the winner's dir.
+    A publish prunes the siblings of another key, and the tmp dirs of
+    failed or crashed writers. Paths inside must be relative to it."""
+    h = hashlib.sha1(_source_digest(write.__code__).encode())
+    for table in sources:
+        st = os.stat(table_path(sf_dir, table))
+        h.update(f"{table}:{st.st_mtime_ns}:{st.st_size};".encode())
+    prefix = os.path.join(scratch_dir(), f"{name}_{_sf_tag(sf_dir)}_")
+    final = prefix + h.hexdigest()[:16]
+    if os.path.isdir(final):
+        return final
+    tmp = f"{final}.tmp-{uuid.uuid4().hex}"
+    os.makedirs(tmp)
+    write(tmp)
+    try:
+        os.rename(tmp, final)
+    except OSError:  # lost the race: the winner's dir stands
+        shutil.rmtree(tmp, ignore_errors=True)
+        if not os.path.isdir(final):
+            raise
+        return final
+    for path in glob.glob(glob.escape(prefix) + "[0-9a-f]" * 16 + "*"):
+        if path != final:
+            shutil.rmtree(path, ignore_errors=True)
+    return final

@@ -22,6 +22,7 @@ from etl_8x8_spark.registry import register
 from etl_8x8_spark.sources import txn_log
 from etl_8x8_spark.sources.readers import (
     _sf_tag,
+    derived,
     load_table,
     read_json_lines,
     scratch_dir,
@@ -30,24 +31,6 @@ from etl_8x8_spark.sources.sinks import (
     overwrite_partitions,
     write_parquet_partitioned,
 )
-
-
-def _src_tag(sf_dir: str, table: str) -> str:
-    """Scratch-reuse key that survives fixture regeneration: sf tag +
-    the source table's mtime — a regenerated parquet at the same path
-    gets a fresh scratch dir instead of being served stale derived
-    files. Every builder that keeps derived files under
-    ``scratch_dir()`` names them with it: the transaction-log tables,
-    the Avro copy and the bad-CSV and metadata-stats fixtures here, the
-    two transaction-log stream keys (streaming/streams.py) and
-    ``dedup_incremental_substring``'s standing index
-    (operators/dedup.py)."""
-    p = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        mt = os.stat(p).st_mtime_ns
-    except OSError:
-        mt = -1
-    return f"{_sf_tag(sf_dir)}_{mt}"
 
 
 @register(
@@ -268,9 +251,8 @@ def sink_sorted_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORIGINAL table, so the clustered write must preserve every row.
     """
     lineitem = load_table(spark, sf_dir, "lineitem")
-    path = os.path.join(scratch_dir(), f"lineitem_clustered_{_sf_tag(sf_dir)}")
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
+
+    def write(path: str) -> None:
         (
             # the cluster key is stored as DATE, not TIMESTAMP_NTZ:
             # Spark's parquet reader never translates NTZ predicates
@@ -284,6 +266,8 @@ def sink_sorted_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(path)
         )
+
+    path = derived(sf_dir, "lineitem_clustered", ["lineitem"], write)
     back = spark.read.parquet(path).filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("date"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("date"))
@@ -311,10 +295,11 @@ def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     set to the parquet scan, so the parquet oracle doubles as the
     format-conversion check."""
     li = load_table(spark, sf_dir, "lineitem")
-    path = os.path.join(scratch_dir(), f"lineitem_orc_{_sf_tag(sf_dir)}")
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
+
+    def write(path: str) -> None:
         li.write.mode("overwrite").orc(path)
+
+    path = derived(sf_dir, "lineitem_orc", ["lineitem"], write)
     back = spark.read.orc(path)
     return back.filter(
         (F.col("l_quantity") >= 45.0) & (F.col("l_returnflag") == "R")
@@ -376,9 +361,11 @@ def sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the round trip so any quoting/typing loss breaks the oracle. CSV
     is the interchange sink; parquet stays the analytics format."""
     nation = load_table(spark, sf_dir, "nation")
-    path = os.path.join(scratch_dir(), f"nation_csv_{_sf_tag(sf_dir)}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+
+    def write(path: str) -> None:
         nation.write.mode("overwrite").option("header", "true").csv(path)
+
+    path = derived(sf_dir, "nation_csv", ["nation"], write)
     back = (
         spark.read.schema(
             "n_nationkey long, n_name string, n_regionkey long"
@@ -411,13 +398,15 @@ def sink_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the classic silent-corruption point; fixing the scale at the
     boundary makes the round trip exact."""
     supplier = load_table(spark, sf_dir, "supplier")
-    path = os.path.join(scratch_dir(), f"supplier_json_{_sf_tag(sf_dir)}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+
+    def write(path: str) -> None:
         # round@2 on a 2-decimal money column: provable no-op both
         # engines (no tie possible) — exempt from floor-quantize.
         supplier.withColumn(
             "s_acctbal", F.round("s_acctbal", 2)
         ).write.mode("overwrite").json(path)
+
+    path = derived(sf_dir, "supplier_json", ["supplier"], write)
     back = spark.read.schema(
         "s_suppkey long, s_name string, s_nationkey long, s_acctbal double"
     ).json(path)
@@ -444,13 +433,15 @@ def scan_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     at log directories and follows with the fn_string/fn_json parsing
     families."""
     docs = load_table(spark, sf_dir, "documents")
-    path = os.path.join(scratch_dir(), f"lines_{_sf_tag(sf_dir)}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+
+    def write(path: str) -> None:
         docs.filter(F.col("doc_id") % 20 == 0).select(
             F.concat(
                 F.lit("doc:"), F.col("doc_id"), F.lit("|"), F.col("lang")
             ).alias("value")
         ).write.mode("overwrite").text(path)
+
+    path = derived(sf_dir, "lines", ["documents"], write)
     lines = spark.read.text(path)
     return lines.select(
         F.col("value").alias("line"),
@@ -482,9 +473,8 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins the evolved schema in a catalog and passes it explicitly.
     """
     orders = load_table(spark, sf_dir, "orders")
-    path = os.path.join(scratch_dir(), f"orders_evolved_{_sf_tag(sf_dir)}")
-    marker = os.path.join(path, "_V2_DONE")
-    if not os.path.exists(marker):
+
+    def write(path: str) -> None:
         orders.filter(F.col("o_orderkey") % 2 == 0).select(
             "o_orderkey", "o_totalprice"
         ).write.mode("overwrite").parquet(path)
@@ -493,7 +483,8 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_totalprice",
             F.col("o_orderpriority").alias("priority"),
         ).write.mode("append").parquet(path)
-        open(marker, "w").close()
+
+    path = derived(sf_dir, "orders_evolved", ["orders"], write)
     back = spark.read.option("mergeSchema", "true").parquet(path)
     return back.select(
         "o_orderkey",
@@ -574,9 +565,8 @@ def sink_zorder_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-shuffle repartitionByRange.
     """
     lineitem = load_table(spark, sf_dir, "lineitem")
-    path = os.path.join(scratch_dir(), f"lineitem_zorder_{_sf_tag(sf_dir)}")
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
+
+    def write(path: str) -> None:
         bounds = lineitem.agg(
             F.min("l_partkey"),
             F.max("l_partkey"),
@@ -602,6 +592,8 @@ def sink_zorder_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(path)
         )
+
+    path = derived(sf_dir, "lineitem_zorder", ["lineitem"], write)
     back = spark.read.parquet(path).filter(
         (F.col("l_suppkey") >= 2) & (F.col("l_suppkey") <= 3)
     )
@@ -1262,9 +1254,8 @@ def scan_parquet_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORIGINAL table.
     """
     orders = load_table(spark, sf_dir, "orders")
-    path = os.path.join(scratch_dir(), f"orders_bloom_{_sf_tag(sf_dir)}")
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
+
+    def write(path: str) -> None:
         (
             orders.select("o_orderkey", "o_custkey", "o_totalprice")
             .coalesce(2)
@@ -1283,6 +1274,8 @@ def scan_parquet_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("parquet.block.size", str(256 * 1024))
             .parquet(path)
         )
+
+    path = derived(sf_dir, "orders_bloom", ["orders"], write)
     return (
         spark.read.parquet(path)
         .filter(F.col("o_custkey").isin(7, 61, 97))
@@ -1333,10 +1326,8 @@ def scan_csv_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     dual-sink foreachBatch/when pattern downstream.
     """
     nation = load_table(spark, sf_dir, "nation")
-    path = os.path.join(
-        scratch_dir(), f"nation_badcsv_{_src_tag(sf_dir, 'nation')}"
-    )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+
+    def write(path: str) -> None:
         lines = nation.select(
             F.when(
                 F.col("n_nationkey") % 5 == 0,
@@ -1353,6 +1344,8 @@ def scan_csv_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("value")
         )
         lines.coalesce(1).write.mode("overwrite").text(path)
+
+    path = derived(sf_dir, "nation_badcsv", ["nation"], write)
     back = (
         spark.read.schema(
             "n_nationkey long, n_name string, n_regionkey long,"
@@ -1417,10 +1410,8 @@ def sink_manifest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderpriority string, n_files long, n_rows long,"
             " min_key long, max_key long",
         )
-    path = os.path.join(
-        scratch_dir(), f"orders_mstats_{_src_tag(sf_dir, 'orders')}"
-    )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+
+    def write(path: str) -> None:
         (
             orders.select("o_orderkey", "o_orderpriority")
             .repartition(F.col("o_orderpriority"))
@@ -1428,6 +1419,8 @@ def sink_manifest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .partitionBy("o_orderpriority")
             .parquet(path)
         )
+
+    path = derived(sf_dir, "orders_mstats", ["orders"], write)
     back = spark.read.parquet(path).withColumn(
         "_file", F.input_file_name()
     )
@@ -1493,11 +1486,9 @@ def sink_txn_log_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(  # commit, empty result w/ schema
             [], "o_orderpriority string, n long, sum_price double"
         )
-    base = os.path.join(
-        scratch_dir(), f"txnlog_{_src_tag(sf_dir, 'orders')}"
-    )
-    log_dir = txn_log.log_of(base)
-    if txn_log.needs_build(base):
+
+    def build(base: str) -> None:
+        log_dir = txn_log.reset(base)
 
         def commit(version: int, adds: list, removes: list) -> None:
             rec = {"adds": adds, "removes": removes}
@@ -1515,7 +1506,9 @@ def sink_txn_log_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderkey") % 10 != 0
         ).write.parquet(c_dir)
         commit(2, ["dataC"], ["dataA", "dataB"])
-        txn_log.mark_built(base)
+
+    base = derived(sf_dir, "txnlog", ["orders"], build)
+    log_dir = txn_log.log_of(base)
 
     live = txn_log.live_adds(txn_log.records(log_dir))
     table = spark.read.parquet(*(os.path.join(base, d) for d in live))
@@ -1576,11 +1569,9 @@ def scan_txn_log_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "version long, n long, sum_price double"
         )
-    base = os.path.join(
-        scratch_dir(), f"txnlog_tt_{_src_tag(sf_dir, 'orders')}"
-    )
-    log_dir = txn_log.log_of(base)
-    if txn_log.needs_build(base):
+
+    def build(base: str) -> None:
+        log_dir = txn_log.reset(base)
 
         def commit(version: int, adds: list, removes: list) -> None:
             rec = {"adds": adds, "removes": removes}
@@ -1597,7 +1588,9 @@ def scan_txn_log_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderkey") % 10 != 0
         ).write.parquet(c_dir)
         commit(2, ["dataC"], ["dataA", "dataB"])
-        txn_log.mark_built(base)
+
+    base = derived(sf_dir, "txnlog_tt", ["orders"], build)
+    log_dir = txn_log.log_of(base)
 
     snapshots = []
     for version in txn_log.versions(log_dir):
@@ -1692,11 +1685,9 @@ def sink_txn_log_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderstatus string, last_action string,"
             " n_rows long, sum_price double",
         )
-    base = os.path.join(
-        scratch_dir(), f"txnmerge_{_src_tag(sf_dir, 'orders')}"
-    )
-    log_dir = txn_log.log_of(base)
-    if txn_log.needs_build(base):
+
+    def build(base: str) -> None:
+        log_dir = txn_log.reset(base)
 
         def commit(version: int, adds: list, removes: list) -> None:
             rec = {"adds": adds, "removes": removes}
@@ -1766,7 +1757,9 @@ def sink_txn_log_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         inserts.write.parquet(os.path.join(base, "dataIns"))
         adds.append({"path": "dataIns", "mod4": None})
         commit(4, adds, removes)
-        txn_log.mark_built(base)
+
+    base = derived(sf_dir, "txnmerge", ["orders"], build)
+    log_dir = txn_log.log_of(base)
 
     live = txn_log.live_adds(txn_log.records(log_dir))
     table = spark.read.option("mergeSchema", "true").parquet(
@@ -1836,11 +1829,9 @@ def scan_txn_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "o_orderpriority string, n long, sum_price double"
         )
-    base = os.path.join(
-        scratch_dir(), f"txnckpt_{_src_tag(sf_dir, 'orders')}"
-    )
-    log_dir = txn_log.log_of(base)
-    if txn_log.needs_build(base):
+
+    def build(base: str) -> None:
+        log_dir = txn_log.reset(base)
 
         def commit(version: int, adds: list, removes: list) -> None:
             rec = {"adds": adds, "removes": removes}
@@ -1870,7 +1861,9 @@ def scan_txn_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             *(os.path.join(base, f"slice{k}") for k in range(3, 6))
         ).filter(keep).write.parquet(os.path.join(base, "compactB"))
         commit(7, ["compactB"], ["slice3", "slice4", "slice5"])
-        txn_log.mark_built(base)
+
+    base = derived(sf_dir, "txnckpt", ["orders"], build)
+    log_dir = txn_log.log_of(base)
 
     # reader: latest checkpoint + commit SUFFIX only (commits up to the
     # checkpoint are folded into it — never parsed)
@@ -1941,11 +1934,9 @@ def sink_txn_log_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "o_orderpriority string, n long, sum_price double"
         )
-    base = os.path.join(
-        scratch_dir(), f"txnvac_{_src_tag(sf_dir, 'orders')}"
-    )
-    log_dir = txn_log.log_of(base)
-    if txn_log.needs_build(base):
+
+    def build(base: str) -> None:
+        log_dir = txn_log.reset(base)
 
         def commit(version: int, adds: list, removes: list) -> None:
             rec = {"adds": adds, "removes": removes}
@@ -1978,7 +1969,9 @@ def sink_txn_log_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
             log_dir, 2, {"retained_version": 2, "deleted": garbage},
             kind="vacuum",
         )
-        txn_log.mark_built(base)
+
+    base = derived(sf_dir, "txnvac", ["orders"], build)
+    log_dir = txn_log.log_of(base)
 
     live = txn_log.live_adds(txn_log.records(log_dir))
     table = spark.read.parquet(*(os.path.join(base, p) for p in live))
@@ -2181,11 +2174,9 @@ def sink_txn_log_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "o_orderstatus string, n_rows long, sum_price double"
         )
-    base = os.path.join(
-        scratch_dir(), f"txnconflict_{_src_tag(sf_dir, 'orders')}"
-    )
-    log_dir = txn_log.log_of(base)
-    if txn_log.needs_build(base):
+
+    def build(base: str) -> None:
+        log_dir = txn_log.reset(base)
         audit: dict[str, dict] = {}
 
         def fold_log() -> tuple[list[str], int]:
@@ -2294,7 +2285,9 @@ def sink_txn_log_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         with open(os.path.join(base, "_AUDIT.json"), "w") as f:
             json.dump(audit, f)
-        txn_log.mark_built(base)
+
+    base = derived(sf_dir, "txnconflict", ["orders"], build)
+    log_dir = txn_log.log_of(base)
 
     live = txn_log.live_adds(txn_log.records(log_dir))
     table = spark.read.parquet(*(os.path.join(base, p) for p in live))
@@ -2418,18 +2411,14 @@ def sink_txn_log_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
             "priority string, channel string,"
             " n_rows long, sum_price double",
         )
-    # _g2 suffix: the r15 generation-grouped layout splits gen1 into
-    # two files; a stale pre-r15 scratch dir must not be reused
-    base = os.path.join(
-        scratch_dir(), f"txnschema_g2_{_src_tag(sf_dir, 'orders')}"
-    )
-    log_dir = txn_log.log_of(base)
-    # schemas as (name, spark-sql type) pairs, in commit order
-    if txn_log.needs_build(base):
+
+    def build(base: str) -> None:
+        log_dir = txn_log.reset(base)
 
         def commit(version: int, rec: dict) -> None:
             txn_log.commit_or_raise(log_dir, version, rec)
 
+        # schemas as (name, spark-sql type) pairs, in commit order
         s1 = [["o_orderkey", "bigint"], ["o_totalprice", "double"]]
         s2 = s1 + [["o_orderpriority", "string"]]
         s3 = s2 + [["channel", "string"]]
@@ -2461,7 +2450,9 @@ def sink_txn_log_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
             F.col("o_orderstatus").alias("channel"),
         ).write.parquet(os.path.join(base, "gen3"))
         commit(4, {"adds": ["gen3"], "removes": []})
-        txn_log.mark_built(base)
+
+    base = derived(sf_dir, "txnschema", ["orders"], build)
+    log_dir = txn_log.log_of(base)
 
     table = _read_generations(spark, base, log_dir)
     return (
@@ -2548,11 +2539,9 @@ def scan_txn_log_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey long, _change_type string,"
             " _commit_version long, o_totalprice double",
         )
-    base = os.path.join(
-        scratch_dir(), f"txncdf_{_src_tag(sf_dir, 'orders')}"
-    )
-    log_dir = txn_log.log_of(base)
-    if txn_log.needs_build(base):
+
+    def build(base: str) -> None:
+        log_dir = txn_log.reset(base)
 
         def commit(version: int, adds: list, removes: list) -> None:
             rec = {"adds": adds, "removes": removes}
@@ -2580,7 +2569,9 @@ def scan_txn_log_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderkey") % 30 != 0
         ).write.parquet(os.path.join(base, "fileD"))
         commit(3, ["fileD"], ["fileB"])
-        txn_log.mark_built(base)
+
+    base = derived(sf_dir, "txncdf", ["orders"], build)
+    log_dir = txn_log.log_of(base)
 
     # the generic feed derivation: per commit in (v_start, v_end],
     # diff removed files (pre) against added files (post) on the key
@@ -2720,11 +2711,9 @@ def sink_txn_log_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "o_orderpriority string, n long, sum_price double"
         )
-    base = os.path.join(
-        scratch_dir(), f"txnrestore_{_src_tag(sf_dir, 'orders')}"
-    )
-    log_dir = txn_log.log_of(base)
-    if txn_log.needs_build(base):
+
+    def build(base: str) -> None:
+        log_dir = txn_log.reset(base)
 
         def commit(version: int, adds: list, removes: list) -> None:
             rec = {"adds": adds, "removes": removes}
@@ -2751,7 +2740,9 @@ def sink_txn_log_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         target, current = snapshot(0), snapshot(2)
         commit(3, sorted(target - current), sorted(current - target))
-        txn_log.mark_built(base)
+
+    base = derived(sf_dir, "txnrestore", ["orders"], build)
+    log_dir = txn_log.log_of(base)
 
     live = txn_log.live_adds(txn_log.records(log_dir))
     table = spark.read.parquet(*(os.path.join(base, p) for p in live))
@@ -2840,11 +2831,9 @@ def scan_txn_log_as_of_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
             [],
             "query_ts long, version long, n long, sum_price double",
         )
-    base = os.path.join(
-        scratch_dir(), f"txnasof_{_src_tag(sf_dir, 'orders')}"
-    )
-    log_dir = txn_log.log_of(base)
-    if txn_log.needs_build(base):
+
+    def build(base: str) -> None:
+        log_dir = txn_log.reset(base)
 
         def commit(version: int, adds: list, removes: list) -> None:
             rec = {"ts": _TT_TS[version], "adds": adds, "removes": removes}
@@ -2864,7 +2853,9 @@ def scan_txn_log_as_of_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(base, "tC")
         )
         commit(2, ["tC"], ["tA", "tB"])
-        txn_log.mark_built(base)
+
+    base = derived(sf_dir, "txnasof", ["orders"], build)
+    log_dir = txn_log.log_of(base)
 
     commits = list(txn_log.records(log_dir))
 
@@ -2915,6 +2906,15 @@ def scan_txn_log_as_of_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _dv_fp() -> "F.Column":
+    """A row's file as ``<data dir>/<file name>``: the key a deletion
+    vector records, relative so it survives a move of the table dir."""
+    return F.expr(
+        "concat_ws('/', element_at(split(_metadata.file_path, '/'), -2),"
+        " _metadata.file_name) AS _fp"
+    )
+
+
 def _dv_fold(
     log_dir: str, upto: int | None = None
 ) -> tuple[list[str], dict[str, str]]:
@@ -2957,7 +2957,7 @@ def _dv_read(
             continue
         data = spark.read.parquet(os.path.join(base, f)).select(
             *cols,
-            F.col("_metadata.file_path").alias("_fp"),
+            _dv_fp(),
             F.col("_metadata.row_index").alias("_ri"),
         )
         vec = spark.read.parquet(os.path.join(base, dv[f]))
@@ -2996,7 +2996,7 @@ def _dv_cdf_deletes(
         data = spark.read.parquet(os.path.join(base, f)).select(
             "o_orderkey",
             "o_totalprice",
-            F.col("_metadata.file_path").alias("_fp"),
+            _dv_fp(),
             F.col("_metadata.row_index").alias("_ri"),
         )
         feeds.append(
@@ -3042,7 +3042,7 @@ def sink_txn_log_delete_vectors(
     bitmap ATTACHED to the live file instead of rewriting it. The data
     file's bytes are never touched (the r15 test pins that the raw
     file still holds the deleted keys); readers apply the vector at
-    scan time as a broadcast anti-join on (file_path, row_index) from
+    scan time as a broadcast anti-join on (file, row_index) from
     the parquet ``_metadata`` hidden columns. A later DELETE REPLACES
     the file's vector with the union (vectors never stack), and
     compaction folds a vector back into a rewritten data file —
@@ -3073,11 +3073,9 @@ def sink_txn_log_delete_vectors(
         return spark.createDataFrame(
             [], "version long, n long, sum_price double"
         )
-    base = os.path.join(
-        scratch_dir(), f"txndv_{_src_tag(sf_dir, 'orders')}"
-    )
-    log_dir = txn_log.log_of(base)
-    if txn_log.needs_build(base):
+
+    def build(base: str) -> None:
+        log_dir = txn_log.reset(base)
 
         def commit(version: int, rec: dict) -> None:
             txn_log.commit_or_raise(log_dir, version, rec)
@@ -3103,7 +3101,7 @@ def sink_txn_log_delete_vectors(
                     os.path.join(base, f)
                 ).select(
                     "o_orderkey",
-                    F.col("_metadata.file_path").alias("_fp"),
+                    _dv_fp(),
                     F.col("_metadata.row_index").alias("_ri"),
                 )
                 if f in dv:
@@ -3141,7 +3139,9 @@ def sink_txn_log_delete_vectors(
         commit(
             4, {"adds": ["fileA_c"], "removes": ["fileA"], "dv": {}}
         )
-        txn_log.mark_built(base)
+
+    base = derived(sf_dir, "txndv", ["orders"], build)
+    log_dir = txn_log.log_of(base)
 
     # Single-pass multi-version read-back (r15 optimization round,
     # guide §2.4/§6): the naive shape — one `_dv_read(...).agg(...)`
@@ -3191,7 +3191,7 @@ def sink_txn_log_delete_vectors(
     parts: list[DataFrame] = []
     if dv_files and vflags is not None:
         # ONE multi-path scan covers every vectored file; the row's
-        # file identity rides along in _metadata.file_path, so the
+        # file identity rides along in _fp, so the
         # per-version membership condition is an OR over that
         # version's live vectored files — one broadcast join total.
         data = (
@@ -3200,7 +3200,7 @@ def sink_txn_log_delete_vectors(
             )
             .select(
                 *cols,
-                F.col("_metadata.file_path").alias("_fp"),
+                _dv_fp(),
                 F.col("_metadata.row_index").alias("_ri"),
             )
             .join(F.broadcast(vflags), ["_fp", "_ri"], "left")
@@ -3219,7 +3219,7 @@ def sink_txn_log_delete_vectors(
                 continue
             cond = None
             for f, vp in ent:
-                c = F.col("_fp").contains(f"/{f}/")
+                c = F.col("_fp").startswith(f"{f}/")
                 if vp is not None:
                     c = c & ~F.coalesce(
                         F.array_contains("vps", F.lit(vp)), F.lit(False)
@@ -3302,11 +3302,9 @@ def sink_txn_log_column_mapping(
         return spark.createDataFrame(
             [], "bucket long, n long, sum_price double"
         )
-    base = os.path.join(
-        scratch_dir(), f"txncolmap_{_src_tag(sf_dir, 'orders')}"
-    )
-    log_dir = txn_log.log_of(base)
-    if txn_log.needs_build(base):
+
+    def build(base: str) -> None:
+        log_dir = txn_log.reset(base)
 
         def commit(version: int, rec: dict) -> None:
             txn_log.commit_or_raise(log_dir, version, rec)
@@ -3349,7 +3347,9 @@ def sink_txn_log_column_mapping(
             F.col("o_totalprice").alias("col_2"),
         ).write.parquet(os.path.join(base, "f3"))
         commit(4, {"adds": ["f3"], "removes": []})
-        txn_log.mark_built(base)
+
+    base = derived(sf_dir, "txncolmap", ["orders"], build)
+    log_dir = txn_log.log_of(base)
 
     table = _read_generations(spark, base, log_dir)
     return (
@@ -3434,37 +3434,21 @@ def scan_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("o_orderstatus", "string"),
         ("o_totalprice", "double"),
     ]
-    base = os.path.join(
-        scratch_dir(), f"avro_{_src_tag(sf_dir, 'orders')}"
-    )
-    done = os.path.join(base, "_ALL_WRITTEN")
-    if not os.path.exists(done):
-        import shutil
 
-        if os.path.exists(base):
-            shutil.rmtree(base)
-        os.makedirs(base)
-        import io as _io
-        import contextlib
-
+    def write(base: str) -> None:
         # 4 clean bucket files, one streaming pass over the table
-        with contextlib.ExitStack() as stack:
-            sinks = []
-            for i in range(4):
-                p = os.path.join(base, f"part-{i}.avro")
-                tmp: list[tuple] = []
-                sinks.append(tmp)
-            for row in orders.toLocalIterator():
-                # null keys bucket to 0 (nullable-union codec carries
-                # them; the null-heavy contract table exercises this)
-                k = row.o_orderkey
-                sinks[(k if k is not None else 0) % 4].append(
-                    (k, row.o_orderstatus, row.o_totalprice)
-                )
-            for i, recs in enumerate(sinks):
-                write_container(
-                    os.path.join(base, f"part-{i}.avro"), fields, recs
-                )
+        sinks: list[list[tuple]] = [[] for _ in range(4)]
+        for row in orders.toLocalIterator():
+            # null keys bucket to 0 (nullable-union codec carries
+            # them; the null-heavy contract table exercises this)
+            k = row.o_orderkey
+            sinks[(k if k is not None else 0) % 4].append(
+                (k, row.o_orderstatus, row.o_totalprice)
+            )
+        for i, recs in enumerate(sinks):
+            write_container(
+                os.path.join(base, f"part-{i}.avro"), fields, recs
+            )
         # the torn file: good block (negated %50 keys), then a tail
         # block (keys further shifted by -1e9) TRUNCATED mid-payload
         good = [
@@ -3483,8 +3467,8 @@ def scan_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(torn, "rb+") as fh:
             fh.seek(0, os.SEEK_END)
             fh.truncate(fh.tell() - 8)  # tear the tail block's sync
-        open(done, "w").close()
 
+    base = derived(sf_dir, "avro", ["orders"], write)
     register_avro_source(spark)
     df = (
         spark.read.format("avro_container")
@@ -3577,10 +3561,6 @@ def sink_txn_log_optimize_zorder(
         return spark.createDataFrame(
             [], "o_orderstatus string, n long, sum_price double"
         )
-    base = os.path.join(
-        scratch_dir(), f"txnzorder_{_src_tag(sf_dir, 'orders')}"
-    )
-    log_dir = txn_log.log_of(base)
 
     def stats_of(df: DataFrame, path: str) -> dict:
         r = df.agg(
@@ -3599,7 +3579,8 @@ def sink_txn_log_optimize_zorder(
             "kmax": r["kmax"],
         }
 
-    if txn_log.needs_build(base):
+    def build(base: str) -> None:
+        log_dir = txn_log.reset(base)
 
         def commit(version: int, rec: dict) -> None:
             txn_log.commit_or_raise(log_dir, version, rec)
@@ -3662,7 +3643,9 @@ def sink_txn_log_optimize_zorder(
             1,
             {"adds": adds1, "removes": [a["path"] for a in adds0]},
         )
-        txn_log.mark_built(base)
+
+    base = derived(sf_dir, "txnzorder", ["orders"], build)
+    log_dir = txn_log.log_of(base)
 
     # reader: fold log, stats-prune against the quarter box, scan
     live = txn_log.live_adds(txn_log.records(log_dir)).values()
@@ -3752,14 +3735,12 @@ def sink_txn_log_partitioned(
         return spark.createDataFrame(
             [], "o_orderpriority string, n long, sum_price double"
         )
-    base = os.path.join(
-        scratch_dir(), f"txnpart_{_src_tag(sf_dir, 'orders')}"
-    )
-    log_dir = txn_log.log_of(base)
     prios = [
         "1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW",
     ]
-    if txn_log.needs_build(base):
+
+    def build(base: str) -> None:
+        log_dir = txn_log.reset(base)
 
         def commit(version: int, rec: dict) -> None:
             txn_log.commit_or_raise(log_dir, version, rec)
@@ -3792,7 +3773,9 @@ def sink_txn_log_partitioned(
                 "removes": ["v0_p2", "v1_p2"],
             },
         )
-        txn_log.mark_built(base)
+
+    base = derived(sf_dir, "txnpart", ["orders"], build)
+    log_dir = txn_log.log_of(base)
 
     live = txn_log.live_adds(txn_log.records(log_dir)).values()
     want = {"2-HIGH", "3-MEDIUM"}
@@ -3888,11 +3871,9 @@ def sink_txn_log_constraints(
         return spark.createDataFrame(
             [], "n long, min_price double, sum_price double"
         )
-    base = os.path.join(
-        scratch_dir(), f"txnconstraint_{_src_tag(sf_dir, 'orders')}"
-    )
-    log_dir = txn_log.log_of(base)
-    if txn_log.needs_build(base):
+
+    def build(base: str) -> None:
+        log_dir = txn_log.reset(base)
 
         def commit(version: int, rec: dict) -> None:
             txn_log.commit_or_raise(log_dir, version, rec)
@@ -3959,7 +3940,9 @@ def sink_txn_log_constraints(
         )
         if not validated_append(2, clean, "f2"):
             raise RuntimeError("clean batch rejected")
-        txn_log.mark_built(base)
+
+    base = derived(sf_dir, "txnconstraint", ["orders"], build)
+    log_dir = txn_log.log_of(base)
 
     live = txn_log.live_adds(txn_log.records(log_dir))
     table = spark.read.parquet(*(os.path.join(base, p) for p in live))
@@ -4037,25 +4020,21 @@ def sink_txn_log_shallow_clone(
         return spark.createDataFrame(
             [], "which string, n long, sum_price double"
         )
-    src_base = os.path.join(
-        scratch_dir(), f"txnclonesrc_{_src_tag(sf_dir, 'orders')}"
-    )
-    clone_base = os.path.join(
-        scratch_dir(), f"txnclone_{_src_tag(sf_dir, 'orders')}"
-    )
     commit = txn_log.commit_or_raise
 
     def fold(log_dir: str) -> list[dict]:
         return list(txn_log.live_adds(txn_log.records(log_dir)).values())
 
-    def read_live(live: list[dict]) -> DataFrame:
+    def read_live(base: str, live: list[dict]) -> DataFrame:
         return spark.read.parquet(
-            *(os.path.join(a["root"], a["path"]) for a in live)
+            *(os.path.join(base, a["root"], a["path"]) for a in live)
         )
 
-    src_log, clone_log = txn_log.log_of(src_base), txn_log.log_of(clone_base)
-    if txn_log.needs_build(clone_base):  # the clone holds the marker
-        txn_log.reset(src_base)
+    # both tables live in one fixture dir, and each add's root is
+    # relative to it: the paths must survive the dir's publishing rename
+    def build(base: str) -> None:
+        src_base, clone_base = (os.path.join(base, d) for d in ("src", "clone"))
+        src_log, clone_log = txn_log.reset(src_base), txn_log.reset(clone_base)
 
         # source v0+v1: two halves
         for v, pred in (
@@ -4066,23 +4045,23 @@ def sink_txn_log_shallow_clone(
             orders.filter(pred).write.parquet(os.path.join(src_base, p))
             commit(
                 src_log, v,
-                {"adds": [{"path": p, "root": src_base}], "removes": []},
+                {"adds": [{"path": p, "root": "src"}], "removes": []},
             )
 
         # SHALLOW CLONE: metadata-only — reference the source's files
         commit(
             clone_log, 0,
             {"adds": fold(src_log), "removes": [],
-             "clone_of": src_base},
+             "clone_of": "src"},
         )
 
         # clone v1: CoW DELETE keys%7==0 — rewrite into the CLONE dir
         live = fold(clone_log)
-        kept = read_live(live).filter(F.col("o_orderkey") % 7 != 0)
+        kept = read_live(base, live).filter(F.col("o_orderkey") % 7 != 0)
         kept.write.parquet(os.path.join(clone_base, "cow0"))
         commit(
             clone_log, 1,
-            {"adds": [{"path": "cow0", "root": clone_base}],
+            {"adds": [{"path": "cow0", "root": "clone"}],
              "removes": [a["path"] for a in live]},
         )
         # clone v2: its own append (negated %30)
@@ -4091,7 +4070,7 @@ def sink_txn_log_shallow_clone(
         ).write.parquet(os.path.join(clone_base, "app0"))
         commit(
             clone_log, 2,
-            {"adds": [{"path": "app0", "root": clone_base}],
+            {"adds": [{"path": "app0", "root": "clone"}],
              "removes": []},
         )
         # source v2: diverges on its own (+1e9 %20 slice)
@@ -4101,14 +4080,14 @@ def sink_txn_log_shallow_clone(
         ).write.parquet(os.path.join(src_base, "post"))
         commit(
             src_log, 2,
-            {"adds": [{"path": "post", "root": src_base}],
+            {"adds": [{"path": "post", "root": "src"}],
              "removes": []},
         )
-        txn_log.mark_built(clone_base)
 
+    base = derived(sf_dir, "txnclone", ["orders"], build)
     outs = []
-    for which, log in (("clone", clone_log), ("src", src_log)):
-        df = read_live(fold(log))
+    for which in ("clone", "src"):
+        df = read_live(base, fold(txn_log.log_of(os.path.join(base, which))))
         outs.append(
             df.agg(
                 F.count("*").cast("long").alias("n"),
@@ -4186,11 +4165,9 @@ def sink_txn_log_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "commit_version long, n long, min_id long, max_id long,"
             " sum_id long",
         )
-    base = os.path.join(
-        scratch_dir(), f"txnidentity_{_src_tag(sf_dir, 'orders')}"
-    )
-    log_dir = txn_log.log_of(base)
-    if txn_log.needs_build(base):
+
+    def build(base: str) -> None:
+        log_dir = txn_log.reset(base)
 
         def hwm() -> int:
             recs = txn_log.records(log_dir)
@@ -4252,7 +4229,9 @@ def sink_txn_log_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
             identity_append(
                 k, orders.filter(F.col("o_orderkey") % 3 == k)
             )
-        txn_log.mark_built(base)
+
+    base = derived(sf_dir, "txnidentity", ["orders"], build)
+    log_dir = txn_log.log_of(base)
 
     outs = []
     for v, rec in txn_log.records(log_dir):

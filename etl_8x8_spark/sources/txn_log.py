@@ -29,8 +29,6 @@ import uuid
 from collections.abc import Iterable, Iterator
 
 LOG = "_log"
-#: build-once marker: a table whose base holds it is complete
-ALL_COMMITTED = "_ALL_COMMITTED"
 
 
 def _suffix(kind: str | None) -> str:
@@ -51,20 +49,6 @@ def reset(base: str) -> str:
         shutil.rmtree(base)
     os.makedirs(log_of(base))
     return log_of(base)
-
-
-def needs_build(base: str) -> bool:
-    """True iff the table at ``base`` has no finished build. The base
-    is then reset, ready for commits; :func:`mark_built` ends the
-    build, and later calls return False until the marker is gone."""
-    if os.path.exists(os.path.join(base, ALL_COMMITTED)):
-        return False
-    reset(base)
-    return True
-
-
-def mark_built(base: str) -> None:
-    open(os.path.join(base, ALL_COMMITTED), "w").close()
 
 
 def commit(

@@ -52,7 +52,7 @@ from pyspark.sql import functions as F
 from etl_8x8_spark.functions.parity import dsum, oracle_dsum
 from etl_8x8_spark.registry import register
 from etl_8x8_spark.sources import txn_log
-from etl_8x8_spark.sources.readers import _sf_tag, load_table, scratch_dir
+from etl_8x8_spark.sources.readers import _sf_tag, derived, load_table, scratch_dir
 
 _EVENTS_STREAM_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string,"
@@ -63,25 +63,17 @@ _counter = itertools.count()
 
 
 def events_stream_dir(spark: SparkSession, sf_dir: str, copies: int = 1) -> str:
-    """Materialize (once per sf) a micros-timestamp parquet copy of
-    ``events`` that the file-stream source can read; ``copies=2``
-    writes the data twice for the dedup key."""
-    path = os.path.join(
-        scratch_dir(), f"events_stream_{_sf_tag(sf_dir)}_x{copies}"
-    )
-    # _SUCCESS appears after the FIRST write, before the append passes —
-    # a crash in between would leave a half-built fixture that looks
-    # done. The skip check keys on a sentinel written only after ALL
-    # copies landed.
-    marker = os.path.join(path, "_COPIES_DONE")
-    if not os.path.exists(marker):
+    """Materialize (once per ``events`` version) a micros-timestamp
+    parquet copy of ``events`` that the file-stream source can read;
+    ``copies=2`` writes the data twice for the dedup key."""
+
+    def write(path: str) -> None:
         events = load_table(spark, sf_dir, "events")
         events.write.mode("overwrite").parquet(path)
         for i in range(1, copies):
             events.write.mode("append").parquet(path)
-        with open(marker, "w") as fh:
-            fh.write(str(copies))
-    return path
+
+    return derived(sf_dir, f"events_stream_x{copies}", ["events"], write)
 
 
 def read_events_stream(
@@ -1512,8 +1504,6 @@ def stream_txn_log_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_txn_log_tail_source,
     )
 
-    from etl_8x8_spark.sources.scans import _src_tag
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
@@ -1521,10 +1511,9 @@ def stream_txn_log_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "version long, n_rows long, sum_price double"
         )
-    base = os.path.join(
-        scratch_dir(), f"txntail_{_src_tag(sf_dir, 'orders')}"
-    )
-    if txn_log.needs_build(base):
+
+    def build(base: str) -> None:
+        txn_log.reset(base)
         for k in range(4):
             d = f"tail{k}"
             orders.filter(F.col("o_orderkey") % 4 == k).write.parquet(
@@ -1533,8 +1522,8 @@ def stream_txn_log_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
             txn_log.commit_or_raise(
                 txn_log.log_of(base), k, {"adds": [d], "removes": []}
             )
-        txn_log.mark_built(base)
 
+    base = derived(sf_dir, "txntail", ["orders"], build)
     register_txn_log_tail_source(spark)
     s = (
         spark.readStream.format("txn_log_tail")
@@ -1593,8 +1582,6 @@ def stream_txn_log_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch width. State in the streaming query itself: none (pure
     routing), so the pattern holds for arbitrarily wide epochs.
     """
-    from etl_8x8_spark.sources.scans import _src_tag
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -1602,39 +1589,37 @@ def stream_txn_log_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "o_orderstatus string, n_rows long, sum_price double"
         )
-    base = os.path.join(
-        scratch_dir(), f"txnsink_{_src_tag(sf_dir, 'orders')}"
-    )
-    in_dir = os.path.join(base, "_incoming")
-    log_dir = txn_log.log_of(base)
 
-    def committed_epochs() -> set:
-        return {
-            rec["epoch"]
-            for _, rec in txn_log.records(log_dir)
-            if "epoch" in rec
-        }
+    def build(base: str) -> None:
+        in_dir = os.path.join(base, "_incoming")
+        log_dir = txn_log.reset(base)
 
-    def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # data first (attempt-unique dir, never overwritten), commit
-        # last — the epoch probe makes the pair idempotent under
-        # at-least-once redelivery
-        attempt = len(
-            [
-                d
-                for d in os.listdir(base)
-                if d.startswith(f"epoch{batch_id:05d}_")
-            ]
-        )
-        path = f"epoch{batch_id:05d}_a{attempt}"
-        batch_df.write.parquet(os.path.join(base, path))
-        if batch_id in committed_epochs():
-            return  # replayed epoch: orphan data dir, commit skipped
-        txn_log.append(
-            log_dir, {"adds": [path], "removes": [], "epoch": batch_id}
-        )
+        def committed_epochs() -> set:
+            return {
+                rec["epoch"]
+                for _, rec in txn_log.records(log_dir)
+                if "epoch" in rec
+            }
 
-    if txn_log.needs_build(base):
+        def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
+            # data first (attempt-unique dir, never overwritten), commit
+            # last — the epoch probe makes the pair idempotent under
+            # at-least-once redelivery
+            attempt = len(
+                [
+                    d
+                    for d in os.listdir(base)
+                    if d.startswith(f"epoch{batch_id:05d}_")
+                ]
+            )
+            path = f"epoch{batch_id:05d}_a{attempt}"
+            batch_df.write.parquet(os.path.join(base, path))
+            if batch_id in committed_epochs():
+                return  # replayed epoch: orphan data dir, commit skipped
+            txn_log.append(
+                log_dir, {"adds": [path], "removes": [], "epoch": batch_id}
+            )
+
         # four incoming files -> four micro-batches
         for k in range(4):
             # one physical file per split: exactly four micro-batches
@@ -1666,7 +1651,9 @@ def stream_txn_log_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             *(os.path.join(base, d) for d in last_dirs)
         )
         sink_batch(replay, last)
-        txn_log.mark_built(base)
+
+    base = derived(sf_dir, "txnsink", ["orders"], build)
+    log_dir = txn_log.log_of(base)
 
     live = txn_log.live_adds(txn_log.records(log_dir))
     table = spark.read.parquet(

@@ -14,6 +14,8 @@ import pytest
 from etl_8x8_spark.plans.audit import plan_string
 from etl_8x8_spark.registry import all_queries
 
+from tests.conftest import fixture_dir
+
 
 @pytest.fixture(scope="module")
 def queries():
@@ -390,18 +392,14 @@ class TestNewOperatorPlans:
         skipped via parquet stats). Guards the NTZ regression — a
         TIMESTAMP_NTZ cluster key silently disables parquet filter
         translation and the scan reads everything."""
-        import os
-
         from pyspark.sql import functions as F
 
         from etl_8x8_spark.plans.audit import scan_metrics
         from etl_8x8_spark.registry import all_queries
-        from etl_8x8_spark.sources.readers import scratch_dir
 
         # materialize the clustered layout
         all_queries()["sink_sorted_clustered"].builder(spark, sf_dir).collect()
-        tag = os.path.basename(sf_dir.rstrip("/"))
-        path = os.path.join(scratch_dir(), f"lineitem_clustered_{tag}")
+        path = fixture_dir(sf_dir, "lineitem_clustered")
         total = spark.read.parquet(path).count()
         filtered = spark.read.parquet(path).filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("date"))
@@ -799,19 +797,13 @@ class TestR15Plans:
         import os
 
         from etl_8x8_spark.sources import txn_log
-        from etl_8x8_spark.sources.readers import scratch_dir
-        from etl_8x8_spark.sources.scans import _src_tag
 
         plan = plan_of(
             spark, sf_dir, queries, "sink_txn_log_schema_evolution"
         )
         body = plan.split("AdaptiveSparkPlan")[-1]
         assert body.count("Scan parquet") == 3
-        log_dir = os.path.join(
-            scratch_dir(),
-            f"txnschema_g2_{_src_tag(sf_dir, 'orders')}",
-            "_log",
-        )
+        log_dir = os.path.join(fixture_dir(sf_dir, "txnschema"), "_log")
         live = txn_log.live_adds(txn_log.records(log_dir))
         assert len(live) == 4  # the discriminator: 4 files, 3 scans
 

@@ -9,6 +9,7 @@ users with no clicks, click-after-purchase) that fixed fixtures miss.
 from __future__ import annotations
 
 import os
+import struct
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -435,7 +436,7 @@ float32_pairs = st.lists(
         st.floats(width=32, allow_nan=False, allow_infinity=False),
         st.floats(width=32, allow_nan=False, allow_infinity=False),
     ),
-    min_size=1,
+    min_size=0,
     max_size=16,
 )
 
@@ -449,9 +450,8 @@ float32_pairs = st.lists(
 def test_dot_cross_engine_parity(spark, pairs):
     """functions/vectors.py promises bit-identical doubles: Spark's
     ``dot_sql`` (aggregate over zip_with) and DuckDB's ``oracle_dot``
-    (list_reduce) both fold left in element order. Compared with ``==``
-    so a zero sum may differ in sign only: Spark folds from 0.0D,
-    DuckDB from the first product, and 0.0 + -0.0 is 0.0."""
+    (list_reduce) both fold left from 0.0 in element order. Compared
+    bit for bit, so an empty array and a zero sum's sign are pinned."""
     import duckdb
 
     from etl_8x8_spark.functions.vectors import dot_sql, oracle_dot
@@ -465,4 +465,4 @@ def test_dot_cross_engine_parity(spark, pairs):
         "SELECT CAST(? AS FLOAT[]) AS a, CAST(? AS FLOAT[]) AS b)",
         [a, b],
     ).fetchone()[0]
-    assert got == want
+    assert struct.pack("<d", got) == struct.pack("<d", want)

@@ -9,6 +9,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import fixture_dir
+
 
 class _FakeValueState:
     def __init__(self):
@@ -526,16 +528,12 @@ class TestParquetBloomScan:
         columns. Guards the silent-drop trap: parquet-mr skips a
         requested bloom when the column stays dictionary-encoded."""
         import glob
-        import os
 
         from etl_8x8_spark.registry import all_queries
-        from etl_8x8_spark.sources.readers import _sf_tag, scratch_dir
 
         # ensure the fixture exists
         all_queries()["scan_parquet_bloom"].builder(spark, sf_dir).collect()
-        path = os.path.join(
-            scratch_dir(), f"orders_bloom_{_sf_tag(sf_dir)}"
-        )
+        path = fixture_dir(sf_dir, "orders_bloom")
         f = glob.glob(path + "/*.parquet")[0]
         jvm = spark._jvm
         conf = spark._jsc.hadoopConfiguration()

@@ -109,6 +109,8 @@ class TestNativeProcessingTimeTtl:
 from etl_8x8_spark.plans.audit import plan_string  # noqa: E402
 from etl_8x8_spark.registry import all_queries  # noqa: E402
 
+from tests.conftest import fixture_dir  # noqa: E402
+
 
 @pytest.fixture(scope="module")
 def queries():
@@ -661,7 +663,7 @@ class TestTxnLogCommit:
         import json
         import os as _os
 
-        from etl_8x8_spark.sources.readers import load_table, scratch_dir
+        from etl_8x8_spark.sources.readers import load_table
 
         out = queries["sink_txn_log_commit"].builder(spark, sf_dir).collect()
         src = (
@@ -675,10 +677,7 @@ class TestTxnLogCommit:
         got = {r["o_orderpriority"]: r["n"] for r in out}
         assert got == want
 
-        from etl_8x8_spark.sources.scans import _src_tag
-
-        sf_tag = _src_tag(sf_dir, "orders")
-        log_dir = _os.path.join(scratch_dir(), f"txnlog_{sf_tag}", "_log")
+        log_dir = _os.path.join(fixture_dir(sf_dir, "txnlog"), "_log")
         logs = sorted(
             f for f in _os.listdir(log_dir) if f.endswith(".json")
         )

@@ -16,6 +16,8 @@ import os
 
 from etl_8x8_spark.registry import all_queries
 
+from tests.conftest import fixture_dir
+
 SF_DIR = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
 
 # Pandas maps these Spark types to scalar (hashable, sortable) cells;
@@ -120,13 +122,9 @@ class TestTxnLogMerge:
         import os
 
         from etl_8x8_spark.sources import txn_log
-        from etl_8x8_spark.sources.readers import scratch_dir
-        from etl_8x8_spark.sources.scans import _src_tag
 
         all_queries()["sink_txn_log_merge"].builder(spark, sf_dir).collect()
-        base = os.path.join(
-            scratch_dir(), f"txnmerge_{_src_tag(sf_dir, 'orders')}"
-        )
+        base = fixture_dir(sf_dir, "txnmerge")
         log_dir = os.path.join(base, "_log")
         names = sorted(os.listdir(log_dir))
         assert [n for n in names if n.endswith(".tmp")] == []
@@ -209,23 +207,17 @@ class TestIncrementalSubstring:
 
     def test_index_is_reused_across_runs(self, spark, sf_dir):
         """The cross-run contract: a second invocation must PROBE the
-        persisted shingle index, not rebuild it — the index parquet's
-        mtime is unchanged by run 2."""
+        persisted shingle index, not rebuild it — the published index
+        dir (inode and mtime) is unchanged by run 2."""
         import os
-
-        from etl_8x8_spark.sources.readers import scratch_dir
-        from etl_8x8_spark.sources.scans import _src_tag
 
         q = all_queries()["dedup_incremental_substring"].builder
         q(spark, sf_dir).collect()
-        idx = os.path.join(
-            scratch_dir(),
-            f"substr_sh_index_{_src_tag(sf_dir, 'documents')}",
-        )
-        mt1 = os.stat(os.path.join(idx, "_SUCCESS")).st_mtime_ns
+        idx = fixture_dir(sf_dir, "substr_sh_index")
+        st1 = os.stat(idx)
         q(spark, sf_dir).collect()
-        mt2 = os.stat(os.path.join(idx, "_SUCCESS")).st_mtime_ns
-        assert mt1 == mt2
+        st2 = os.stat(fixture_dir(sf_dir, "substr_sh_index"))
+        assert (st1.st_ino, st1.st_mtime_ns) == (st2.st_ino, st2.st_mtime_ns)
 
 
 class TestTxnLogCheckpoint:
@@ -239,17 +231,11 @@ class TestTxnLogCheckpoint:
         import os
 
         from etl_8x8_spark.sources import txn_log
-        from etl_8x8_spark.sources.readers import scratch_dir
-        from etl_8x8_spark.sources.scans import _src_tag
 
         all_queries()["scan_txn_log_checkpoint"].builder(
             spark, sf_dir
         ).collect()
-        log_dir = os.path.join(
-            scratch_dir(),
-            f"txnckpt_{_src_tag(sf_dir, 'orders')}",
-            "_log",
-        )
+        log_dir = os.path.join(fixture_dir(sf_dir, "txnckpt"), "_log")
         names = sorted(os.listdir(log_dir))
         assert "00004.checkpoint.json" in names
         assert not [n for n in names if n.endswith(".tmp")]
@@ -279,17 +265,14 @@ class TestTxnLogVacuum:
 
         from pyspark.sql import functions as F
 
-        from etl_8x8_spark.sources.readers import load_table, scratch_dir
-        from etl_8x8_spark.sources.scans import _src_tag
+        from etl_8x8_spark.sources.readers import load_table
 
         out = (
             all_queries()["sink_txn_log_vacuum"]
             .builder(spark, sf_dir)
             .collect()
         )
-        base = os.path.join(
-            scratch_dir(), f"txnvac_{_src_tag(sf_dir, 'orders')}"
-        )
+        base = fixture_dir(sf_dir, "txnvac")
         assert not os.path.exists(os.path.join(base, "sliceA"))
         assert not os.path.exists(os.path.join(base, "sliceB"))
         assert os.path.exists(os.path.join(base, "dataC"))

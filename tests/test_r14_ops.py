@@ -20,6 +20,8 @@ import pandas as pd
 from etl_8x8_spark.registry import all_queries
 from etl_8x8_spark.sources import txn_log
 
+from tests.conftest import fixture_dir
+
 SF_DIR = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
@@ -105,12 +107,7 @@ class TestScanXmlEscaping:
 
 class TestTxnLogConflict:
     def _base(self, sf_dir):
-        from etl_8x8_spark.sources.readers import scratch_dir
-        from etl_8x8_spark.sources.scans import _src_tag
-
-        return os.path.join(
-            scratch_dir(), f"txnconflict_{_src_tag(sf_dir, 'orders')}"
-        )
+        return fixture_dir(sf_dir, "txnconflict")
 
     def test_retry_and_abort_branches(self, spark, sf_dir):
         """The audit sidecar pins the protocol paths: B lost exactly
@@ -168,17 +165,12 @@ class TestTxnLogSchemaEvolution:
         """ADD COLUMN is O(1): the gen1 parquet on disk still carries
         the ORIGINAL 2-column schema after two ALTERs, yet the reader
         surfaces it at the latest 4-column schema with NULLs."""
-        from etl_8x8_spark.sources.readers import scratch_dir
-        from etl_8x8_spark.sources.scans import _src_tag
-
         out = (
             all_queries()["sink_txn_log_schema_evolution"]
             .builder(spark, sf_dir)
             .collect()
         )
-        base = os.path.join(
-            scratch_dir(), f"txnschema_g2_{_src_tag(sf_dir, 'orders')}"
-        )
+        base = fixture_dir(sf_dir, "txnschema")
         # the r15 generation-grouped fixture writes gen1 as TWO files
         # of the same schema generation (gen1a/gen1b)
         for g in ("gen1a", "gen1b"):
@@ -211,15 +203,10 @@ class TestTxnLogSchemaEvolution:
         """The log owns the schema in BOTH directions: a DROP COLUMN
         metadata record makes the column vanish from the resolved read
         even though every byte of it remains in the live files."""
-        from etl_8x8_spark.sources.readers import scratch_dir
-        from etl_8x8_spark.sources.scans import _src_tag
-
         all_queries()["sink_txn_log_schema_evolution"].builder(
             spark, sf_dir
         ).collect()
-        base = os.path.join(
-            scratch_dir(), f"txnschema_g2_{_src_tag(sf_dir, 'orders')}"
-        )
+        base = fixture_dir(sf_dir, "txnschema")
         # replay the reader's fold with one extra DROP-COLUMN record
         recs = list(txn_log.records(txn_log.log_of(base)))
         live = txn_log.live_adds(recs)
@@ -259,17 +246,13 @@ class TestTxnLogTailReader:
         one commit per poll; answers are monotone; and
         partitions(start, end) yields one input partition per added
         file of exactly the commits in [start, end)."""
-        from etl_8x8_spark.sources.readers import scratch_dir
-        from etl_8x8_spark.sources.scans import _src_tag
         from etl_8x8_spark.sources.txn_log_stream import TxnLogTailReader
 
         # the query builder materializes the 4-commit fixture
         all_queries()["stream_txn_log_tail"].builder(
             spark, sf_dir
         ).collect()
-        base = os.path.join(
-            scratch_dir(), f"txntail_{_src_tag(sf_dir, 'orders')}"
-        )
+        base = fixture_dir(sf_dir, "txntail")
         r = TxnLogTailReader({"path": base})
         assert r.initialOffset() == {"version": 0}
         # first poll: TRUE latest — the whole backlog in one batch
@@ -472,15 +455,10 @@ class TestTxnLogRestore:
         erased)."""
         from pyspark.sql import functions as F
 
-        from etl_8x8_spark.sources.readers import scratch_dir
-        from etl_8x8_spark.sources.scans import _src_tag
-
         all_queries()["sink_txn_log_restore"].builder(
             spark, sf_dir
         ).collect()
-        base = os.path.join(
-            scratch_dir(), f"txnrestore_{_src_tag(sf_dir, 'orders')}"
-        )
+        base = fixture_dir(sf_dir, "txnrestore")
         log_dir = os.path.join(base, "_log")
         rec3 = txn_log.read(log_dir, 3)
         assert rec3 == {"adds": ["fileA"], "removes": ["fileB", "fileC"]}

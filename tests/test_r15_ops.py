@@ -18,13 +18,9 @@ from pyspark.sql import functions as F
 
 from etl_8x8_spark.registry import all_queries
 from etl_8x8_spark.sources import txn_log
-from etl_8x8_spark.sources.readers import load_table, scratch_dir
+from etl_8x8_spark.sources.readers import load_table
 
-
-def _dv_base(sf_dir: str) -> str:
-    from etl_8x8_spark.sources.scans import _src_tag
-
-    return os.path.join(scratch_dir(), f"txndv_{_src_tag(sf_dir, 'orders')}")
+from tests.conftest import fixture_dir
 
 
 @pytest.fixture(scope="module")
@@ -32,7 +28,7 @@ def dv_table(spark, sf_dir):
     """Build the DV table once; return (result_rows, base, log_dir)."""
     q = all_queries()["sink_txn_log_delete_vectors"]
     rows = {r.version: (r.n, r.sum_price) for r in q.builder(spark, sf_dir).collect()}
-    base = _dv_base(sf_dir)
+    base = fixture_dir(sf_dir, "txndv")
     return rows, base, os.path.join(base, "_log")
 
 
@@ -122,14 +118,6 @@ def test_dv_cdf_emits_newly_deleted_only(spark, sf_dir, dv_table):
 # ---------------------------------------------------------------------------
 
 
-def _colmap_base(sf_dir: str) -> str:
-    from etl_8x8_spark.sources.scans import _src_tag
-
-    return os.path.join(
-        scratch_dir(), f"txncolmap_{_src_tag(sf_dir, 'orders')}"
-    )
-
-
 def test_column_mapping_read(spark, sf_dir):
     q = all_queries()["sink_txn_log_column_mapping"]
     got = {r.bucket: (r.n, r.sum_price) for r in q.builder(spark, sf_dir).collect()}
@@ -153,7 +141,7 @@ def test_column_mapping_drop_survives_in_file_not_in_read(spark, sf_dir):
     pre-drop file; the read surface no longer has it — and the RENAME
     is invisible to physical writers (f2 still writes col_2)."""
     all_queries()["sink_txn_log_column_mapping"].builder(spark, sf_dir)
-    base = _colmap_base(sf_dir)
+    base = fixture_dir(sf_dir, "txncolmap")
     raw_f1 = spark.read.parquet(os.path.join(base, "f1"))
     assert raw_f1.columns == ["col_1", "col_2", "col_3"]
     assert raw_f1.filter(F.col("col_3").isNotNull()).count() > 0
@@ -172,7 +160,8 @@ def test_alter_and_dv_commits_add_no_data_files(spark, sf_dir, dv_table):
     (v2, v3) commit metadata only, and each log holds exactly 5
     commits — the same at any scale factor."""
     all_queries()["sink_txn_log_column_mapping"].builder(spark, sf_dir)
-    colmap = dict(txn_log.records(txn_log.log_of(_colmap_base(sf_dir))))
+    log_dir = txn_log.log_of(fixture_dir(sf_dir, "txncolmap"))
+    colmap = dict(txn_log.records(log_dir))
     dv = dict(txn_log.records(dv_table[2]))
     assert sorted(colmap) == sorted(dv) == [0, 1, 2, 3, 4]
     assert [v for v, r in colmap.items() if not r["adds"]] == [1, 3]
@@ -252,19 +241,11 @@ def test_scan_avro_recovers_good_block_only(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _zorder_base(sf_dir: str) -> str:
-    from etl_8x8_spark.sources.scans import _src_tag
-
-    return os.path.join(
-        scratch_dir(), f"txnzorder_{_src_tag(sf_dir, 'orders')}"
-    )
-
-
 @pytest.fixture(scope="module")
 def zorder_table(spark, sf_dir):
     q = all_queries()["sink_txn_log_optimize_zorder"]
     rows = q.builder(spark, sf_dir).collect()
-    return rows, _zorder_base(sf_dir)
+    return rows, fixture_dir(sf_dir, "txnzorder")
 
 
 def test_zorder_result_matches_direct(spark, sf_dir, zorder_table):
@@ -358,19 +339,11 @@ def test_zvalue_interleave_bits():
 # ---------------------------------------------------------------------------
 
 
-def _part_base(sf_dir: str) -> str:
-    from etl_8x8_spark.sources.scans import _src_tag
-
-    return os.path.join(
-        scratch_dir(), f"txnpart_{_src_tag(sf_dir, 'orders')}"
-    )
-
-
 @pytest.fixture(scope="module")
 def part_table(spark, sf_dir):
     q = all_queries()["sink_txn_log_partitioned"]
     rows = q.builder(spark, sf_dir).collect()
-    return rows, _part_base(sf_dir)
+    return rows, fixture_dir(sf_dir, "txnpart")
 
 
 def test_partitioned_delete_and_prune(spark, sf_dir, part_table):
@@ -412,14 +385,6 @@ def test_partitioned_bytes_survive_delete(spark, sf_dir, part_table):
 # ---------------------------------------------------------------------------
 
 
-def _sink_base(sf_dir: str) -> str:
-    from etl_8x8_spark.sources.scans import _src_tag
-
-    return os.path.join(
-        scratch_dir(), f"txnsink_{_src_tag(sf_dir, 'orders')}"
-    )
-
-
 def test_stream_sink_exactly_once(spark, sf_dir):
     """The harness replays the final epoch with the same batch_id
     (inside the builder); the log must hold each epoch EXACTLY once
@@ -429,7 +394,7 @@ def test_stream_sink_exactly_once(spark, sf_dir):
     orders = load_table(spark, sf_dir, "orders")
     assert total == orders.count()
 
-    base = _sink_base(sf_dir)
+    base = fixture_dir(sf_dir, "txnsink")
     recs = txn_log.records(txn_log.log_of(base))
     epochs = [rec["epoch"] for _, rec in recs]
     assert len(epochs) == 4  # four micro-batches, one commit each
@@ -450,14 +415,6 @@ def test_stream_sink_exactly_once(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _constraint_base(sf_dir: str) -> str:
-    from etl_8x8_spark.sources.scans import _src_tag
-
-    return os.path.join(
-        scratch_dir(), f"txnconstraint_{_src_tag(sf_dir, 'orders')}"
-    )
-
-
 def test_constraints_reject_then_accept(spark, sf_dir):
     """The dirty submission must leave an audit record and NO commit;
     the final log holds exactly v0 (create), v1 (ADD CONSTRAINT) and
@@ -474,7 +431,7 @@ def test_constraints_reject_then_accept(spark, sf_dir):
     ).count()
     assert row.n == n_even + n_clean
 
-    base = _constraint_base(sf_dir)
+    base = fixture_dir(sf_dir, "txnconstraint")
     log_dir = txn_log.log_of(base)
     assert txn_log.versions(log_dir) == [0, 1, 2]
     rec1 = txn_log.read(log_dir, 1)
@@ -487,16 +444,6 @@ def test_constraints_reject_then_accept(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # shallow clone: zero-copy + divergence isolation
 # ---------------------------------------------------------------------------
-
-
-def _clone_bases(sf_dir: str) -> tuple[str, str]:
-    from etl_8x8_spark.sources.scans import _src_tag
-
-    t = _src_tag(sf_dir, "orders")
-    return (
-        os.path.join(scratch_dir(), f"txnclonesrc_{t}"),
-        os.path.join(scratch_dir(), f"txnclone_{t}"),
-    )
 
 
 def test_shallow_clone_zero_copy_and_divergence(spark, sf_dir):
@@ -513,31 +460,25 @@ def test_shallow_clone_zero_copy_and_divergence(spark, sf_dir):
     assert rows["src"] == n + n20
     assert rows["clone"] == n - n7 + n30
 
-    src_base, clone_base = _clone_bases(sf_dir)
+    base = fixture_dir(sf_dir, "txnclone")
+    src_base, clone_base = (os.path.join(base, d) for d in ("src", "clone"))
     # zero-copy pin: at clone time NOTHING was copied — the clone dir
     # contains only the log and the clone's own post-fork outputs
     entries = set(os.listdir(clone_base))
-    assert entries == {"_log", "cow0", "app0", "_ALL_COMMITTED"}
+    assert entries == {"_log", "cow0", "app0"}
     # the source still physically owns its originals
     assert os.path.isdir(os.path.join(src_base, "half0"))
     assert os.path.isdir(os.path.join(src_base, "half1"))
-    # clone v0 referenced the source's files across roots
+    # clone v0 referenced the source's files across roots, each root
+    # relative to the fixture dir
     rec0 = txn_log.read(txn_log.log_of(clone_base), 0)
-    assert rec0["clone_of"] == src_base
-    assert {a["root"] for a in rec0["adds"]} == {src_base}
+    assert rec0["clone_of"] == "src"
+    assert {a["root"] for a in rec0["adds"]} == {"src"}
 
 
 # ---------------------------------------------------------------------------
 # identity columns: global uniqueness + gap-free blocks
 # ---------------------------------------------------------------------------
-
-
-def _identity_base(sf_dir: str) -> str:
-    from etl_8x8_spark.sources.scans import _src_tag
-
-    return os.path.join(
-        scratch_dir(), f"txnidentity_{_src_tag(sf_dir, 'orders')}"
-    )
 
 
 def test_identity_blocks_contiguous_and_unique(spark, sf_dir):
@@ -554,7 +495,7 @@ def test_identity_blocks_contiguous_and_unique(spark, sf_dir):
         assert r.sum_id == (r.min_id + r.max_id) * r.n // 2
         expect_start = r.max_id + 1
     # and the ids are globally unique across the whole table
-    base = _identity_base(sf_dir)
+    base = fixture_dir(sf_dir, "txnidentity")
     import glob as _glob
 
     all_ids = spark.read.parquet(

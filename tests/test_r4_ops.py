@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 
 from etl_8x8_spark.registry import all_queries
 
+from tests.conftest import fixture_dir
+
 
 @pytest.fixture(scope="module")
 def queries():
@@ -206,11 +208,9 @@ class TestZorderSink:
         read every row — the multi-dimension skip a linear sort on
         (partkey, suppkey) cannot provide for the second key."""
         from etl_8x8_spark.plans.audit import scan_metrics
-        from etl_8x8_spark.sources.readers import scratch_dir
 
         queries["sink_zorder_clustered"].builder(spark, sf_dir).collect()
-        tag = os.path.basename(sf_dir.rstrip("/"))
-        path = os.path.join(scratch_dir(), f"lineitem_zorder_{tag}")
+        path = fixture_dir(sf_dir, "lineitem_zorder")
         total = spark.read.parquet(path).count()
         filtered = spark.read.parquet(path).filter(
             (F.col("l_suppkey") >= 2) & (F.col("l_suppkey") <= 3)

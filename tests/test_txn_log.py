@@ -26,7 +26,8 @@ import pytest
 from etl_8x8_spark.registry import all_queries
 from etl_8x8_spark.sources import txn_log
 from etl_8x8_spark.sources.readers import scratch_dir
-from etl_8x8_spark.sources.scans import _src_tag
+
+from tests.conftest import fixture_dir
 
 SF_DIR = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -39,9 +40,7 @@ def _run(spark):
 
 
 def _base() -> str:
-    return os.path.join(
-        scratch_dir(), f"txnlog_{_src_tag(SF_DIR, 'orders')}"
-    )
+    return fixture_dir(SF_DIR, "txnlog")
 
 
 class TestTxnLogCrashConsistency:
