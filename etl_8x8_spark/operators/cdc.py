@@ -272,8 +272,6 @@ def cdc_stream_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     old = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    if old.limit(1).isEmpty():  # empty-input contract: an empty table
-        return old  # has no files to commit and no changes to stream
     key = F.col("o_orderkey")
     sf_tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
     base = os.path.join(scratch_dir(), f"cdc_stream_{sf_tag}")
@@ -305,7 +303,10 @@ def cdc_stream_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return bucket_dirs(vdir)
 
-    commit(write_bucketed(old, "v00000"), [])
+    bulk = write_bucketed(old, "v00000")
+    if not bulk:  # an empty table: no file to commit, no change to stream
+        return old
+    commit(bulk, [])
 
     def change(residue: int, op: str, seq: int, priority) -> DataFrame:
         prio = (

@@ -9,18 +9,24 @@ this removes the dominant shuffle of every repeated fact-fact join
 (pay one bucketed write, amortize over every subsequent join, the
 same trade the reference makes with its SSM memo cache, R10).
 
-Bucketing metadata lives in the session catalog, so tables are
-(re-)registered per session; the parquet files themselves are reused
-across sessions once written.
+The bucketed files are a derived fixture (``readers.derived``),
+written once per source-table version. Bucketing metadata lives in
+the session catalog, so each session registers a table over the
+published dir, named after the dir and so after its key.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from etl_8x8_spark.sources.readers import load_table, scratch_dir
+from etl_8x8_spark.sources.readers import derived, load_table
+
+
+def _table_name(path: str) -> str:
+    return re.sub(r"\W", "_", os.path.basename(path))
 
 
 def _warehouse_table(
@@ -32,17 +38,27 @@ def _warehouse_table(
 ) -> str:
     """Ensure a bucketed copy of ``table`` exists and is registered in
     the session catalog; returns the catalog table name."""
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    name = f"{table}_bucketed_{tag}"
-    if spark.catalog.tableExists(name):
-        return name
     df = load_table(spark, sf_dir, table)
-    (
-        df.write.mode("overwrite")
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .option("path", os.path.join(scratch_dir(), "warehouse", name))
-        .saveAsTable(name)
+
+    def write(path: str) -> None:
+        # a bucketed write needs a catalog table; the files outlive it
+        build = _table_name(path)
+        (
+            df.write.mode("overwrite")
+            .bucketBy(n_buckets, key)
+            .sortBy(key)
+            .option("path", path)
+            .saveAsTable(build)
+        )
+        spark.sql(f"DROP TABLE {build}")
+
+    path = derived(sf_dir, f"{table}_bucketed_{n_buckets}", [table], write)
+    name = _table_name(path)
+    cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema)
+    spark.sql(
+        f"CREATE TABLE IF NOT EXISTS {name} ({cols}) USING parquet"
+        f" CLUSTERED BY ({key}) SORTED BY ({key}) INTO {n_buckets} BUCKETS"
+        f" LOCATION '{path}'"
     )
     return name
 

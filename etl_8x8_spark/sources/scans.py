@@ -1403,25 +1403,22 @@ def sink_manifest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     write (the small-file-prevention pattern sink_compaction repairs
     after the fact); the manifest pass reads footer-cheap columns only.
     """
-    orders = load_table(spark, sf_dir, "orders")
-    if orders.limit(1).isEmpty():  # empty-input contract: empty result,
-        return spark.createDataFrame(  # normal schema (no files to stat)
-            [],
-            "o_orderpriority string, n_files long, n_rows long,"
-            " min_key long, max_key long",
-        )
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderpriority"
+    )
 
     def write(path: str) -> None:
         (
-            orders.select("o_orderkey", "o_orderpriority")
-            .repartition(F.col("o_orderpriority"))
+            orders.repartition(F.col("o_orderpriority"))
             .write.mode("overwrite")
             .partitionBy("o_orderpriority")
             .parquet(path)
         )
 
     path = derived(sf_dir, "orders_mstats", ["orders"], write)
-    back = spark.read.parquet(path).withColumn(
+    # explicit schema: a 0-row partitioned write leaves no data files
+    # and schema inference would fail (the empty-partition day)
+    back = spark.read.schema(orders.schema).parquet(path).withColumn(
         "_file", F.input_file_name()
     )
     return (
@@ -1464,8 +1461,8 @@ def sink_txn_log_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     or after a commit, never in between, and a crash mid-commit leaves
     only an invisible tmp file.
 
-    Three commits are replayed: (1) add file A (orders first half),
-    (2) add file B (second half), (3) COMPACT-AND-DELETE — write file
+    Three commits are replayed: (1) add file A (even o_orderkey),
+    (2) add file B (odd keys), (3) COMPACT-AND-DELETE — write file
     C = (A ∪ B) minus o_orderkey % 10 == 0, add C, remove A and B.
     The reader lists the log, folds adds/removes into the live set
     ({{C}}), reads only live files, and aggregates; the oracle computes
@@ -1482,10 +1479,6 @@ def sink_txn_log_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    if orders.limit(1).isEmpty():  # empty-input contract: nothing to
-        return spark.createDataFrame(  # commit, empty result w/ schema
-            [], "o_orderpriority string, n long, sum_price double"
-        )
 
     def build(base: str) -> None:
         log_dir = txn_log.reset(base)
@@ -1494,13 +1487,12 @@ def sink_txn_log_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
             rec = {"adds": adds, "removes": removes}
             txn_log.commit_or_raise(log_dir, version, rec)
 
-        median = orders.approxQuantile("o_orderkey", [0.5], 0.0)[0]
         a_dir, b_dir, c_dir = (
             os.path.join(base, d) for d in ("dataA", "dataB", "dataC")
         )
-        orders.filter(F.col("o_orderkey") <= median).write.parquet(a_dir)
+        orders.filter(F.col("o_orderkey") % 2 == 0).write.parquet(a_dir)
         commit(0, ["dataA"], [])
-        orders.filter(F.col("o_orderkey") > median).write.parquet(b_dir)
+        orders.filter(F.col("o_orderkey") % 2 != 0).write.parquet(b_dir)
         commit(1, ["dataB"], [])
         spark.read.parquet(a_dir, b_dir).filter(
             F.col("o_orderkey") % 10 != 0
@@ -1565,10 +1557,6 @@ def scan_txn_log_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    if orders.limit(1).isEmpty():  # empty-input contract
-        return spark.createDataFrame(
-            [], "version long, n long, sum_price double"
-        )
 
     def build(base: str) -> None:
         log_dir = txn_log.reset(base)
@@ -1679,12 +1667,6 @@ def sink_txn_log_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    if orders.limit(1).isEmpty():  # empty-input contract
-        return spark.createDataFrame(
-            [],
-            "o_orderstatus string, last_action string,"
-            " n_rows long, sum_price double",
-        )
 
     def build(base: str) -> None:
         log_dir = txn_log.reset(base)
@@ -1825,10 +1807,6 @@ def scan_txn_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    if orders.limit(1).isEmpty():  # empty-input contract
-        return spark.createDataFrame(
-            [], "o_orderpriority string, n long, sum_price double"
-        )
 
     def build(base: str) -> None:
         log_dir = txn_log.reset(base)
@@ -1930,10 +1908,6 @@ def sink_txn_log_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    if orders.limit(1).isEmpty():  # empty-input contract
-        return spark.createDataFrame(
-            [], "o_orderpriority string, n long, sum_price double"
-        )
 
     def build(base: str) -> None:
         log_dir = txn_log.reset(base)
@@ -2170,10 +2144,6 @@ def sink_txn_log_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    if orders.limit(1).isEmpty():  # empty-input contract
-        return spark.createDataFrame(
-            [], "o_orderstatus string, n_rows long, sum_price double"
-        )
 
     def build(base: str) -> None:
         log_dir = txn_log.reset(base)
@@ -2405,12 +2375,6 @@ def sink_txn_log_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
     #files) can tell the two strategies apart (test_plans.py).
     """
     orders = load_table(spark, sf_dir, "orders")
-    if orders.limit(1).isEmpty():  # empty-input contract
-        return spark.createDataFrame(
-            [],
-            "priority string, channel string,"
-            " n_rows long, sum_price double",
-        )
 
     def build(base: str) -> None:
         log_dir = txn_log.reset(base)
@@ -2533,12 +2497,6 @@ def scan_txn_log_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    if orders.limit(1).isEmpty():  # empty-input contract
-        return spark.createDataFrame(
-            [],
-            "o_orderkey long, _change_type string,"
-            " _commit_version long, o_totalprice double",
-        )
 
     def build(base: str) -> None:
         log_dir = txn_log.reset(base)
@@ -2707,10 +2665,6 @@ def sink_txn_log_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    if orders.limit(1).isEmpty():  # empty-input contract
-        return spark.createDataFrame(
-            [], "o_orderpriority string, n long, sum_price double"
-        )
 
     def build(base: str) -> None:
         log_dir = txn_log.reset(base)
@@ -2826,11 +2780,6 @@ def scan_txn_log_as_of_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    if orders.limit(1).isEmpty():  # empty-input contract
-        return spark.createDataFrame(
-            [],
-            "query_ts long, version long, n long, sum_price double",
-        )
 
     def build(base: str) -> None:
         log_dir = txn_log.reset(base)
@@ -3069,10 +3018,6 @@ def sink_txn_log_delete_vectors(
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    if orders.limit(1).isEmpty():  # empty-input contract
-        return spark.createDataFrame(
-            [], "version long, n long, sum_price double"
-        )
 
     def build(base: str) -> None:
         log_dir = txn_log.reset(base)
@@ -3298,10 +3243,6 @@ def sink_txn_log_column_mapping(
     ``sink_txn_log_schema_evolution``; projection is scan-side.
     """
     orders = load_table(spark, sf_dir, "orders")
-    if orders.limit(1).isEmpty():  # empty-input contract
-        return spark.createDataFrame(
-            [], "bucket long, n long, sum_price double"
-        )
 
     def build(base: str) -> None:
         log_dir = txn_log.reset(base)
@@ -3423,12 +3364,6 @@ def scan_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    if orders.limit(1).isEmpty():  # empty-input contract
-        return spark.createDataFrame(
-            [],
-            "o_orderstatus string, n long, n_recovered long,"
-            " sum_price double",
-        )
     fields = [
         ("o_orderkey", "long"),
         ("o_orderstatus", "string"),
@@ -3557,10 +3492,6 @@ def sink_txn_log_optimize_zorder(
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
-    if orders.limit(1).isEmpty():  # empty-input contract
-        return spark.createDataFrame(
-            [], "o_orderstatus string, n long, sum_price double"
-        )
 
     def stats_of(df: DataFrame, path: str) -> dict:
         r = df.agg(
@@ -3600,7 +3531,8 @@ def sink_txn_log_optimize_zorder(
             F.min("o_custkey"), F.max("o_custkey"),
             F.min("o_orderkey"), F.max("o_orderkey"),
         ).collect()[0]
-        cmin, cmax, kmin, kmax = b[0], b[1], b[2], b[3]
+        # an empty table has no bounds: any box clusters its zero rows
+        cmin, cmax, kmin, kmax = (v or 0 for v in b)
         cs = F.floor(
             (F.col("o_custkey") - F.lit(cmin)) * 1024
             / F.lit(cmax - cmin + 1)
@@ -3649,19 +3581,21 @@ def sink_txn_log_optimize_zorder(
 
     # reader: fold log, stats-prune against the quarter box, scan
     live = txn_log.live_adds(txn_log.records(log_dir)).values()
-    b = orders.agg(
-        F.min("o_custkey"), F.max("o_custkey"),
-        F.min("o_orderkey"), F.max("o_orderkey"),
-    ).collect()[0]
-    chi = b[0] + (b[1] - b[0]) // 4
-    khi = b[2] + (b[3] - b[2]) // 4
+    cmin, cmax, kmin, kmax = (
+        v or 0
+        for v in orders.agg(
+            F.min("o_custkey"), F.max("o_custkey"),
+            F.min("o_orderkey"), F.max("o_orderkey"),
+        ).collect()[0]
+    )
+    chi = cmin + (cmax - cmin) // 4
+    khi = kmin + (kmax - kmin) // 4
     kept = [
-        a for a in live
+        os.path.join(base, a["path"]) for a in live
         if a["cmin"] <= chi and a["kmin"] <= khi
     ]
-    df = spark.read.parquet(
-        *(os.path.join(base, a["path"]) for a in kept)
-    )
+    # an empty table's OPTIMIZE leaves no live add to scan
+    df = spark.read.parquet(*kept) if kept else orders.limit(0)
     return (
         df.filter(
             (F.col("o_custkey") <= chi) & (F.col("o_orderkey") <= khi)
@@ -3715,9 +3649,9 @@ def sink_txn_log_partitioned(
       column read back with it, from metadata alone — schema parity
       with an unpartitioned table.
 
-    History: v0 adds 5 partition units (first half by key), v1 adds 5
-    more (second half — a partition now spans multiple files, as at
-    scale), v2 metadata-DELETEs the 3-MEDIUM partition (2 removes).
+    History: v0 adds 5 partition units (even keys), v1 adds 5 more
+    (odd keys — a partition now spans multiple files, as at scale),
+    v2 metadata-DELETEs the 3-MEDIUM partition (2 removes).
     The query reads IN ('2-HIGH','3-MEDIUM') through the pruned scan:
     2-HIGH serves from its 2 live adds, 3-MEDIUM no longer exists —
     a reader that misses the remove, or prunes wrongly, hashes red.
@@ -3731,10 +3665,6 @@ def sink_txn_log_partitioned(
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    if orders.limit(1).isEmpty():  # empty-input contract
-        return spark.createDataFrame(
-            [], "o_orderpriority string, n long, sum_price double"
-        )
     prios = [
         "1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW",
     ]
@@ -3745,11 +3675,8 @@ def sink_txn_log_partitioned(
         def commit(version: int, rec: dict) -> None:
             txn_log.commit_or_raise(log_dir, version, rec)
 
-        median = orders.approxQuantile("o_orderkey", [0.5], 0.0)[0]
-        for v, pred in (
-            (0, F.col("o_orderkey") <= median),
-            (1, F.col("o_orderkey") > median),
-        ):
+        for v in (0, 1):
+            pred = F.col("o_orderkey") % 2 == v
             adds = []
             for i, p in enumerate(prios):
                 path = f"v{v}_p{i}"
@@ -3791,10 +3718,6 @@ def sink_txn_log_partitioned(
                 "o_orderpriority",
                 F.lit(a["partition"]["o_orderpriority"]),
             )
-        )
-    if not parts:
-        return spark.createDataFrame(
-            [], "o_orderpriority string, n long, sum_price double"
         )
     df = parts[0]
     for p in parts[1:]:
@@ -3867,10 +3790,6 @@ def sink_txn_log_constraints(
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    if orders.limit(1).isEmpty():  # empty-input contract
-        return spark.createDataFrame(
-            [], "n long, min_price double, sum_price double"
-        )
 
     def build(base: str) -> None:
         log_dir = txn_log.reset(base)
@@ -3887,9 +3806,10 @@ def sink_txn_log_constraints(
 
         def validated_append(
             version: int, batch: DataFrame, path: str
-        ) -> bool:
+        ) -> int:
             """The constrained-write path: count violators of every
-            active constraint over the BATCH; abort on any."""
+            active constraint over the BATCH; abort on any. Returns
+            the violator count (0: committed)."""
             bad = 0
             for expr in active_constraints():
                 bad += batch.filter(f"NOT ({expr})").count()
@@ -3897,10 +3817,10 @@ def sink_txn_log_constraints(
                 audit = {"rejected_version": version, "violations": bad}
                 with open(os.path.join(base, "_AUDIT.json"), "w") as f:
                     json.dump(audit, f)
-                return False
+                return bad
             batch.write.parquet(os.path.join(base, path))
             commit(version, {"adds": [path], "removes": []})
-            return True
+            return 0
 
         # v0: clean file
         f1 = orders.filter(F.col("o_orderkey") % 2 == 0)
@@ -3921,25 +3841,16 @@ def sink_txn_log_constraints(
         commit(1, {"adds": [], "removes": [], "add_constraints": [check]})
         # v2a: dirty batch (odd %3 keys with prices sign-flipped;
         # key-negated namespace so the oracle can name the batch)
-        dirty = orders.filter(
-            (F.col("o_orderkey") % 2 != 0) & (F.col("o_orderkey") % 3 == 0)
-        ).select(
-            (-F.col("o_orderkey")).alias("o_orderkey"),
-            (-F.col("o_totalprice")).alias("o_totalprice"),
-        )
-        committed = validated_append(2, dirty, "f2")
-        if committed:
-            raise RuntimeError(
-                "constraint sink accepted a violating batch"
-            )
-        # v2: the writer fixes the batch at source and resubmits
         clean = orders.filter(
             (F.col("o_orderkey") % 2 != 0) & (F.col("o_orderkey") % 3 == 0)
-        ).select(
-            (-F.col("o_orderkey")).alias("o_orderkey"), "o_totalprice"
-        )
-        if not validated_append(2, clean, "f2"):
-            raise RuntimeError("clean batch rejected")
+        ).withColumn("o_orderkey", -F.col("o_orderkey"))
+        dirty = clean.withColumn("o_totalprice", -F.col("o_totalprice"))
+        # rejected whole; an empty table has no row to flip, so its
+        # batch is clean and commits as v2 at once
+        if validated_append(2, dirty, "f2"):
+            # v2: the writer fixes the batch at source and resubmits
+            if validated_append(2, clean, "f2"):
+                raise RuntimeError("clean batch rejected")
 
     base = derived(sf_dir, "txnconstraint", ["orders"], build)
     log_dir = txn_log.log_of(base)
@@ -4016,10 +3927,6 @@ def sink_txn_log_shallow_clone(
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    if orders.limit(1).isEmpty():  # empty-input contract
-        return spark.createDataFrame(
-            [], "which string, n long, sum_price double"
-        )
     commit = txn_log.commit_or_raise
 
     def fold(log_dir: str) -> list[dict]:
@@ -4159,12 +4066,6 @@ def sink_txn_log_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    if orders.limit(1).isEmpty():  # empty-input contract
-        return spark.createDataFrame(
-            [],
-            "commit_version long, n long, min_id long, max_id long,"
-            " sum_id long",
-        )
 
     def build(base: str) -> None:
         log_dir = txn_log.reset(base)

@@ -15,9 +15,9 @@ import pytest
 
 from etl_8x8_spark.sources import readers
 
-_PKG = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "etl_8x8_spark"
-)
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_PKG = os.path.join(_ROOT, "etl_8x8_spark")
+_TOOLS = os.path.join(_ROOT, "tools")
 
 CALLS: list[str] = []
 
@@ -168,16 +168,17 @@ def test_guard_catches_each_marker_shape():
 
 def test_no_marker_idiom_outside_readers():
     found = []
-    for root, _, names in os.walk(_PKG):
-        for name in names:
-            path = os.path.join(root, name)
-            if not name.endswith(".py") or path.endswith(
-                os.path.join("sources", "readers.py")
-            ):
-                continue
-            with open(path) as fh:
-                found += [
-                    f"{os.path.relpath(path, _PKG)}:{line}"
-                    for line in _marker_uses(fh.read())
-                ]
+    for top in (_PKG, _TOOLS):
+        for root, _, names in os.walk(top):
+            for name in names:
+                path = os.path.join(root, name)
+                if not name.endswith(".py") or path.endswith(
+                    os.path.join("sources", "readers.py")
+                ):
+                    continue
+                with open(path) as fh:
+                    found += [
+                        f"{os.path.relpath(path, _ROOT)}:{line}"
+                        for line in _marker_uses(fh.read())
+                    ]
     assert found == []

@@ -9,6 +9,8 @@ everything at scale, so the suite pins the plan shape, not timings.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from etl_8x8_spark.plans.audit import plan_string
@@ -133,6 +135,33 @@ class TestBucketedJoin:
             "bucketed sides must not re-shuffle"
         )
         assert plan.count("Exchange hashpartitioning") == 1  # final agg only
+
+    def test_bucketed_files_survive_new_sessions(self, spark, sf_dir):
+        """The bucketed copies are derived fixtures: a new session, and
+        a catalog that lacks the tables (a new application), register
+        a table over the published dirs and rewrite nothing."""
+        from etl_8x8_spark.sources.bucketing import (
+            _table_name,
+            bucketed_orders_lineitem,
+        )
+
+        o, _ = bucketed_orders_lineitem(spark, sf_dir)
+        n = o.count()
+        dirs = [
+            fixture_dir(sf_dir, f"{t}_bucketed_8") for t in ("orders", "lineitem")
+        ]
+
+        def stats() -> list[tuple[int, int]]:
+            return [(st.st_ino, st.st_mtime_ns) for st in map(os.stat, dirs)]
+
+        before = stats()
+        bucketed_orders_lineitem(spark.newSession(), sf_dir)
+        assert stats() == before
+        for d in dirs:
+            spark.sql(f"DROP TABLE {_table_name(d)}")
+        o2, _ = bucketed_orders_lineitem(spark.newSession(), sf_dir)
+        assert stats() == before
+        assert o2.count() == n
 
 
 class TestWindowAndLimit:

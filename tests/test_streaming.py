@@ -233,3 +233,18 @@ class TestPhaseDriver:
         second = self._run(spark, sf_dir)
         assert len(glob.glob(os.path.join(in_dir, "*.parquet"))) == 3
         assert second == first
+
+
+class TestTxnLogStreamsEmpty:
+    def test_txn_log_streams_survive_empty_orders(self, spark, sf_dir, tmp_path):
+        """The empty-table sweep skips every ``stream_*`` key, so this
+        builds the two transaction-log streams on an sf dir whose
+        ``orders`` has its schema and no row, twice each: the second
+        build reuses the derived log the first one published."""
+        d = str(tmp_path / "empty_orders")
+        spark.read.parquet(f"{sf_dir}/orders.parquet").limit(0).coalesce(
+            1
+        ).write.parquet(os.path.join(d, "orders.parquet"))
+        for name in ("stream_txn_log_tail", "stream_txn_log_sink"):
+            for _ in range(2):
+                assert all_queries()[name].builder(spark, d).count() == 0

@@ -52,71 +52,71 @@ DEFAULT_QUERIES = [
 ]
 
 _KEY_OFF = 100_000_000
+_FACTS = ("lineitem", "orders", "events", "documents", "embeddings")
+_DIMS = ("region", "nation", "customer", "supplier", "part")
 
 
 def build_replica(spark, copies: int) -> str:
-    from etl_8x8_spark.sources.readers import load_table, scratch_dir
+    """The ``copies``-fold replica of ``BASE_SF``, a derived dir that
+    a changed shifting rule or base table rebuilds."""
+    from etl_8x8_spark.sources.readers import derived, load_table
 
-    out = os.path.join(scratch_dir(), f"scale{copies}x")
-    marker = os.path.join(out, "_DONE")
-    if os.path.exists(marker):
-        return out
-    os.makedirs(out, exist_ok=True)
+    def write(out: str) -> None:
+        def shifted(name: str, copy: int):
+            df = load_table(spark, BASE_SF, name)
+            off = copy * _KEY_OFF
+            if name == "lineitem":
+                return df.withColumn("l_orderkey", F.col("l_orderkey") + off)
+            if name == "orders":
+                return df.withColumn("o_orderkey", F.col("o_orderkey") + off)
+            if name == "events":
+                return df.withColumn(
+                    "event_id", F.col("event_id") + off
+                ).withColumn("user_id", F.col("user_id") + copy * 1_000_000)
+            if name == "documents":
+                # tag every word with the copy index: cross-copy docs
+                # share no shingles, within-copy near-dup structure is
+                # preserved
+                if copy == 0:
+                    return df
+                tagged = F.array_join(
+                    F.transform(
+                        F.split(F.col("text"), " "),
+                        lambda w: F.concat(w, F.lit(f"_c{copy}")),
+                    ),
+                    " ",
+                )
+                return df.withColumn(
+                    "doc_id", F.col("doc_id") + off
+                ).withColumn("text", tagged)
+            if name == "embeddings":
+                if copy == 0:
+                    return df
+                noisy = F.transform(
+                    F.col("embedding"),
+                    lambda x, j: (
+                        x
+                        + F.sin(F.col("vec_id") * 31 + j * 7 + F.lit(copy))
+                        * F.lit(0.01)
+                    ).cast("float"),
+                )
+                return df.withColumn(
+                    "vec_id", F.col("vec_id") + off
+                ).withColumn("embedding", noisy)
+            return df
 
-    def shifted(name: str, copy: int):
-        df = load_table(spark, BASE_SF, name)
-        off = copy * _KEY_OFF
-        if name == "lineitem":
-            return df.withColumn("l_orderkey", F.col("l_orderkey") + off)
-        if name == "orders":
-            return df.withColumn("o_orderkey", F.col("o_orderkey") + off)
-        if name == "events":
-            return df.withColumn(
-                "event_id", F.col("event_id") + off
-            ).withColumn("user_id", F.col("user_id") + copy * 1_000_000)
-        if name == "documents":
-            # tag every word with the copy index: cross-copy docs share
-            # no shingles, within-copy near-dup structure is preserved
-            if copy == 0:
-                return df
-            tagged = F.array_join(
-                F.transform(
-                    F.split(F.col("text"), " "),
-                    lambda w: F.concat(w, F.lit(f"_c{copy}")),
-                ),
-                " ",
+        for name in _FACTS:
+            path = os.path.join(out, f"{name}.parquet")
+            for copy in range(copies):
+                mode = "overwrite" if copy == 0 else "append"
+                shifted(name, copy).write.mode(mode).parquet(path)
+        # dims: single copy (dims don't grow with fact volume)
+        for name in _DIMS:
+            load_table(spark, BASE_SF, name).write.parquet(
+                os.path.join(out, f"{name}.parquet")
             )
-            return df.withColumn("doc_id", F.col("doc_id") + off).withColumn(
-                "text", tagged
-            )
-        if name == "embeddings":
-            if copy == 0:
-                return df
-            noisy = F.transform(
-                F.col("embedding"),
-                lambda x, j: (
-                    x
-                    + F.sin(F.col("vec_id") * 31 + j * 7 + F.lit(copy))
-                    * F.lit(0.01)
-                ).cast("float"),
-            )
-            return df.withColumn("vec_id", F.col("vec_id") + off).withColumn(
-                "embedding", noisy
-            )
-        return df
 
-    for name in ("lineitem", "orders", "events", "documents", "embeddings"):
-        path = os.path.join(out, f"{name}.parquet")
-        for copy in range(copies):
-            mode = "overwrite" if copy == 0 else "append"
-            shifted(name, copy).write.mode(mode).parquet(path)
-    # dims: single copy (dims don't grow with fact volume)
-    for name in ("region", "nation", "customer", "supplier", "part"):
-        load_table(spark, BASE_SF, name).write.mode("overwrite").parquet(
-            os.path.join(out, f"{name}.parquet")
-        )
-    open(marker, "w").close()
-    return out
+    return derived(BASE_SF, f"scale{copies}x", _FACTS + _DIMS, write)
 
 
 def main() -> None:
@@ -177,18 +177,16 @@ def skew_experiment(copies: int = 10) -> None:
     from pyspark.sql import functions as F
 
     from etl_8x8_spark.session import get_spark
-    from etl_8x8_spark.sources.readers import load_table, scratch_dir
+    from etl_8x8_spark.sources.readers import derived, load_table
 
     spark = get_spark(
         "skew_experiment",
         cpus=bench.bench_env()[1],
         shuffle_partitions=max(32, 8 * copies),
     )
-    out = os.path.join(scratch_dir(), f"skew{copies}x")
-    path = os.path.join(out, "events.parquet")
-    marker = os.path.join(out, "_DONE")
-    if not os.path.exists(marker):
-        os.makedirs(out, exist_ok=True)
+
+    def write(out: str) -> None:
+        path = os.path.join(out, "events.parquet")
         for copy in range(copies):
             df = load_table(spark, BASE_SF, "events").withColumn(
                 "event_id", F.col("event_id") + copy * _KEY_OFF
@@ -206,21 +204,23 @@ def skew_experiment(copies: int = 10) -> None:
             skewed.write.mode("overwrite" if copy == 0 else "append").parquet(
                 path
             )
-        open(marker, "w").close()
+        (
+            spark.read.parquet(path)
+            .select("user_id")
+            .distinct()
+            .withColumn("segment", F.col("user_id") % 100)
+            .write.parquet(os.path.join(out, "users.parquet"))
+        )
+
+    out = derived(BASE_SF, f"skew{copies}x", ["events"], write)
 
     # the shuffled payload must be INCOMPRESSIBLE: skew detection works
     # on compressed shuffle-block bytes, and a hot partition of repeated
     # key values compresses to nothing and never crosses the threshold
     # (found the hard way: a constant 200-char payload showed zero skew)
-    events = spark.read.parquet(path).withColumn(
+    events = spark.read.parquet(os.path.join(out, "events.parquet")).withColumn(
         "payload", F.sha2(F.col("event_id").cast("string"), 256)
     )
-    users = (
-        events.select("user_id")
-        .distinct()
-        .withColumn("segment", F.col("user_id") % 100)
-    )
-    users.write.mode("overwrite").parquet(os.path.join(out, "users.parquet"))
     users = spark.read.parquet(os.path.join(out, "users.parquet"))
 
     # thresholds scaled to the replica (defaults target cluster sizes)
