@@ -2337,7 +2337,7 @@ def dedup_incremental_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     (8 bytes/row; collision odds 2^-64 per pair) — kept as the raw
     string here so the DuckDB oracle is bit-exact.
     """
-    from etl_8x8_spark.sources.readers import derived
+    from etl_8x8_spark.sources.readers import derived, read_parquet
 
     docs = load_table(spark, sf_dir, "documents")
 
@@ -2357,7 +2357,7 @@ def dedup_incremental_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     idx_path = derived(sf_dir, "substr_sh_index", ["documents"], write)
-    index = spark.read.parquet(idx_path)
+    index = read_parquet(spark, idx_path)
 
     batch = _inc_span_batch(docs)
     btk = batch.select("doc_id", tokens().alias("tk")).filter(

@@ -5,6 +5,11 @@ projections into the scan (row-group skipping + column pruning), so
 query builders just ``load_table(...).select(...).filter(...)`` and let
 the optimizer move the work into the reader.
 
+Files that do not change have one schema per session: ``load_table``
+(the sf tables) and every builder's read of a ``derived`` fixture go
+through ``read_parquet``, which infers a footer schema once per
+session and file version and passes it back afterwards.
+
 CSV / JSON-lines readers always take an explicit schema (never
 ``inferSchema`` — a full extra pass over 100 TB) mirroring the
 reference's boundary validation (R14, SURVEY.md §1.3).
@@ -49,7 +54,8 @@ _INFERENCE_CONFS = (
     "spark.sql.parquet.mergeSchema",
 )
 
-#: session -> {(path, file version, inference confs): inferred StructType}
+#: session -> {(paths, file versions, mergeSchema, inference confs):
+#: inferred StructType}
 _FOOTER_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
@@ -111,18 +117,34 @@ def _file_version(path: str) -> tuple:
     return tuple(sorted(files))
 
 
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` that infers the footer schema once
-    per session and file version, then reads with it."""
+def read_parquet(
+    spark: SparkSession, *paths: str, merge_schema: bool = False
+) -> DataFrame:
+    """``spark.read.parquet(*paths)`` for files that do not change:
+    the engine's tables and the ``derived`` fixtures.
+
+    Inference runs a Spark job, so it runs once per session, path list,
+    file versions (``_file_version``) and ``mergeSchema`` flag; later
+    calls read with the exact StructType inferred then, so they run
+    none, and a rewritten file is inferred again. The memo is per
+    session, and keyed on the inference confs, because session confs
+    (``nanosAsLong``, ``inferTimestampNTZ``) shape the inferred types.
+    Files a build rewrites every time would only add memo entries:
+    they are read with ``spark.read`` (or with a schema the builder
+    already holds)."""
+    reader = spark.read
+    if merge_schema:
+        reader = reader.option("mergeSchema", "true")
     try:
-        version = _file_version(path)
+        versions = tuple(_file_version(p) for p in paths)
     except OSError:  # missing or not local: Spark resolves (and reports) it
-        return spark.read.parquet(path)
-    key = (path, version, tuple(spark.conf.get(c) for c in _INFERENCE_CONFS))
+        return reader.parquet(*paths)
+    confs = tuple(spark.conf.get(c) for c in _INFERENCE_CONFS)
+    key = (paths, versions, merge_schema, confs)
     memo = _FOOTER_SCHEMAS.setdefault(spark, {})
     if key in memo:
-        return spark.read.schema(memo[key]).parquet(path)
-    df = spark.read.parquet(path)
+        return spark.read.schema(memo[key]).parquet(*paths)
+    df = reader.parquet(*paths)
     memo[key] = df.schema
     return df
 
@@ -133,15 +155,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     The parquet footer is authoritative: the schema is whatever Spark
     infers from it, never TABLE_SCHEMAS (forcing that would disable
     vectorized-reader schema evolution; it serves the schemaless
-    formats and test validation). Inference runs a Spark job, so it
-    runs once per session and file version: later calls read with the
-    exact StructType inferred then, and a rewritten file is inferred
-    again. The memo is per session, and keyed on the inference confs,
-    because session confs (``nanosAsLong``, ``inferTimestampNTZ``)
-    shape the inferred types.
+    formats and test validation). It is read through
+    ``read_parquet``, so a session infers it once per file version.
     """
     pin_session_confs(spark)
-    df = _read_parquet(spark, table_path(sf_dir, name))
+    df = read_parquet(spark, table_path(sf_dir, name))
     if name == "events":
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, T.LongType):

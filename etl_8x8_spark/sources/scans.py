@@ -12,6 +12,7 @@ partitioned sink is verified by read-back.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,6 +26,7 @@ from etl_8x8_spark.sources.readers import (
     derived,
     load_table,
     read_json_lines,
+    read_parquet,
     scratch_dir,
 )
 from etl_8x8_spark.sources.sinks import (
@@ -268,7 +270,7 @@ def sink_sorted_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     path = derived(sf_dir, "lineitem_clustered", ["lineitem"], write)
-    back = spark.read.parquet(path).filter(
+    back = read_parquet(spark, path).filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("date"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("date"))
     )
@@ -485,7 +487,7 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).write.mode("append").parquet(path)
 
     path = derived(sf_dir, "orders_evolved", ["orders"], write)
-    back = spark.read.option("mergeSchema", "true").parquet(path)
+    back = read_parquet(spark, path, merge_schema=True)
     return back.select(
         "o_orderkey",
         "o_totalprice",
@@ -594,7 +596,7 @@ def sink_zorder_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     path = derived(sf_dir, "lineitem_zorder", ["lineitem"], write)
-    back = spark.read.parquet(path).filter(
+    back = read_parquet(spark, path).filter(
         (F.col("l_suppkey") >= 2) & (F.col("l_suppkey") <= 3)
     )
     return back.agg(
@@ -1277,7 +1279,7 @@ def scan_parquet_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = derived(sf_dir, "orders_bloom", ["orders"], write)
     return (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .filter(F.col("o_custkey").isin(7, 61, 97))
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .orderBy("o_orderkey")
@@ -1438,6 +1440,37 @@ def sink_manifest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _txnlog_writer(spark: SparkSession, sf_dir: str) -> Callable[[str], None]:
+    """The ``txnlog`` fixture's writer, shared by ``sink_txn_log_commit``
+    and ``scan_txn_log_time_travel``: three commits over orders (add the
+    even keys, add the odd keys, compact both minus the keys ≡ 0 mod
+    10). ``build`` stays nested so the fixture key digests its text."""
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderpriority", "o_totalprice"
+    )
+
+    def build(base: str) -> None:
+        log_dir = txn_log.reset(base)
+
+        def commit(version: int, adds: list, removes: list) -> None:
+            rec = {"adds": adds, "removes": removes}
+            txn_log.commit_or_raise(log_dir, version, rec)
+
+        a_dir, b_dir, c_dir = (
+            os.path.join(base, d) for d in ("dataA", "dataB", "dataC")
+        )
+        orders.filter(F.col("o_orderkey") % 2 == 0).write.parquet(a_dir)
+        commit(0, ["dataA"], [])
+        orders.filter(F.col("o_orderkey") % 2 != 0).write.parquet(b_dir)
+        commit(1, ["dataB"], [])
+        spark.read.parquet(a_dir, b_dir).filter(
+            F.col("o_orderkey") % 10 != 0
+        ).write.parquet(c_dir)
+        commit(2, ["dataC"], ["dataA", "dataB"])
+
+    return build
+
+
 @register(
     "sink_txn_log_commit",
     oracle=f"""
@@ -1476,34 +1509,8 @@ def sink_txn_log_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     producer) and optimistic-concurrency version checks — same
     protocol skeleton.
     """
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority", "o_totalprice"
-    )
-
-    def build(base: str) -> None:
-        log_dir = txn_log.reset(base)
-
-        def commit(version: int, adds: list, removes: list) -> None:
-            rec = {"adds": adds, "removes": removes}
-            txn_log.commit_or_raise(log_dir, version, rec)
-
-        a_dir, b_dir, c_dir = (
-            os.path.join(base, d) for d in ("dataA", "dataB", "dataC")
-        )
-        orders.filter(F.col("o_orderkey") % 2 == 0).write.parquet(a_dir)
-        commit(0, ["dataA"], [])
-        orders.filter(F.col("o_orderkey") % 2 != 0).write.parquet(b_dir)
-        commit(1, ["dataB"], [])
-        spark.read.parquet(a_dir, b_dir).filter(
-            F.col("o_orderkey") % 10 != 0
-        ).write.parquet(c_dir)
-        commit(2, ["dataC"], ["dataA", "dataB"])
-
-    base = derived(sf_dir, "txnlog", ["orders"], build)
-    log_dir = txn_log.log_of(base)
-
-    live = txn_log.live_adds(txn_log.records(log_dir))
-    table = spark.read.parquet(*(os.path.join(base, d) for d in live))
+    base = derived(sf_dir, "txnlog", ["orders"], _txnlog_writer(spark, sf_dir))
+    table = read_parquet(spark, *txn_log.live_paths(base))
     return (
         table.groupBy("o_orderpriority")
         .agg(F.count("*").alias("n"), dsum("o_totalprice", "sum_price"))
@@ -1554,38 +1561,10 @@ def scan_txn_log_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint compaction of the log itself beyond ~10^4 commits —
     same fold, memoized prefix.
     """
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority", "o_totalprice"
-    )
-
-    def build(base: str) -> None:
-        log_dir = txn_log.reset(base)
-
-        def commit(version: int, adds: list, removes: list) -> None:
-            rec = {"adds": adds, "removes": removes}
-            txn_log.commit_or_raise(log_dir, version, rec)
-
-        a_dir, b_dir, c_dir = (
-            os.path.join(base, d) for d in ("dataA", "dataB", "dataC")
-        )
-        orders.filter(F.col("o_orderkey") % 2 == 0).write.parquet(a_dir)
-        commit(0, ["dataA"], [])
-        orders.filter(F.col("o_orderkey") % 2 != 0).write.parquet(b_dir)
-        commit(1, ["dataB"], [])
-        spark.read.parquet(a_dir, b_dir).filter(
-            F.col("o_orderkey") % 10 != 0
-        ).write.parquet(c_dir)
-        commit(2, ["dataC"], ["dataA", "dataB"])
-
-    base = derived(sf_dir, "txnlog_tt", ["orders"], build)
-    log_dir = txn_log.log_of(base)
-
+    base = derived(sf_dir, "txnlog", ["orders"], _txnlog_writer(spark, sf_dir))
     snapshots = []
-    for version in txn_log.versions(log_dir):
-        live = txn_log.live_adds(txn_log.records(log_dir, upto=version))
-        snap = spark.read.parquet(
-            *(os.path.join(base, d) for d in live)
-        ).agg(
+    for version in txn_log.versions(txn_log.log_of(base)):
+        snap = read_parquet(spark, *txn_log.live_paths(base, version)).agg(
             F.lit(version).cast("long").alias("version"),
             F.count("*").alias("n"),
             dsum("o_totalprice", "sum_price"),
@@ -1741,12 +1720,7 @@ def sink_txn_log_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         commit(4, adds, removes)
 
     base = derived(sf_dir, "txnmerge", ["orders"], build)
-    log_dir = txn_log.log_of(base)
-
-    live = txn_log.live_adds(txn_log.records(log_dir))
-    table = spark.read.option("mergeSchema", "true").parquet(
-        *(os.path.join(base, p) for p in live)
-    )
+    table = read_parquet(spark, *txn_log.live_paths(base), merge_schema=True)
     return (
         table.groupBy(
             "o_orderstatus",
@@ -1841,16 +1815,9 @@ def scan_txn_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         commit(7, ["compactB"], ["slice3", "slice4", "slice5"])
 
     base = derived(sf_dir, "txnckpt", ["orders"], build)
-    log_dir = txn_log.log_of(base)
-
     # reader: latest checkpoint + commit SUFFIX only (commits up to the
     # checkpoint are folded into it — never parsed)
-    ckpt_v = txn_log.versions(log_dir, kind="checkpoint")[-1]
-    ckpt = txn_log.read(log_dir, ckpt_v, kind="checkpoint")
-    live = txn_log.live_adds(
-        txn_log.records(log_dir, after=ckpt["version"]), ckpt["live"]
-    )
-    table = spark.read.parquet(*(os.path.join(base, p) for p in live))
+    table = read_parquet(spark, *txn_log.live_paths(base))
     return (
         table.groupBy("o_orderpriority")
         .agg(F.count("*").alias("n"), dsum("o_totalprice", "sum_price"))
@@ -1945,10 +1912,7 @@ def sink_txn_log_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     base = derived(sf_dir, "txnvac", ["orders"], build)
-    log_dir = txn_log.log_of(base)
-
-    live = txn_log.live_adds(txn_log.records(log_dir))
-    table = spark.read.parquet(*(os.path.join(base, p) for p in live))
+    table = read_parquet(spark, *txn_log.live_paths(base))
     return (
         table.groupBy("o_orderpriority")
         .agg(F.count("*").alias("n"), dsum("o_totalprice", "sum_price"))
@@ -2257,10 +2221,7 @@ def sink_txn_log_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
             json.dump(audit, f)
 
     base = derived(sf_dir, "txnconflict", ["orders"], build)
-    log_dir = txn_log.log_of(base)
-
-    live = txn_log.live_adds(txn_log.records(log_dir))
-    table = spark.read.parquet(*(os.path.join(base, p) for p in live))
+    table = read_parquet(spark, *txn_log.live_paths(base))
     return (
         table.groupBy("o_orderstatus")
         .agg(
@@ -2300,9 +2261,7 @@ ORDER BY 1, 2
 """
 
 
-def _read_generations(
-    spark: SparkSession, base: str, log_dir: str
-) -> DataFrame:
+def _read_generations(spark: SparkSession, base: str) -> DataFrame:
     """Read a schema-carrying log's live files at its LATEST schema.
 
     A commit with a ``schema`` starts a new schema generation (the last
@@ -2312,7 +2271,7 @@ def _read_generations(
     is ``[name, type]`` or ``[physical, logical, type]``: a column the
     file has is renamed to its logical name, a younger one reads as a
     typed NULL — both scan-side projections, no shuffle."""
-    recs = list(txn_log.records(log_dir))
+    recs = list(txn_log.records(txn_log.log_of(base)))
     schema: list[list[str]] = []
     gen_of: dict[str, int] = {}  # file -> schema generation at add time
     gen = -1
@@ -2326,9 +2285,7 @@ def _read_generations(
         by_gen.setdefault(gen_of[p], []).append(p)
     parts = []
     for g in sorted(by_gen):
-        df = spark.read.parquet(
-            *(os.path.join(base, p) for p in by_gen[g])
-        )
+        df = read_parquet(spark, *(os.path.join(base, p) for p in by_gen[g]))
         have = set(df.columns)
         # e[0] = physical name, e[-2] = logical name, e[-1] = type
         parts.append(
@@ -2416,9 +2373,7 @@ def sink_txn_log_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
         commit(4, {"adds": ["gen3"], "removes": []})
 
     base = derived(sf_dir, "txnschema", ["orders"], build)
-    log_dir = txn_log.log_of(base)
-
-    table = _read_generations(spark, base, log_dir)
+    table = _read_generations(spark, base)
     return (
         table.groupBy(
             F.coalesce("o_orderpriority", F.lit("<pre-alter>")).alias(
@@ -2536,19 +2491,11 @@ def scan_txn_log_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     v_start, v_end = 0, txn_log.versions(log_dir)[-1]
     feeds = []
     for version, rec in txn_log.records(log_dir, v_end, after=v_start):
-        post = (
-            spark.read.parquet(
-                *(os.path.join(base, p) for p in rec["adds"])
-            )
-            if rec["adds"]
+        post, pre = (
+            read_parquet(spark, *(os.path.join(base, p) for p in paths))
+            if paths
             else None
-        )
-        pre = (
-            spark.read.parquet(
-                *(os.path.join(base, p) for p in rec["removes"])
-            )
-            if rec["removes"]
-            else None
+            for paths in (rec["adds"], rec["removes"])
         )
         if pre is None:
             changes = post.select(
@@ -2696,10 +2643,7 @@ def sink_txn_log_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
         commit(3, sorted(target - current), sorted(current - target))
 
     base = derived(sf_dir, "txnrestore", ["orders"], build)
-    log_dir = txn_log.log_of(base)
-
-    live = txn_log.live_adds(txn_log.records(log_dir))
-    table = spark.read.parquet(*(os.path.join(base, p) for p in live))
+    table = read_parquet(spark, *txn_log.live_paths(base))
     return (
         table.groupBy("o_orderpriority")
         .agg(F.count("*").alias("n"), dsum("o_totalprice", "sum_price"))
@@ -2816,9 +2760,6 @@ def scan_txn_log_as_of_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 v = version
         return v
 
-    def snapshot_live(upto: int) -> list[str]:
-        return list(txn_log.live_adds(c for c in commits if c[0] <= upto))
-
     # one aggregate per DISTINCT resolved version; probe rows join it
     out = []
     snap_cache: dict[int, DataFrame] = {}
@@ -2830,8 +2771,8 @@ def scan_txn_log_as_of_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
                     [(0, 0.0)], "n long, sum_price double"
                 )
             else:
-                snap_cache[v] = spark.read.parquet(
-                    *(os.path.join(base, p) for p in snapshot_live(v))
+                snap_cache[v] = read_parquet(
+                    spark, *txn_log.live_paths(base, v)
                 ).agg(
                     F.count("*").cast("long").alias("n"),
                     dsum("o_totalprice", "sum_price"),
@@ -3114,7 +3055,7 @@ def sink_txn_log_delete_vectors(
             if vp is not None and vp not in vec_paths:
                 vec_paths.append(vp)
     vparts = [
-        spark.read.parquet(os.path.join(base, vp)).select(
+        read_parquet(spark, os.path.join(base, vp)).select(
             "_fp", "_ri", F.lit(vp).alias("vp")
         )
         for vp in vec_paths
@@ -3140,9 +3081,7 @@ def sink_txn_log_delete_vectors(
         # per-version membership condition is an OR over that
         # version's live vectored files — one broadcast join total.
         data = (
-            spark.read.parquet(
-                *(os.path.join(base, f) for f in dv_files)
-            )
+            read_parquet(spark, *(os.path.join(base, f) for f in dv_files))
             .select(
                 *cols,
                 _dv_fp(),
@@ -3174,7 +3113,7 @@ def sink_txn_log_delete_vectors(
         vers = F.filter(F.array(*terms), lambda x: x.isNotNull())
         parts.append(data.select(F.explode(vers).alias("version"), *cols))
     for f in plain_files:
-        pdata = spark.read.parquet(os.path.join(base, f)).select(*cols)
+        pdata = read_parquet(spark, os.path.join(base, f)).select(*cols)
         pvers = F.array(
             *[F.lit(v).cast("long") for v, _ in file_versions[f]]
         )
@@ -3290,9 +3229,7 @@ def sink_txn_log_column_mapping(
         commit(4, {"adds": ["f3"], "removes": []})
 
     base = derived(sf_dir, "txncolmap", ["orders"], build)
-    log_dir = txn_log.log_of(base)
-
-    table = _read_generations(spark, base, log_dir)
+    table = _read_generations(spark, base)
     return (
         table.groupBy(
             (F.col("o_orderkey") % 5).cast("long").alias("bucket")
@@ -3465,7 +3402,9 @@ def sink_txn_log_optimize_zorder(
       ranks (`_zvalue` — shift/or built-ins, whole-stage codegen),
       clusters into 8 z-contiguous units via ``partitionBy`` on the
       z-bucket, and commits adds(8 clustered)+removes(8 original) —
-      data rewritten exactly once, protocol unchanged.
+      data rewritten exactly once, protocol unchanged. The commit also
+      records the table's z-column bounds, from which the reader
+      places its quarter box without a pass over the data.
 
     Why Z instead of a single-column sort: the v0 layout (key mod 8
     slices) gives every file the FULL min/max range of both columns —
@@ -3573,21 +3512,20 @@ def sink_txn_log_optimize_zorder(
             )
         commit(
             1,
-            {"adds": adds1, "removes": [a["path"] for a in adds0]},
+            {
+                "adds": adds1,
+                "removes": [a["path"] for a in adds0],
+                "bounds": [cmin, cmax, kmin, kmax],
+            },
         )
 
     base = derived(sf_dir, "txnzorder", ["orders"], build)
     log_dir = txn_log.log_of(base)
 
-    # reader: fold log, stats-prune against the quarter box, scan
+    # reader: fold log, stats-prune against the quarter box of the
+    # bounds the OPTIMIZE commit recorded, scan
     live = txn_log.live_adds(txn_log.records(log_dir)).values()
-    cmin, cmax, kmin, kmax = (
-        v or 0
-        for v in orders.agg(
-            F.min("o_custkey"), F.max("o_custkey"),
-            F.min("o_orderkey"), F.max("o_orderkey"),
-        ).collect()[0]
-    )
+    cmin, cmax, kmin, kmax = txn_log.read(log_dir, 1)["bounds"]
     chi = cmin + (cmax - cmin) // 4
     khi = kmin + (kmax - kmin) // 4
     kept = [
@@ -3595,7 +3533,7 @@ def sink_txn_log_optimize_zorder(
         if a["cmin"] <= chi and a["kmin"] <= khi
     ]
     # an empty table's OPTIMIZE leaves no live add to scan
-    df = spark.read.parquet(*kept) if kept else orders.limit(0)
+    df = read_parquet(spark, *kept) if kept else orders.limit(0)
     return (
         df.filter(
             (F.col("o_custkey") <= chi) & (F.col("o_orderkey") <= khi)
@@ -3713,7 +3651,7 @@ def sink_txn_log_partitioned(
     parts = []
     for a in kept:
         parts.append(
-            spark.read.parquet(os.path.join(base, a["path"]))
+            read_parquet(spark, os.path.join(base, a["path"]))
             .withColumn(
                 "o_orderpriority",
                 F.lit(a["partition"]["o_orderpriority"]),
@@ -3853,10 +3791,7 @@ def sink_txn_log_constraints(
                 raise RuntimeError("clean batch rejected")
 
     base = derived(sf_dir, "txnconstraint", ["orders"], build)
-    log_dir = txn_log.log_of(base)
-
-    live = txn_log.live_adds(txn_log.records(log_dir))
-    table = spark.read.parquet(*(os.path.join(base, p) for p in live))
+    table = read_parquet(spark, *txn_log.live_paths(base))
     return table.agg(
         F.count("*").cast("long").alias("n"),
         F.min("o_totalprice").cast("double").alias("min_price"),
@@ -3932,10 +3867,8 @@ def sink_txn_log_shallow_clone(
     def fold(log_dir: str) -> list[dict]:
         return list(txn_log.live_adds(txn_log.records(log_dir)).values())
 
-    def read_live(base: str, live: list[dict]) -> DataFrame:
-        return spark.read.parquet(
-            *(os.path.join(base, a["root"], a["path"]) for a in live)
-        )
+    def live_files(base: str, live: list[dict]) -> list[str]:
+        return [os.path.join(base, a["root"], a["path"]) for a in live]
 
     # both tables live in one fixture dir, and each add's root is
     # relative to it: the paths must survive the dir's publishing rename
@@ -3964,7 +3897,9 @@ def sink_txn_log_shallow_clone(
 
         # clone v1: CoW DELETE keys%7==0 — rewrite into the CLONE dir
         live = fold(clone_log)
-        kept = read_live(base, live).filter(F.col("o_orderkey") % 7 != 0)
+        kept = spark.read.parquet(*live_files(base, live)).filter(
+            F.col("o_orderkey") % 7 != 0
+        )
         kept.write.parquet(os.path.join(clone_base, "cow0"))
         commit(
             clone_log, 1,
@@ -3994,7 +3929,8 @@ def sink_txn_log_shallow_clone(
     base = derived(sf_dir, "txnclone", ["orders"], build)
     outs = []
     for which in ("clone", "src"):
-        df = read_live(base, fold(txn_log.log_of(os.path.join(base, which))))
+        live = fold(txn_log.log_of(os.path.join(base, which)))
+        df = read_parquet(spark, *live_files(base, live))
         outs.append(
             df.agg(
                 F.count("*").cast("long").alias("n"),
@@ -4136,9 +4072,7 @@ def sink_txn_log_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     outs = []
     for v, rec in txn_log.records(log_dir):
-        df = spark.read.parquet(
-            *(os.path.join(base, p) for p in rec["adds"])
-        )
+        df = read_parquet(spark, *(os.path.join(base, p) for p in rec["adds"]))
         outs.append(
             df.agg(
                 F.count("*").cast("long").alias("n"),

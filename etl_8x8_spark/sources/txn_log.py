@@ -135,3 +135,20 @@ def live_adds(
         for a in rec["adds"]:
             out[add_path(a)] = a
     return out
+
+
+def live_paths(base: str, upto: int | None = None) -> list[str]:
+    """The table at ``base`` as of version ``upto`` (default: the
+    latest): its live data paths joined onto ``base``, in add order.
+    The fold starts from the latest checkpoint at or before ``upto``,
+    so the commits it covers are never parsed."""
+    log_dir = log_of(base)
+    ckpts = [
+        v for v in versions(log_dir, "checkpoint") if upto is None or v <= upto
+    ]
+    after, live = -1, []
+    if ckpts:
+        after = ckpts[-1]
+        live = read(log_dir, after, "checkpoint")["live"]
+    adds = live_adds(records(log_dir, upto, after), live)
+    return [os.path.join(base, p) for p in adds]

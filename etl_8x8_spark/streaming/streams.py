@@ -52,7 +52,13 @@ from pyspark.sql import functions as F
 from etl_8x8_spark.functions.parity import dsum, oracle_dsum
 from etl_8x8_spark.registry import register
 from etl_8x8_spark.sources import txn_log
-from etl_8x8_spark.sources.readers import _sf_tag, derived, load_table, scratch_dir
+from etl_8x8_spark.sources.readers import (
+    _sf_tag,
+    derived,
+    load_table,
+    read_parquet,
+    scratch_dir,
+)
 
 _EVENTS_STREAM_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string,"
@@ -1645,12 +1651,7 @@ def stream_txn_log_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         sink_batch(replay, last)
 
     base = derived(sf_dir, "txnsink", ["orders"], build)
-    log_dir = txn_log.log_of(base)
-
-    live = txn_log.live_adds(txn_log.records(log_dir))
-    table = spark.read.parquet(
-        *(os.path.join(base, p) for p in live)
-    )
+    table = read_parquet(spark, *txn_log.live_paths(base))
     return (
         table.groupBy("o_orderstatus")
         .agg(

@@ -177,6 +177,23 @@ class TestTxnLogPrimitives:
         # a checkpoint's live set seeds the fold of the suffix
         assert list(txn_log.live_adds(recs[1:], ["a", "z"])) == ["z", "c"]
 
+    def test_live_paths_fold_from_the_latest_checkpoint(self, tmp_path):
+        base = str(tmp_path)
+        log_dir = txn_log.reset(base)
+        for v in range(4):
+            removes = ["f2"] if v == 3 else []
+            txn_log.commit(log_dir, v, {"adds": [f"f{v}"], "removes": removes})
+        # a checkpoint unlike the fold of v0..v1 shows where folds start
+        txn_log.commit(log_dir, 1, {"version": 1, "live": ["ck"]}, "checkpoint")
+
+        def paths(*names):
+            return [os.path.join(base, n) for n in names]
+
+        assert txn_log.live_paths(base, 0) == paths("f0")
+        assert txn_log.live_paths(base, 1) == paths("ck")
+        assert txn_log.live_paths(base, 2) == paths("ck", "f2")
+        assert txn_log.live_paths(base) == paths("ck", "f3")
+
     def test_removing_a_path_that_is_not_live_raises(self):
         recs = [(0, {"adds": ["a"], "removes": []}),
                 (1, {"adds": [], "removes": ["b"]})]
